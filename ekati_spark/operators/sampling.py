@@ -265,10 +265,10 @@ def global_shuffle(
     into ONE window partition. Instead: range-repartition + sort by the
     hash (Spark's distributed sort), count rows per partition (a
     #partitions-row aggregate), broadcast the cumulative offsets, and
-    assign ``pos = offset + local index`` in a single Arrow pass. The
-    sorted frame is persisted so the count job and the assignment job
-    see identical partition boundaries (range sampling is otherwise
-    re-drawn per job; a deployment would checkpoint instead).
+    assign ``pos = offset + local index``. Only the ``prefix_col``
+    (sampled range) path persists its sorted frame to pin boundaries;
+    the default path's buckets are analytic. NULL keys sort first on
+    both paths (positions 1..#nulls).
     """
     h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
     if prefix_col is not None:
@@ -286,12 +286,12 @@ def global_shuffle(
             num_partitions=num_partitions,
         )
     # The sort key IS a uniform hash, so the range boundaries are known
-    # analytically: bucket i covers hash prefixes [i/n, (i+1)/n) of the
-    # 48-bit keyspace. lowercase-hex lexicographic order == numeric
-    # order of the prefix, so the bucket is monotone in the (_h, key)
-    # total order — ordered_row_number's pinned-bucket contract — and
-    # the sampled range exchange, its boundary-sampling job, and the
-    # persist all drop out (round-16 verdict item 6; guide §2.4).
+    # analytically: bucket i covers hash prefixes [i/m, (i+1)/m) of the
+    # 40-bit keyspace (m buckets, below). lowercase-hex lexicographic
+    # order == numeric order of the prefix, so the bucket is monotone
+    # in the (_h, key) total order — ordered_row_number's pinned-bucket
+    # contract — and the sampled range exchange and its boundary job
+    # drop out (round-16 verdict item 6; guide §2.4).
     n = int(
         num_partitions
         or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -299,11 +299,12 @@ def global_shuffle(
     # 64 buckets per partition (guide §2.5: many more distinct bucket
     # values than partitions, so the hash layout stays even), capped so
     # value*m stays in int64 against the 40-bit prefix (10 hex chars);
-    # integer div keeps the mapping exact end-to-end.
+    # integer div keeps the mapping exact end-to-end. A NULL key's hash
+    # is NULL and sorts first, so it goes to bucket 0.
     m = min(64 * n, 1 << 22)
     bucket = F.expr(
-        f"cast(conv(substring(_h, 1, 10), 16, 10) as bigint) * {m}"
-        " div 1099511627776"  # 2^40
+        f"coalesce(cast(conv(substring(_h, 1, 10), 16, 10) as bigint) * {m}"
+        " div 1099511627776, 0)"  # 2^40
     )
     return ordered_row_number(
         df.withColumn("_h", h),
@@ -382,7 +383,9 @@ def ordered_row_number(
         num_partitions
         or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    if bucket_col is not None and neighbor_col is None:
+    if bucket_col is not None and neighbor_col is not None:
+        raise ValueError("bucket_col and neighbor_col cannot be combined")
+    if bucket_col is not None:
         # The pinned bucket needs no range exchange and no boundary
         # sampling pass — one full input pass fewer. Hash-repartition
         # by the bucket BEFORE the persist: hashpartitioning(_pid)

@@ -17,6 +17,7 @@ advice on l127b's store path, generalized to every store site.)
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -24,12 +25,16 @@ import uuid
 def mkscratch(prefix: str) -> str:
     """A fresh scratch directory: ``$EKATI_SCRATCH_ROOT/<prefix><hex>``
     when the shared root is configured, else a local
-    ``tempfile.mkdtemp(prefix=...)``. Callers own cleanup (the cache
-    sites rmtree on eviction; one-shot sites follow the l77/l86 house
-    pattern of leaving the artifact for the session's lifetime)."""
+    ``tempfile.mkdtemp(prefix=...)``. Callers own cleanup (session_store
+    entries dispose with ``rmscratch``; one-shot sites follow the l77/l86
+    house pattern of leaving the artifact for the session's lifetime)."""
     root = os.environ.get("EKATI_SCRATCH_ROOT")
     if not root:
         return tempfile.mkdtemp(prefix=prefix)
     d = os.path.join(root, f"{prefix}{uuid.uuid4().hex}")
     os.makedirs(d, exist_ok=False)
     return d
+
+
+def rmscratch(path: str) -> None:
+    shutil.rmtree(path, ignore_errors=True)

@@ -48,7 +48,7 @@ Endpoints:
                     one self-contained HTML document; see
                     ``ekati_spark.ui``).
 - ``GET /stats``    graph totals (GetStats analog).
-- ``GET /metrics``  executor gauges + stage counters (GetMetrics).
+- ``GET /metrics``  executor gauges + stage + session-store counters.
 - ``GET /plugins``  registered user operators (ListPolicies-shape).
 - ``POST /load``    {"kind": "nt"|"graphml", "path": ...} — bulk load;
                     responds with the row count ingested (the streaming
@@ -155,6 +155,7 @@ class EkatiServer:
                             200, {"stats": _rows(outer.engine.graph.stats())[0]}
                         )
                     elif self.path == "/metrics":
+                        from ekati_spark import session_store
                         from ekati_spark.metrics import (
                             executor_metrics,
                             stage_metrics,
@@ -166,6 +167,7 @@ class EkatiServer:
                             {
                                 "executors": _rows(executor_metrics(spark)),
                                 "stages": _rows(stage_metrics(spark)),
+                                "stores": session_store.stats(),
                             },
                         )
                     elif self.path == "/plugins":

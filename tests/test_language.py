@@ -355,16 +355,16 @@ def test_graph_cache_evicts_on_new_sf_dir(spark, sf_dir):
     """The per-(session, sf_dir) FK-graph cache is bounded: pointing the
     same session at a new sf_dir unpersists and evicts the old graph
     (round-3 ADVICE: unbounded persist = slow leak in a long service)."""
-    from ekati_spark.catalog import session_key
-    from ekati_spark.queries.graph import _graph, _graph_cache
+    from ekati_spark import session_store
+    from ekati_spark.queries.graph import _graph
 
     g1 = _graph(spark, sf_dir)
     assert g1.edges.is_cached
     g2 = _graph(spark, "/root/testdata/sf0.01")
-    sk = session_key(spark)
-    assert [k for k in _graph_cache if k[0] == sk] == [
-        (sk, "/root/testdata/sf0.01")
-    ]
+    # the session's one fk_graph entry is now sf0.01's: a warm hit
+    misses = session_store.stats()["fk_graph"]["misses"]
+    assert _graph(spark, "/root/testdata/sf0.01") is g2
+    assert session_store.stats()["fk_graph"]["misses"] == misses
     assert not g1.edges.is_cached
     assert g2.edges.is_cached
     # leave the suite's usual graph warm for whoever runs next

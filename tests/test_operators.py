@@ -1136,19 +1136,24 @@ def test_l127b_store_cache_warm_serve_and_eviction(spark, sf_dir):
     sf_dir evicts AND removes the previous store directory (no tempdir
     accretion — the round-14 advice)."""
     import os
-    import shutil
 
     import ekati_spark.queries as Q
-    from ekati_spark.queries.llm import _l127b_store, _l127b_store_cache
+    from ekati_spark import session_store
+    from ekati_spark.queries.llm import _l127b_store
+
+    def misses():
+        return session_store.stats()["l127b_postings"]["misses"]
 
     fn = Q.REGISTRY["l127b_hybrid_rrf_indexed"].fn
     cold = sorted(map(tuple, fn(spark, sf_dir).collect()))
     p1 = _l127b_store(spark, sf_dir)
     assert os.path.exists(f"{p1}/postings")
+    built = misses()
     # warm: same store path, no rebuild, identical result
     assert _l127b_store(spark, sf_dir) == p1
     warm = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert warm == cold
+    assert misses() == built
     # eviction: a new sf_dir for the same session removes the old store
     other = "/root/testdata/sf0.01"
     p2 = _l127b_store(spark, other)
@@ -1157,9 +1162,8 @@ def test_l127b_store_cache_warm_serve_and_eviction(spark, sf_dir):
         assert not os.path.exists(p1)
         assert os.path.exists(f"{p2}/postings")
     finally:
-        for k in [k for k, v in _l127b_store_cache.items() if v == p2]:
-            _l127b_store_cache.pop(k)
-        shutil.rmtree(p2, ignore_errors=True)
+        session_store.evict(spark, "l127b_postings")
+    assert not os.path.exists(p2)
 
 
 def test_l128_mmr_semantics(spark, sf_dir):

@@ -142,6 +142,36 @@ def test_global_shuffle_bucket_path_matches_window_reference(spark):
         assert got == ref, f"num_partitions={n}"
 
 
+def test_global_shuffle_null_keys_match_range_path(spark):
+    """NULL keys hash to NULL: the analytic-bucket path keeps those rows
+    and gives them the same positions as the sampled range path (first,
+    1..#nulls), so both paths assign identical (key, pos)."""
+    rows = [(None,)] * 7 + [(i,) for i in range(500)]
+    df = spark.createDataFrame(rows, "k long")
+    # prefix_col="" leaves the hash order as is but takes the range path
+    ranged = S.global_shuffle(df, "k", num_partitions=8, prefix_col=F.lit(""))
+    bucketed = S.global_shuffle(df, "k", num_partitions=8)
+
+    def key_pos(out):
+        return sorted(
+            ((r.k, r.pos) for r in out.collect()),
+            key=lambda kp: (kp[0] is not None, kp[0] or 0, kp[1]),
+        )
+
+    got = key_pos(bucketed)
+    assert got == key_pos(ranged)
+    assert sorted(p for _, p in got) == list(range(1, 508))
+    assert {p for k, p in got if k is None} == set(range(1, 8))
+
+
+def test_ordered_row_number_rejects_bucket_with_neighbor(spark):
+    df = spark.createDataFrame([(i,) for i in range(10)], "k long")
+    with pytest.raises(ValueError, match="bucket_col and neighbor_col"):
+        S.ordered_row_number(
+            df, ["k"], neighbor_col="k", bucket_col=F.col("k") % 2
+        )
+
+
 def test_leakage_safe_split_is_group_atomic(spark, sf_dir):
     """Exact-duplicate documents always land in the same split (the
     leakage guarantee l22's per-doc split does not give)."""

@@ -56,13 +56,21 @@ def test_query_get_and_put(served):
     assert code == 200 and out["n"] >= 1
 
 
-def test_stats_metrics_plugins(served):
+def test_stats_metrics_plugins(served, sf_dir):
     stats = _get(served, "/stats")["stats"]
     assert stats["n_nodes"] >= 2 and stats["n_edges"] >= 1
 
+    from ekati_spark.catalog import load_table
+
+    spark = served.engine.spark
+    load_table(spark, sf_dir, "region")
+    load_table(spark, sf_dir, "region")  # a hit
     m = _get(served, "/metrics")
     assert len(m["executors"]) >= 1
     assert any(s["num_complete_tasks"] > 0 for s in m["stages"])
+    table = m["stores"]["table"]
+    assert table["hits"] >= 1 and table["misses"] >= 1
+    assert table["build_s"] > 0
 
     from ekati_spark.plugins import PLUGINS, register_plugin
 

@@ -1019,8 +1019,7 @@ def test_l133_graph_serve_recall_and_store(spark):
     the k=8/rounds=2 store graph — floor pinned with margin), rank is
     dense 1..5 per query, and the per-(session, sf_dir) store is built
     once (second call returns the cached path)."""
-    import shutil
-
+    from ekati_spark import session_store
     from ekati_spark.queries import REGISTRY, llm as L
 
     sf = "/root/testdata/sf0.001"
@@ -1039,8 +1038,7 @@ def test_l133_graph_serve_recall_and_store(spark):
         base2 = L._l133_store(spark, sf)
         assert base1 == base2
     finally:
-        for k in list(L._l133_store_cache):
-            shutil.rmtree(L._l133_store_cache.pop(k), ignore_errors=True)
+        session_store.evict(spark, "l133_graph")
 
 
 def test_knn_graph_delete_consolidate_planted(spark):
@@ -1156,8 +1154,7 @@ def test_l136_routed_serve_external_query_contract(spark):
     and the greedy-routed 2-hop overlap@5 with the exact top-5 is
     above the random-candidate chance floor (~2.5% at sf0.001). The
     upper-layer store is built once per (session, sf_dir)."""
-    import shutil
-
+    from ekati_spark import session_store
     from ekati_spark.queries import REGISTRY, llm as L
 
     sf = "/root/testdata/sf0.001"
@@ -1176,7 +1173,5 @@ def test_l136_routed_serve_external_query_contract(spark):
         base2 = L._l136_store(spark, sf)
         assert base1 == base2
     finally:
-        for k in list(L._graph_edge_store_cache):
-            shutil.rmtree(
-                L._graph_edge_store_cache.pop(k), ignore_errors=True
-            )
+        for slot in ("l134_graph", "l135_graph", "l136_l1"):
+            session_store.evict(spark, slot)
