@@ -17,10 +17,12 @@ here use the canonical node_id ordering (SURVEY §5d).
 
 from __future__ import annotations
 
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ekati_spark.checkpoint import cut_lineage
 from ekati_spark.driverside import local_rows_df
 from ekati_spark.graph import ir
 from ekati_spark.graph.model import PropertyGraph
@@ -50,6 +52,10 @@ class QueryEngine:
         # ingest-progress sink for URL loads (reference: the >=1 s
         # progress responses the server streams back); None = silent
         self.on_progress = on_progress
+        # put and load replace self.graph by read-modify-write; two
+        # unguarded writers would both extend the same old graph and
+        # one write would be lost
+        self._write_lock = threading.Lock()
 
     # -- public API -------------------------------------------------------
 
@@ -101,65 +107,81 @@ class QueryEngine:
                         )
                     )
         new = self.spark.createDataFrame(rows, PROPS_SCHEMA)
-        self.graph = PropertyGraph(self.graph.props.unionByName(new))
+        with self._write_lock:
+            self.graph = PropertyGraph(self.graph.props.unionByName(new))
         return new
 
     # -- get --------------------------------------------------------------
 
     def run_get(self, q: ir.GetQuery) -> DataFrame:
+        fields_steps = [s for s in q.steps if isinstance(s, ir.FieldsStep)]
+        exact = not any(s.iri == "*" for s in q.seeds)
+        if exact and len(fields_steps) == len(q.steps):
+            # Step-free get (exact ids, only `fields` steps): the result
+            # nodes ARE the seeds, so a literal predicate the scan pushes
+            # down replaces the universe distinct, the seed semi-join and
+            # the lineage cut — the frame builds with no Spark job. Steps
+            # that change the stream keep the path below: skip/take must
+            # not count a seed that does not exist.
+            return self._materialize(
+                self._seed_props(q.seeds), self._seed_pred(q.seeds),
+                fields_steps, q.history,
+            )
         stream = self._seed_stream(q.seeds)
         for step in q.steps:
             stream = self._apply_wo_fields(stream, step)
-        fields_steps = [s for s in q.steps if isinstance(s, ir.FieldsStep)]
-        # Bucketed point lookup: when the result set provably stays
-        # inside the seed set (exact iris, no expanding step), the
-        # attribute fetch itself reads only the seeds' bucket
-        # partitions — `get "<id>"` then touches 1/n_buckets of the
-        # store end-to-end (FileStore.fs:281-298 parity; plan-asserted
-        # in tests). Expanding steps (follow/transform) fall back to
-        # the full props view.
-        mat_graph = self.graph
+        # When the result set provably stays inside the seed set (exact
+        # iris, no expanding step), the attribute fetch reads only the
+        # seeds' bucket partitions. Expanding steps (follow/transform)
+        # fall back to the full props view.
         expanding = any(
             isinstance(s, (ir.FollowStep, ir.TransformStep)) for s in q.steps
         )
-        exact = not any(s.iri == "*" for s in q.seeds)
-        if exact and not expanding and self.graph.bucket_info is not None:
-            from ekati_spark.graph.storage import bucket_of
-
-            path, n = self.graph.bucket_info
-            bks = sorted({bucket_of(s.iri, n) for s in q.seeds})
-            mat_graph = PropertyGraph(
-                self.spark.read.parquet(path)
-                .filter(F.col("bucket").isin(bks))
-                .drop("bucket")
-            )
-        return self._materialize(
-            stream, fields_steps, history=q.history, graph=mat_graph
+        props = (
+            self._seed_props(q.seeds)
+            if exact and not expanding
+            else self.graph.props
         )
+        return self._materialize(props, stream, fields_steps, q.history)
+
+    def _seed_props(self, seeds) -> DataFrame:
+        """The props rows that can hold the exact-id ``seeds``. On a
+        bucketed layout each seed's bucket literal is bound driver-side,
+        so planning prunes every other partition directory
+        (PartitionFilters) — the reference's one-partition index probe,
+        FileStore.fs:281-298. In memory: all props."""
+        if self.graph.bucket_info is None:
+            return self.graph.props
+        from ekati_spark.graph.storage import bucket_of
+
+        layout, n = self.graph.bucket_info
+        bks = sorted({bucket_of(s.iri, n) for s in seeds})
+        return layout.filter(F.col("bucket").isin(bks)).drop("bucket")
+
+    @staticmethod
+    def _seed_pred(seeds) -> F.Column:
+        """Row predicate for exactly the exact-id ``seeds``, with the
+        equality semantics of a join on (node_id, remote): ``node_id IN
+        (ids)`` pushes into the parquet scan, the (iri, remote) pairs
+        keep one iri on two remotes apart."""
+        keys = dict.fromkeys((s.iri, s.remote) for s in seeds)
+        ids = list(dict.fromkeys(iri for iri, _ in keys))
+        pairs = None
+        for iri, remote in keys:
+            p = (F.col("node_id") == iri) & (F.col("remote") == remote)
+            pairs = p if pairs is None else pairs | p
+        return F.col("node_id").isin(ids) & pairs
 
     def _seed_stream(self, seeds) -> DataFrame:
         """Node stream = (node_id, remote) pairs — logical identity is
         (remote, iri) (MemoryPointer.partial.cs:234-245), so the same iri
         on two remotes is two nodes."""
-        universe = self.graph.props.select("node_id", "remote").distinct()
         if any(s.iri == "*" for s in seeds):
             # full scan (FileStore.fs:300-315)
-            return universe
-        if self.graph.bucket_info is not None:
-            # bucketed on-disk layout: bind each seed's bucket literal
-            # driver-side so only 1/n_buckets of the partition dirs are
-            # planned into the scan (PartitionFilters) — the reference's
-            # one-partition index probe, FileStore.fs:281-298
-            from ekati_spark.graph.storage import bucket_of
-
-            path, n = self.graph.bucket_info
-            bks = sorted({bucket_of(s.iri, n) for s in seeds})
-            universe = (
-                self.spark.read.parquet(path)
-                .filter(F.col("bucket").isin(bks))
-                .select("node_id", "remote")
-                .distinct()
-            )
+            return self.graph.props.select("node_id", "remote").distinct()
+        universe = (
+            self._seed_props(seeds).select("node_id", "remote").distinct()
+        )
         seed_df = local_rows_df(
             self.spark,
             [(s.iri, s.remote) for s in seeds],
@@ -290,26 +312,28 @@ class QueryEngine:
         raise ValueError(f"bad cludepart {part!r}")
 
     def _materialize(
-        self, stream: DataFrame, fields_steps, history: bool,
-        graph: "PropertyGraph | None" = None,
+        self, props: DataFrame, nodes, fields_steps, history: bool
     ) -> DataFrame:
-        graph = graph if graph is not None else self.graph
+        """Attribute rows of the result nodes among ``props``. ``nodes``
+        is a node stream (DataFrame of node_id, remote) or, for a
+        step-free get, a row predicate on ``props``."""
         # Prune BEFORE the latest-wins window: the dedup partitions by
-        # (node_id, key), so semi-joining the result-node stream first
-        # commutes with it — and the window then runs over only the
-        # result nodes' rows instead of the whole store (the reference
-        # merges fragments per looked-up node, never store-wide;
+        # (node_id, key), so pruning to the result nodes first commutes
+        # with it — and the window then runs over only the result nodes'
+        # rows instead of the whole store (the reference merges
+        # fragments per looked-up node, never store-wide;
         # NodeAttrIndex.cs:96-105). Catalyst cannot push a semi-join
         # below a window on its own.
-        from ekati_spark.checkpoint import cut_lineage
-        from ekati_spark.graph.model import PropertyGraph as _PG
-
-        # result-node-id sized; materialized so the traversal subtree
-        # is not re-planned into the window input
-        stream = stream.transform(cut_lineage)
-        pruned = _PG(
-            graph.props.join(stream, ["node_id", "remote"], "left_semi")
-        )
+        if isinstance(nodes, DataFrame):
+            # only stream-changing steps get here: the stream is
+            # result-node-id sized and materialized so the traversal
+            # subtree is not re-planned into the window input
+            props = props.join(
+                nodes.transform(cut_lineage), ["node_id", "remote"], "left_semi"
+            )
+        else:
+            props = props.filter(nodes)
+        pruned = PropertyGraph(props)
         props = pruned.history() if history else pruned.latest()
         for fs in fields_steps:
             pred = self._clude_pred(fs.cludes)
@@ -356,8 +380,9 @@ class QueryEngine:
         # so rebuilding from the props union alone would silently drop
         # them. Deriving the new edges from the new props only keeps the
         # put-shape invariant (edges == ref-rows of props) intact too.
-        self.graph = PropertyGraph(
-            self.graph.props.unionByName(new),
-            self.graph.edges.unionByName(PropertyGraph(new).edges),
-        )
+        with self._write_lock:
+            self.graph = PropertyGraph(
+                self.graph.props.unionByName(new),
+                self.graph.edges.unionByName(PropertyGraph(new).edges),
+            )
         return new

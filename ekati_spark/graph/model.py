@@ -35,9 +35,11 @@ from ekati_spark.schemas import PROPS_SCHEMA
 class PropertyGraph:
     def __init__(self, props: DataFrame, edges: DataFrame | None = None):
         self.props = props
-        # set by from_bucketed: (path, n_buckets) — lets the compiler
-        # serve exact-id point lookups from the pruned on-disk layout
-        self.bucket_info: tuple[str, int] | None = None
+        # set by from_bucketed: (layout_df, n_buckets), layout_df being
+        # the opened layout WITH its bucket column — the compiler derives
+        # bucket-pruned reads from it (`.filter(bucket.isin(...))`), so a
+        # get never re-reads the path or re-infers its schema
+        self.bucket_info: tuple[DataFrame, int] | None = None
         if edges is None:
             edges = props.filter(F.col("dtype") == "ref").select(
                 F.col("node_id").alias("src"),
@@ -50,18 +52,21 @@ class PropertyGraph:
     @classmethod
     def from_bucketed(cls, spark: SparkSession, path: str) -> "PropertyGraph":
         """Open a graph persisted by ``graph.storage.write_bucketed_props``.
-        Full scans read everything as usual; exact-id point lookups
-        (`get "<id>"`) are served by the compiler with the bucket
-        literal bound driver-side, so planning prunes every other
-        partition directory — the reference's murmur3 partition routing
-        (FileStore.fs:281-298) as parquet layout."""
-        from ekati_spark.graph.storage import (
-            read_bucket_count,
-            read_bucketed_props,
-        )
+        The layout is read once, here: full scans read everything as
+        usual; exact-id gets (`get "<id>"`) are served by the compiler
+        from the opened frame with the bucket literal bound driver-side,
+        so planning prunes every other partition directory — the
+        reference's murmur3 partition routing (FileStore.fs:281-298) as
+        parquet layout.
 
-        g = cls(read_bucketed_props(spark, path))
-        g.bucket_info = (path, read_bucket_count(path))
+        An opened layout is immutable: its file listing and schema are
+        fixed at open time (the full-scan view always relied on this).
+        Reopen the path after rewriting it."""
+        from ekati_spark.graph.storage import read_bucket_count
+
+        layout = spark.read.parquet(path)
+        g = cls(layout.drop("bucket"))
+        g.bucket_info = (layout, read_bucket_count(path))
         return g
 
     # -- views ------------------------------------------------------------

@@ -81,22 +81,6 @@ def read_bucketed_props(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path).drop("bucket")
 
 
-def point_lookup(
-    spark: SparkSession, path: str, node_id: str
-) -> DataFrame:
-    """`get "<id>"` against a bucketed layout: bind the bucket literal
-    driver-side so planning prunes every other partition directory
-    (PartitionFilters), then push ``node_id = id`` into the scan
-    (PushedFilters). The reference's one-partition index probe,
-    FileStore.fs:281-298."""
-    b = bucket_of(node_id, read_bucket_count(path))
-    return (
-        spark.read.parquet(path)
-        .filter((F.col("bucket") == b) & (F.col("node_id") == node_id))
-        .drop("bucket")
-    )
-
-
 def write_bucketed_edges(
     edges: DataFrame, path: str, n_buckets: int = 64
 ) -> None:
@@ -132,9 +116,13 @@ def bucketed_edge_source(
     hop instead of scanning E three times. Cost: one tiny aggregate
     job per hop (over the already-checkpointed frontier).
 
+    The layout is opened once, here, so a hop plans its pruned scan
+    without re-reading the path or re-inferring the schema.
+
     Pass ``stats`` to receive ``{hop: sorted bucket list}`` telemetry —
     the bench derives files-scanned counts from it."""
     n = read_bucket_count(path)
+    layout = spark.read.parquet(path)
 
     def edges_for_hop(frontier: DataFrame, hop: int) -> DataFrame:
         buckets = sorted(
@@ -147,10 +135,6 @@ def bucketed_edge_source(
         )
         if stats is not None:
             stats[hop] = buckets
-        return (
-            spark.read.parquet(path)
-            .filter(F.col("bucket").isin(buckets))
-            .drop("bucket")
-        )
+        return layout.filter(F.col("bucket").isin(buckets)).drop("bucket")
 
     return edges_for_hop

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import os
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -8,6 +10,10 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from ekati_spark.session import get_spark  # noqa: E402
+
+# The program's 32g default driver heap lets the suite's JVM grow past
+# the physical memory of a 16 GB machine; 8g holds the whole suite.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -21,3 +27,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture()
+def job_ids(spark):
+    """``job_ids(fn)`` -> (fn(), ids of the Spark jobs it fired):
+    attributed by job group, read once the listener bus has delivered
+    every job event to the status store."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"job-ids-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

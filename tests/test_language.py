@@ -166,6 +166,39 @@ def test_history_vs_latest(engine):
     assert [r.str for r in hist] == ["a", "b"]
 
 
+def test_concurrent_puts_are_not_lost(engine):
+    """Each put replaces the engine's graph by read-modify-write; with
+    many writers at once no put may overwrite another's."""
+    import sys
+    import threading
+
+    n_threads = 8
+    errors = []
+
+    def put(i):
+        try:
+            engine.execute(f'put "w{i:02d}" {{"v": {i}}}')
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=put, args=(i,)) for i in range(n_threads)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    got = {r.node_id for r in engine.execute('get "*"').collect()}
+    assert got == {f"w{i:02d}" for i in range(n_threads)}
+
+
 # -- golden GraphML (TheCrew / TinkerPop modern) ----------------------------
 
 

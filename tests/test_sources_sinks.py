@@ -389,15 +389,17 @@ def test_parse_nt_line_never_raises_on_hostile_literals():
 
 
 def test_bucketed_props_point_lookup_prunes_partitions(spark, tmp_path):
-    """Bucketed graph layout (graph/storage.py): `get "<id>"` must plan
-    a PartitionFilters entry on the bucket column (only 1/n_buckets of
-    the directories opened — the reference's murmur3 partition routing,
+    """Bucketed graph layout (graph/storage.py): `get "<id>"` through
+    QueryEngine over ``from_bucketed`` must plan a PartitionFilters
+    entry on the bucket column (only 1/n_buckets of the directories
+    opened — the reference's murmur3 partition routing,
     FileStore.fs:281-298) plus a pushed node_id filter, and return
     exactly the node's rows."""
+    from ekati_spark.graph.compiler import QueryEngine
+    from ekati_spark.graph.model import PropertyGraph
     from ekati_spark.graph.storage import (
         bucket_expr,
         bucket_of,
-        point_lookup,
         read_bucketed_props,
         write_bucketed_props,
     )
@@ -422,7 +424,8 @@ def test_bucketed_props_point_lookup_prunes_partitions(spark, tmp_path):
     back = read_bucketed_props(spark, path)
     assert back.count() == 200
 
-    out = point_lookup(spark, path, "n137")
+    engine = QueryEngine(spark, graph=PropertyGraph.from_bucketed(spark, path))
+    out = engine.execute('get "n137"')
     got = out.collect()
     assert len(got) == 1 and got[0].node_id == "n137" and got[0].i64 == 137
 
@@ -434,10 +437,12 @@ def test_bucketed_props_point_lookup_prunes_partitions(spark, tmp_path):
     )[1][:200]
 
 
-def test_query_engine_point_lookup_on_bucketed_graph(spark, tmp_path):
+def test_query_engine_point_lookup_on_bucketed_graph(spark, tmp_path, job_ids):
     """End-to-end DSL point lookup on a bucketed on-disk graph:
-    `get "<id>"` through QueryEngine must plan a bucket PartitionFilter
-    (no full scan) and return the node's attributes."""
+    `get "<id>"` through QueryEngine builds with no Spark job, collects
+    with at most 2, plans a bucket PartitionFilter (no full scan) and a
+    pushed node_id filter with no lineage-cut checkpoint scan, and
+    returns the node's attributes."""
     from ekati_spark.graph.compiler import QueryEngine
     from ekati_spark.graph.model import PropertyGraph
     from ekati_spark.graph.storage import write_bucketed_props
@@ -454,16 +459,21 @@ def test_query_engine_point_lookup_on_bucketed_graph(spark, tmp_path):
 
     g = PropertyGraph.from_bucketed(spark, path)
     engine = QueryEngine(spark, graph=g)
-    out = engine.execute('get "n42"')
-    got = out.collect()
+    out, build_jobs = job_ids(lambda: engine.execute('get "n42"'))
+    assert build_jobs == []
+    got, action_jobs = job_ids(out.collect)
+    assert len(action_jobs) <= 2, action_jobs
     assert {r.node_id for r in got} == {"n42"}
 
     plan = out._jdf.queryExecution().executedPlan().toString()
     pf = plan[plan.find("PartitionFilters"):][:200]
     assert "PartitionFilters: [" in plan and "bucket" in pf, pf
+    pushed = plan[plan.find("PushedFilters"):][:300]
+    assert "In(node_id" in pushed or "EqualTo(node_id" in pushed, pushed
+    assert "ExistingRDD" not in plan, plan
 
 
-def test_bucketed_follow_matches_flat_and_prunes(spark, sf_dir):
+def test_bucketed_follow_matches_flat_and_prunes(spark, sf_dir, job_ids):
     """A traversal over the bucketed edge layout must return exactly the
     flat follow's results for all three bench specs (named single-hop,
     Or of labels, any-edge range incl. hop 0), while each hop's scan
@@ -471,6 +481,7 @@ def test_bucketed_follow_matches_flat_and_prunes(spark, sf_dir):
     reference's per-hop remote partition lookup (FileStore.fs:281-298)
     as parquet partition pruning."""
     from ekati_spark.graph.storage import (
+        bucket_expr,
         bucketed_edge_source,
         write_bucketed_edges,
     )
@@ -499,9 +510,17 @@ def test_bucketed_follow_matches_flat_and_prunes(spark, sf_dir):
             0 < len(b) <= 16 for b in stats.values()
         ), stats
 
-    # pruning is visible in the plan of a single bound hop
+    # pruning is visible in the plan of a single bound hop, and binding
+    # the hop fires only the frontier's distinct-buckets collect: the
+    # layout was opened once, before the hop, so no schema job
     src = bucketed_edge_source(spark, path)
-    hop_edges = src(seeds, 1)
+    hop_edges, hop_jobs = job_ids(lambda: src(seeds, 1))
+    _, collect_jobs = job_ids(
+        seeds.select(bucket_expr(F.col("node_id"), 16).alias("b"))
+        .distinct()
+        .collect
+    )
+    assert len(hop_jobs) == len(collect_jobs), (hop_jobs, collect_jobs)
     plan = hop_edges._jdf.queryExecution().executedPlan().toString()
     pf = plan[plan.find("PartitionFilters"):][:250]
     assert "PartitionFilters: [" in plan and "bucket" in pf, pf
