@@ -3,26 +3,26 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
-Each query is executed to completion (count) THREE times after a session
-warm-up and reports the MEDIAN wall-clock (round-3 verdict: single-run
-timings left three sub-2s entries unexplainably 1.5-2x noisier across
-rounds; machine-load variance can double a single wall-clock). The set
-spans every operator family: scan-agg, multi-join, window, as-of,
-traversal, dedup (exact + MinHash-LSH + SimHash + transitive group
-resolution), similarity top-k, text stats, repetition quality filters,
-sequence packing, real PNG decode, real WAV audio decode,
-streaming-shaped windows, PPS
-weighted sampling, BPE pair counting, bitext margin mining,
-incremental MV maintenance, hashed-classifier quality scoring, DSIR
-importance weighting, the peak-concurrency interval sweep, the GK
-quantile-sketch path, Misra-Gries heavy hitters, fixed-point HITS,
-and multi-source-BFS sampled centrality.
+One protocol at every scale factor. After the session warm-up
+(``warm_up``), the whole HEADLINE set runs one UNTIMED pass, so each
+query's first-run codegen and plan-compile cost lands outside the
+record. Then three INTERLEAVED passes run the set round-robin, each
+query executed to completion (``count``), and every entry reports the
+MEDIAN of its three wall-clocks. Interleaving puts a transient
+machine-load spike or late-session JVM aging on every query of a pass,
+not on one query's whole sample, so no entry's number depends on where
+in the run it sits. Every entry's run list goes to the detail sidecar
+(``BENCH_DETAIL.json``).
 
-Round-over-round note (r3 -> r4): the r3 verdict flagged three sub-2s
-entries as unexplained regressions vs r1 (r03 1.54s, r53 0.92s, l32
-1.95s). Medianizing resolved all three as first-run/ordering noise:
-r03 0.30s, r53 0.23s, l32 0.55s at the same sf. Single-run timing was
-the artifact, not the plans.
+The set spans every operator family: scan-agg, multi-join, window,
+as-of, traversal, dedup (exact + MinHash-LSH + SimHash + transitive
+group resolution), similarity top-k, text stats, repetition quality
+filters, sequence packing, real PNG decode, real WAV audio decode,
+streaming-shaped windows, PPS weighted sampling, BPE pair counting,
+bitext margin mining, incremental MV maintenance, hashed-classifier
+quality scoring, DSIR importance weighting, the peak-concurrency
+interval sweep, the GK quantile-sketch path, Misra-Gries heavy
+hitters, fixed-point HITS, and multi-source-BFS sampled centrality.
 """
 
 from __future__ import annotations
@@ -166,34 +166,17 @@ HEADLINE = [
 ]
 
 
-# Entries with documented run-to-run spread run INTERLEAVED
-# median-of-5 (round-robin passes, so a transient machine-load spike
-# lands on all of them, not on one query's whole sample) and the
-# per-entry run lists go to the detail sidecar — round deltas stop
-# needing prose explanations. Value = smallest sf at which the
-# treatment applies: l05/l32 spread shows at the synthetic sf1 (r10
-# record: 13.8-25.3s, 1.0-3.8s); l71/g43/l94/l101 spread shows already
-# at sf0.1 (SCALE.md r11: l71 2.41/4.06/2.54s, g43 8.24/10.02/8.40s;
-# the r11 verdict traced all four >1.3x round deltas to box noise).
-NOISY = {
-    "l05_embedding_dup_pairs": 1.0,
-    "l32_global_shuffle": 1.0,
-    "l71_dedup_threshold_sweep": 0.1,
-    "g43_neighborhood_function": 0.1,
-    "l94_bloom_decontaminate": 0.1,
-    "l101_winnow_fingerprint_pairs": 0.1,
-    # r12: in-context runs of [1.698, 5.562, 6.771] vs isolated
-    # steady-state ~1.5s — late-session JVM/GC aging lands on whichever
-    # query is in flight; interleaving spreads it
-    "l97_bpe_encode": 0.1,
-    # r16: same aging treatment — their first in-context run carries a
-    # 3-9s codegen/plan-compile spike over a ~1.5s steady state
-    # (r16 measured l05b [8.995, 1.612, 1.624], l45b [5.974, ...]),
-    # so a sequential median-of-3 eats one spike; round-robin passes
-    # spread it like the other seven entries
-    "l05b_dup_pairs_ann": 0.1,
-    "l45b_bitext_margin_ann": 0.1,
-}
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM/codegen path once, so per-query times measure the
+    plan, not session startup, and materialize the FK edge table once
+    (persisted; a deployment keeps its edge table as a bucketed
+    parquet/Delta table, not a per-query re-derivation), so traversal
+    timings measure traversal."""
+    import ekati_spark.queries as Q
+    from ekati_spark.queries.graph import _graph
+
+    Q.REGISTRY["r01_scan_count"].fn(spark, sf_dir).collect()
+    _graph(spark, sf_dir).edges.count()
 
 
 def main() -> None:
@@ -213,84 +196,27 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from ekati_spark.session import get_spark
     import ekati_spark.queries as Q
-
-    spark = get_spark("ekati_bench")
-    # Warm the JVM/codegen path once so per-query times measure the plan,
-    # not session startup.
-    Q.REGISTRY["r01_scan_count"].fn(spark, sf_dir).collect()
-    # Materialize the FK edge table once (persisted; a deployment keeps
-    # its edge table as a bucketed parquet/Delta table, not a per-query
-    # re-derivation) so traversal timings measure traversal.
     from ekati_spark.queries.graph import _graph
 
-    _graph(spark, sf_dir).edges.count()
+    spark = get_spark("ekati_bench")
+    warm_up(spark, sf_dir)
 
     times: dict[str, float] = {}
-    if sf is not None and sf >= 1:
-        # At the generated sf1 the whole set runs one UNTIMED warm-up
-        # pass (per-query codegen/compile cost lands there, keeping
-        # the record steady-state like the sequential-median protocol
-        # it replaced) then INTERLEAVED median-of-3 (round-robin
-        # passes, so a transient machine-load spike lands across
-        # queries, not on one query's whole sample); every per-entry
-        # run list goes to the detail sidecar: the r12 sf1 record was
-        # a single cycle and seven round-over-round deltas needed
-        # prose spot-checks — with run lists committed, deltas explain
-        # themselves.
-        noisy_runs = {n: [] for n in HEADLINE}
+    query_runs: dict[str, list] = {n: [] for n in HEADLINE}
+    for name in HEADLINE:  # untimed pass
+        Q.REGISTRY[name].fn(spark, sf_dir).count()
+    for _ in range(3):
         for name in HEADLINE:
+            t0 = time.perf_counter()
             Q.REGISTRY[name].fn(spark, sf_dir).count()
-        for _ in range(3):
-            for name in HEADLINE:
-                t0 = time.perf_counter()
-                Q.REGISTRY[name].fn(spark, sf_dir).count()
-                noisy_runs[name].append(
-                    round(time.perf_counter() - t0, 3)
-                )
-        for name in HEADLINE:
-            times[name] = sorted(noisy_runs[name])[1]
-            print(
-                f"# {name}: interleaved median {times[name]:.3f}s of "
-                f"{noisy_runs[name]}",
-                file=sys.stderr,
-            )
-    else:
-        deferred = [
-            n
-            for n in HEADLINE
-            if sf is not None and sf >= NOISY.get(n, float("inf"))
-        ]
-        for name in HEADLINE:
-            if name in deferred:
-                continue
-            fn = Q.REGISTRY[name].fn
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                n = df.count()
-                runs.append(time.perf_counter() - t0)
-            times[name] = round(sorted(runs)[1], 3)
-            print(
-                f"# {name}: median {times[name]:.3f}s of "
-                f"{[round(r, 3) for r in runs]} ({n} rows)",
-                file=sys.stderr,
-            )
-        noisy_runs = {n: [] for n in deferred}
-        for _ in range(5):  # interleaved passes (see NOISY)
-            for name in deferred:
-                t0 = time.perf_counter()
-                Q.REGISTRY[name].fn(spark, sf_dir).count()
-                noisy_runs[name].append(
-                    round(time.perf_counter() - t0, 3)
-                )
-        for name in deferred:
-            times[name] = sorted(noisy_runs[name])[2]
-            print(
-                f"# {name}: interleaved median {times[name]:.3f}s of "
-                f"{noisy_runs[name]}",
-                file=sys.stderr,
-            )
+            query_runs[name].append(round(time.perf_counter() - t0, 3))
+    for name in HEADLINE:
+        times[name] = sorted(query_runs[name])[1]
+        print(
+            f"# {name}: interleaved median {times[name]:.3f}s of "
+            f"{query_runs[name]}",
+            file=sys.stderr,
+        )
 
     # bucketed-layout traversal variant — the same three follow specs
     # the g01/g02/g03 headliners run, over (a) a flat parquet edge
@@ -461,14 +387,11 @@ def main() -> None:
     # scale: bounded memory, changelog checkpointing). Tracking
     # both makes the RocksDB tax a measured number, not folklore.
     #
-    # The four (query, backend) combos run INTERLEAVED round-robin
-    # (round-16 verdict item 10): stream_tumbling_agg swung 0.67x on
-    # the driver two rounds running with ZERO code change — the
-    # sequential median-of-3 let one box-load window land on a single
-    # entry's whole sample, exactly what the NOISY interleave already
-    # fixes for the batch entries. Same run count, same median, same
-    # per-run conf; only the ORDER changed (pass-major instead of
-    # query-major).
+    # The four (query, backend) combos run INTERLEAVED round-robin,
+    # like the headline passes: a query-major median-of-3 let one
+    # box-load window land on a single entry's whole sample
+    # (stream_tumbling_agg swung 0.67x two rounds running with no
+    # code change).
     _ROCKS = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
@@ -575,8 +498,7 @@ def main() -> None:
     }
     if gen is not None:
         detail["gen"] = gen
-    if noisy_runs:
-        detail["noisy_runs"] = noisy_runs
+    detail["runs"] = query_runs
     detail["stream_runs"] = {
         k: [round(x, 3) for x in v] for k, v in stream_runs.items()
     }

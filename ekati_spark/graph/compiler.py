@@ -52,8 +52,8 @@ class QueryEngine:
         # ingest-progress sink for URL loads (reference: the >=1 s
         # progress responses the server streams back); None = silent
         self.on_progress = on_progress
-        # put and load replace self.graph by read-modify-write; two
-        # unguarded writers would both extend the same old graph and
+        # put and load replace self.graph by read-modify-write (_append);
+        # two unguarded writers would both extend the same old graph and
         # one write would be lost
         self._write_lock = threading.Lock()
 
@@ -106,9 +106,20 @@ class QueryEngine:
                             meta_type=meta,
                         )
                     )
-        new = self.spark.createDataFrame(rows, PROPS_SCHEMA)
+        return self._append(self.spark.createDataFrame(rows, PROPS_SCHEMA))
+
+    def _append(self, new: DataFrame) -> DataFrame:
+        """Add prop rows to the graph; returns them. Edges are unioned
+        explicitly: a from_relational graph holds its FK edges in a
+        SEPARATE frame (they are not dtype='ref' prop rows), so
+        rebuilding from the props union alone would silently drop them.
+        Deriving the new edges from the new props only keeps the
+        put-shape invariant (edges == ref-rows of props) intact too."""
         with self._write_lock:
-            self.graph = PropertyGraph(self.graph.props.unionByName(new))
+            self.graph = PropertyGraph(
+                self.graph.props.unionByName(new),
+                self.graph.edges.unionByName(PropertyGraph(new).edges),
+            )
         return new
 
     # -- get --------------------------------------------------------------
@@ -375,14 +386,4 @@ class QueryEngine:
                 new = load_ntriples(self.spark, cmd.path)
         else:
             raise ValueError(f"unknown load type {cmd.kind!r}")
-        # Union edges explicitly: a from_relational graph holds its FK
-        # edges in a SEPARATE frame (they are not dtype='ref' prop rows),
-        # so rebuilding from the props union alone would silently drop
-        # them. Deriving the new edges from the new props only keeps the
-        # put-shape invariant (edges == ref-rows of props) intact too.
-        with self._write_lock:
-            self.graph = PropertyGraph(
-                self.graph.props.unionByName(new),
-                self.graph.edges.unionByName(PropertyGraph(new).edges),
-            )
-        return new
+        return self._append(new)

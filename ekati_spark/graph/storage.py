@@ -76,11 +76,6 @@ def read_bucket_count(path: str) -> int:
         return int(json.load(fh)["n_buckets"])
 
 
-def read_bucketed_props(spark: SparkSession, path: str) -> DataFrame:
-    """Full-graph view (drops the layout column)."""
-    return spark.read.parquet(path).drop("bucket")
-
-
 def write_bucketed_edges(
     edges: DataFrame, path: str, n_buckets: int = 64
 ) -> None:

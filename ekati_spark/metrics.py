@@ -17,6 +17,10 @@ can join, filter, and aggregate engine counters like any other table:
 - ``query_metrics``     one row per (plan node, SQLMetric) of a single
                         executed DataFrame — per-QUERY telemetry the
                         reference only had per-process
+- ``profile``           one query run's layer record: build and action
+                        wall time and Spark jobs, each layer's stage
+                        totals, and the plan's operator counts
+- ``tagged_jobs``       the Spark jobs one call fired
 
 Scale note: these read driver-side control-plane state (status store /
 plan tree), never executor data; result sizes are O(stages), O(execs),
@@ -27,17 +31,24 @@ cluster-wide registry view the Spark UI renders.
 
 from __future__ import annotations
 
+import re
+import time
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 
 STAGE_SCHEMA = (
     "stage_id int, attempt int, name string, status string, "
     "num_tasks int, num_complete_tasks int, executor_run_time_ms long, "
+    "executor_cpu_time_ms long, "
     "input_bytes long, input_records long, "
     "shuffle_read_bytes long, shuffle_read_records long, "
     "shuffle_write_bytes long, shuffle_write_records long, "
     "memory_spilled_bytes long, disk_spilled_bytes long, "
     "peak_execution_memory long"
 )
+_STAGE_COLS = [c.split()[0] for c in STAGE_SCHEMA.split(", ")]
 
 EXECUTOR_SCHEMA = (
     "executor_id string, is_active boolean, total_cores int, "
@@ -54,6 +65,29 @@ QUERY_METRIC_SCHEMA = "node_id long, node string, metric string, value long"
 CONTROL_PLANE_BOUND = 1_000_000
 
 
+def _stage_row(s) -> tuple:
+    """One status-store ``StageData`` as a ``STAGE_SCHEMA`` row."""
+    return (
+        s.stageId(),
+        s.attemptId(),
+        s.name(),
+        str(s.status()),
+        s.numTasks(),
+        s.numCompleteTasks(),
+        s.executorRunTime(),
+        s.executorCpuTime() // 1_000_000,
+        s.inputBytes(),
+        s.inputRecords(),
+        s.shuffleReadBytes(),
+        s.shuffleReadRecords(),
+        s.shuffleWriteBytes(),
+        s.shuffleWriteRecords(),
+        s.memoryBytesSpilled(),
+        s.diskBytesSpilled(),
+        s.peakExecutionMemory(),
+    )
+
+
 def stage_metrics(spark: SparkSession) -> DataFrame:
     """All stages the engine has run this session, as a DataFrame.
 
@@ -67,29 +101,7 @@ def stage_metrics(spark: SparkSession) -> DataFrame:
     ]
     empty = spark.sparkContext._jvm.java.util.ArrayList()
     stages = store.stageList(empty, *defaults)
-    rows = []
-    for i in range(stages.size()):
-        s = stages.apply(i)
-        rows.append(
-            (
-                s.stageId(),
-                s.attemptId(),
-                s.name(),
-                str(s.status()),
-                s.numTasks(),
-                s.numCompleteTasks(),
-                s.executorRunTime(),
-                s.inputBytes(),
-                s.inputRecords(),
-                s.shuffleReadBytes(),
-                s.shuffleReadRecords(),
-                s.shuffleWriteBytes(),
-                s.shuffleWriteRecords(),
-                s.memoryBytesSpilled(),
-                s.diskBytesSpilled(),
-                s.peakExecutionMemory(),
-            )
-        )
+    rows = [_stage_row(stages.apply(i)) for i in range(stages.size())]
     return spark.createDataFrame(rows, STAGE_SCHEMA)
 
 
@@ -192,3 +204,157 @@ def run_with_observation(df, *metric_cols, name: str = "obs"):
     out = df.observe(obs, *metric_cols)
     n = out.count()
     return n, obs.get
+
+
+# -- per-run profiling -------------------------------------------------------
+
+# Physical operators a plan summary counts, by key. ``exchanges`` counts
+# shuffle Exchange operators: broadcasts and reused exchanges are not
+# shuffles of their own.
+PLAN_OPS = {
+    "exchanges": r"(?m)^[\s:+\-*]*Exchange ",
+    "smj": r"SortMergeJoin",
+    "bhj": r"BroadcastHashJoin",
+    "shj": r"ShuffledHashJoin",
+    "bnlj": r"BroadcastNestedLoopJoin",
+    "cartesian": r"CartesianProduct",
+}
+
+# Stages listed per run in ``profile``'s ``top_stages``.
+TOP_STAGES = 5
+
+
+def plan_ops(plan: str) -> dict[str, int]:
+    """``PLAN_OPS`` counts of a physical plan's tree string."""
+    return {k: len(re.findall(pat, plan)) for k, pat in PLAN_OPS.items()}
+
+
+@contextmanager
+def _job_tag(spark: SparkSession):
+    """Tag every Spark job submitted inside the block from this thread
+    (and from threads it starts) with a fresh job tag; yields the tag."""
+    sc = spark.sparkContext
+    tag = f"ekati-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        yield tag
+    finally:
+        sc.removeJobTag(tag)
+
+
+def _tagged_job_ids(spark: SparkSession, tag: str) -> list[int]:
+    """Ids of the jobs carrying ``tag``. Job events reach the status
+    store through the listener bus, so the bus is drained first; the
+    tracker then filters the store's job list by ``jobTags``."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForTag(tag))
+
+
+def tagged_jobs(spark: SparkSession, fn) -> tuple[object, list[int]]:
+    """``(fn(), ids of the Spark jobs fn fired)``."""
+    with _job_tag(spark) as tag:
+        out = fn()
+    return out, _tagged_job_ids(spark, tag)
+
+
+def _date_ms(opt) -> int:
+    """Scala ``Option[java.util.Date]`` as epoch ms (0 when empty)."""
+    return int(opt.get().getTime()) if opt.isDefined() else 0
+
+
+def _job_stages(store, job_ids: list[int], seen: set) -> list[dict]:
+    """``STAGE_SCHEMA`` records of the stages these jobs ran. A stage a
+    job lists but did not run is left out: one it skipped, one an
+    earlier job ran (its shuffle output reused), one in ``seen``."""
+    out = []
+    for jid in job_ids:
+        job = store.job(jid)
+        submitted = _date_ms(job.submissionTime())
+        it = job.stageIds().iterator()
+        while it.hasNext():
+            sid = it.next()
+            if sid in seen:
+                continue
+            s = store.lastStageAttempt(sid)
+            # a skipped stage has no submission time of its own
+            if _date_ms(s.submissionTime()) < submitted:
+                continue
+            seen.add(sid)
+            out.append(dict(zip(_STAGE_COLS, _stage_row(s))))
+    return out
+
+
+def _stage_totals(stages: list[dict]) -> dict:
+    def total(*cols):
+        return sum(s[c] for s in stages for c in cols)
+
+    return {
+        "stages": len(stages),
+        "tasks": total("num_complete_tasks"),
+        "executor_run_ms": total("executor_run_time_ms"),
+        "executor_cpu_ms": total("executor_cpu_time_ms"),
+        "input_bytes": total("input_bytes"),
+        "shuffle_read_bytes": total("shuffle_read_bytes"),
+        "shuffle_write_bytes": total("shuffle_write_bytes"),
+        "shuffle_records": total("shuffle_write_records"),
+        "spill_bytes": total("memory_spilled_bytes", "disk_spilled_bytes"),
+        "peak_exec_mem_bytes": max(
+            (s["peak_execution_memory"] for s in stages), default=0
+        ),
+    }
+
+
+def profile(spark: SparkSession, build, label: str) -> dict:
+    """Run one query and return its layer record, one flat dict.
+
+    ``build()`` constructs the query's DataFrame, firing whatever eager
+    jobs the construction needs (checkpoints, counts, collects); the
+    frame is then written to the ``noop`` sink, the action. Each layer
+    runs under its own job tag, so its jobs are exactly the ones it
+    fired, with no settling sleep and no stage-id bookkeeping:
+
+    - ``build_s``/``action_s`` wall seconds, ``build_jobs``/
+      ``action_jobs`` Spark jobs;
+    - per layer (``build_``/``action_`` prefix): stages, tasks,
+      executor run and CPU ms, input bytes, shuffle read/write bytes,
+      shuffle records written, spill bytes, peak execution memory of
+      the largest stage;
+    - ``PLAN_OPS`` counts of the frame's physical plan (AQE's initial
+      plan: deterministic, unlike its runtime re-plans);
+    - ``top_stages``: the ``TOP_STAGES`` stages with the most executor
+      run time, each with its layer.
+    """
+    with _job_tag(spark) as build_tag:
+        t0 = time.perf_counter()
+        df = build()
+        t1 = time.perf_counter()
+    with _job_tag(spark) as action_tag:
+        df.write.format("noop").mode("overwrite").save()
+        t2 = time.perf_counter()
+    rec = {"label": label, "build_s": t1 - t0, "action_s": t2 - t1}
+    store = spark.sparkContext._jsc.sc().statusStore()
+    seen: set = set()
+    ran = []
+    for layer, tag in (("build", build_tag), ("action", action_tag)):
+        ids = _tagged_job_ids(spark, tag)
+        stages = _job_stages(store, ids, seen)
+        rec[f"{layer}_jobs"] = len(ids)
+        for k, v in _stage_totals(stages).items():
+            rec[f"{layer}_{k}"] = v
+        ran += [dict(s, layer=layer) for s in stages]
+    rec.update(plan_ops(df._jdf.queryExecution().executedPlan().toString()))
+    rec["top_stages"] = [
+        {
+            k: s[k]
+            for k in (
+                "layer", "stage_id", "num_tasks", "executor_run_time_ms",
+                "input_records", "shuffle_read_records",
+                "shuffle_write_records", "disk_spilled_bytes",
+            )
+        }
+        for s in sorted(ran, key=lambda s: -s["executor_run_time_ms"])[
+            :TOP_STAGES
+        ]
+    ]
+    return rec

@@ -456,19 +456,22 @@ def ordered_row_number(
     if neighbor_col is None:
         return base.drop("_pid", "_off", "_rn", *drop_cols)
     nxt, prv = f"{neighbor_col}_next", f"{neighbor_col}_prev"
-    base = base.withColumn(
-        "_ld", F.lead(neighbor_col).over(w)
-    ).withColumn("_lg", F.lag(neighbor_col).over(w))
+    base = (
+        base.withColumn("_ld", F.lead(neighbor_col).over(w))
+        .withColumn("_lg", F.lag(neighbor_col).over(w))
+        .withColumn("_last", F.lead(F.lit(1)).over(w).isNull())
+    )
     # partition-FIRST rows are the global successors of index off (the
-    # previous partition's last row); partition-LAST rows (local
-    # row_number == partition count) the predecessors of index
-    # off+count+1. Indices are dense 1..N by construction, so the two
-    # fix-up frames join purely on out_col — ≤ n rows each, broadcast.
+    # previous partition's last row); partition-LAST rows (no row after
+    # them in the window — not `_ld IS NULL`, which a NULL neighbor
+    # value also produces) the predecessors of index off+count+1.
+    # Indices are dense 1..N by construction, so the two fix-up frames
+    # join purely on out_col — ≤ n rows each, broadcast.
     firsts = base.filter(F.col("_rn") == 1).select(
         (F.col(out_col) - 1).alias(out_col),
         F.col(neighbor_col).alias("_bnd_n"),
     )
-    lasts = base.filter(F.col("_ld").isNull()).select(
+    lasts = base.filter(F.col("_last")).select(
         (F.col(out_col) + 1).alias(out_col),
         F.col(neighbor_col).alias("_bnd_p"),
     )
@@ -478,7 +481,7 @@ def ordered_row_number(
         .withColumn(nxt, F.coalesce("_ld", "_bnd_n"))
         .withColumn(prv, F.coalesce("_lg", "_bnd_p"))
         .drop(
-            "_pid", "_off", "_rn", "_ld", "_lg", "_bnd_n", "_bnd_p",
-            *drop_cols,
+            "_pid", "_off", "_rn", "_ld", "_lg", "_last", "_bnd_n",
+            "_bnd_p", *drop_cols,
         )
     )

@@ -2,13 +2,13 @@ from __future__ import annotations
 
 import os
 import sys
-import uuid
 from pathlib import Path
 
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from ekati_spark.metrics import tagged_jobs  # noqa: E402
 from ekati_spark.session import get_spark  # noqa: E402
 
 # The program's 32g default driver heap lets the suite's JVM grow past
@@ -32,18 +32,6 @@ def sf_dir():
 @pytest.fixture()
 def job_ids(spark):
     """``job_ids(fn)`` -> (fn(), ids of the Spark jobs it fired):
-    attributed by job group, read once the listener bus has delivered
+    attributed by job tag, read once the listener bus has delivered
     every job event to the status store."""
-    sc = spark.sparkContext
-
-    def run(fn):
-        group = f"job-ids-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup(None, None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-    return run
+    return lambda fn: tagged_jobs(spark, fn)

@@ -575,23 +575,24 @@ def test_load_nt_url_through_language(spark, tmp_path):
 
 
 def test_load_nt_preserves_fk_graph_edges(spark, tmp_path):
-    """`load nt` onto a from_relational graph must keep the FK edge
-    frame (those edges are NOT dtype='ref' prop rows — rebuilding from
-    the props union alone would silently drop them)."""
+    """`load nt` and `put` onto a from_relational graph must keep the FK
+    edge frame (those edges are NOT dtype='ref' prop rows — rebuilding
+    from the props union alone would silently drop them)."""
     from ekati_spark.graph.compiler import QueryEngine
     from ekati_spark.graph.model import PropertyGraph
 
     g = PropertyGraph.from_relational(spark, "/root/testdata/sf0.001")
-    eng = QueryEngine(spark, g)
-    before = eng.graph.edges.count()
     nt = tmp_path / "extra.nt"
     nt.write_text('<http://e/x> <http://e/knows> <http://e/y> .\n')
-    eng.execute(f'load nt "{nt}"')
-    after = eng.graph.edges.count()
-    assert after == before + 1
-    # traversal over the FK edges still works post-load
-    out = eng.execute('get "customer:1" |> follow "placed" 1').collect()
-    assert len(out) > 0
+    for write in (f'load nt "{nt}"', 'put "x" {"knows": ^"y"}'):
+        eng = QueryEngine(spark, g)
+        before = eng.graph.edges.count()
+        eng.execute(write)
+        after = eng.graph.edges.count()
+        assert after == before + 1, write
+        # traversal over the FK edges still works post-write
+        out = eng.execute('get "customer:1" |> follow "placed" 1').collect()
+        assert len(out) > 0, write
 
 
 def test_ntriples_ue000_literal_survives(spark, tmp_path):

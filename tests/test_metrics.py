@@ -118,3 +118,41 @@ def test_observation_metrics_no_second_pass(spark, sf_dir):
     ).first()
     assert n == got["rows"] == expect["rows"]
     assert got["qty"] == expect["qty"]
+
+
+def test_profile_splits_build_jobs_from_action_shuffle(spark):
+    """A build that fires one eager job reports exactly that job; the
+    groupBy shuffle after it is charged to the action, not the build."""
+    from ekati_spark.metrics import profile
+
+    def build():
+        base = spark.range(0, 20_000).localCheckpoint(eager=True)
+        return base.groupBy((F.col("id") % 11).alias("k")).count()
+
+    rec = profile(spark, build, "checkpoint_then_groupby")
+    assert rec["label"] == "checkpoint_then_groupby"
+    assert rec["build_jobs"] == 1
+    assert rec["build_shuffle_write_bytes"] == 0
+    assert rec["build_shuffle_records"] == 0
+    assert rec["action_jobs"] >= 1
+    assert rec["action_shuffle_write_bytes"] > 0
+    assert rec["action_shuffle_records"] > 0
+    assert rec["exchanges"] == 1
+    assert rec["build_s"] > 0 and rec["action_s"] > 0
+    assert rec["top_stages"]
+    assert {s["layer"] for s in rec["top_stages"]} <= {"build", "action"}
+
+
+def test_back_to_back_profiles_count_the_same_jobs(spark):
+    """No settling sleep between runs: the second profile's jobs are
+    attributed as exactly as the first's."""
+    from ekati_spark.metrics import profile
+
+    def build():
+        base = spark.range(0, 5_000).localCheckpoint(eager=True)
+        return base.groupBy((F.col("id") % 3).alias("k")).count()
+
+    a = profile(spark, build, "a")
+    b = profile(spark, build, "b")
+    keys = ("build_jobs", "action_jobs", "build_stages", "action_stages")
+    assert [a[k] for k in keys] == [b[k] for k in keys]

@@ -172,6 +172,36 @@ def test_ordered_row_number_rejects_bucket_with_neighbor(spark):
         )
 
 
+def test_ordered_row_number_neighbors_with_null_values(spark):
+    """NULL neighbor values inside range partitions: the in-row
+    ``_next``/``_prev`` columns match a single-window lead/lag over the
+    whole order."""
+    from pyspark.sql import Window as W
+
+    from ekati_spark.metrics import run_with_metrics
+
+    rows = [(i, None if i % 3 == 0 else f"v{i}") for i in range(300)]
+    df = spark.createDataFrame(rows, "k long, v string")
+    out = S.ordered_row_number(df, ["k"], neighbor_col="v", num_partitions=8)
+    w = W.orderBy("k")
+    ref = df.select(
+        "k",
+        F.lead("v").over(w).alias("v_next"),
+        F.lag("v").over(w).alias("v_prev"),
+    )
+    _, qm = run_with_metrics(out)
+    got = sorted((r.k, r.pos, r.v_next, r.v_prev) for r in out.collect())
+    want = sorted((r.k, r.k + 1, r.v_next, r.v_prev) for r in ref.collect())
+    assert got == want
+    # the broadcast offsets and boundary fix-up frames hold at most one
+    # row per partition, however many neighbor values are NULL
+    sizes = [
+        r.value for r in qm.collect()
+        if r.node == "BroadcastExchange" and r.metric == "numOutputRows"
+    ]
+    assert sizes and max(sizes) <= 8, sizes
+
+
 def test_leakage_safe_split_is_group_atomic(spark, sf_dir):
     """Exact-duplicate documents always land in the same split (the
     leakage guarantee l22's per-doc split does not give)."""

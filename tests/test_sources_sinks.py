@@ -400,7 +400,6 @@ def test_bucketed_props_point_lookup_prunes_partitions(spark, tmp_path):
     from ekati_spark.graph.storage import (
         bucket_expr,
         bucket_of,
-        read_bucketed_props,
         write_bucketed_props,
     )
     from ekati_spark.schemas import PROPS_SCHEMA
@@ -421,7 +420,7 @@ def test_bucketed_props_point_lookup_prunes_partitions(spark, tmp_path):
     assert all(bucket_of(r.node_id, 8) == r.b for r in twin)
 
     # full view round-trips
-    back = read_bucketed_props(spark, path)
+    back = spark.read.parquet(path).drop("bucket")
     assert back.count() == 200
 
     engine = QueryEngine(spark, graph=PropertyGraph.from_bucketed(spark, path))
@@ -527,10 +526,9 @@ def test_bucketed_follow_matches_flat_and_prunes(spark, sf_dir, job_ids):
     # 5 seeds own ≤5 of 16 buckets, so the pruned scan must carry well
     # under half the graph's distinct sources (it reads whole probed
     # partitions — pruning is per-directory, not per-row)
-    from ekati_spark.graph.storage import read_bucketed_props
-
     total_src = (
-        read_bucketed_props(spark, path).select("src").distinct().count()
+        spark.read.parquet(path).drop("bucket").select("src").distinct()
+        .count()
     )
     assert hop_edges.select("src").distinct().count() <= total_src * 6 / 16
 

@@ -11,31 +11,30 @@ Usage: python tools/plan_report.py [sf_dir] > PLANS.md
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from ekati_spark.metrics import plan_ops  # noqa: E402
+
+_JOINS = (
+    ("bhj", "BHJ"),
+    ("smj", "SMJ"),
+    ("shj", "SHJ"),
+    ("bnlj", "BNLJ"),
+    ("cartesian", "CART"),
+)
+
 
 def summarize(plan: str) -> dict:
-    def count(pat: str) -> int:
-        return len(re.findall(pat, plan))
-
-    joins = []
-    for op, label in (
-        ("BroadcastHashJoin", "BHJ"),
-        ("SortMergeJoin", "SMJ"),
-        ("ShuffledHashJoin", "SHJ"),
-        ("BroadcastNestedLoopJoin", "BNLJ"),
-        ("CartesianProduct", "CART"),
-    ):
-        n = count(op)
-        if n:
-            joins.append(f"{n}x{label}")
+    ops = plan_ops(plan)
+    joins = [f"{ops[k]}x{label}" for k, label in _JOINS if ops[k]]
     return {
         "joins": " ".join(joins) or "-",
-        "exchanges": count(r"Exchange (hash|range|single)"),
-        "pushed": "yes" if "PushedFilters: [" in plan and count(
-            r"PushedFilters: \[[^\]]"
-        ) else "-",
+        "exchanges": ops["exchanges"],
+        "pushed": "yes" if re.search(r"PushedFilters: \[[^\]]", plan) else "-",
         "topk": "TakeOrdered" if "TakeOrderedAndProject" in plan else "-",
         "aqe": "yes" if "AdaptiveSparkPlan" in plan else "-",
     }
@@ -43,7 +42,6 @@ def summarize(plan: str) -> dict:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
     from ekati_spark.session import get_spark
     from ekati_spark.queries import REGISTRY
 
