@@ -29,6 +29,23 @@ billion nodes) while one PageRank round over the edge table costs
 minutes — the reliable write is cheap insurance once expected
 executor-loss-per-job is non-trivial. Keep ``local`` for short loops
 on small state where a rare restart is cheaper than N round-trips.
+
+When to cut eagerly. ``cut_lineage`` runs a job now; ``cut_lineage_lazy``
+defers it to the first action. Cut eagerly only when the result has
+≥ 2 consumers or is costly to recompute. Otherwise the eager job is
+pure overhead, but a lazy cut of a shared result is worse: each
+consumer inside one action re-derives it. l108b's final-assign cut went
+lazy and, at sf1, recomputed 3× inside one action; sf0.1 had not shown
+it (round 16; the cut is eager again).
+
+A cut is not a partitioned cache. On Spark 4.1.2 with AQE on, a cut
+frame reports ``UnknownPartitioning``: ``repartition(4, "v")
+.localCheckpoint()`` followed by ``groupBy("v")`` plans 1 Exchange (0
+with AQE off, 0 on the same frame persisted). So every consumer of a
+cut frame re-shuffles it. A relation that many plans join or group on
+one key is persisted instead, hash-partitioned on that key: g43's
+supersteps join ``queries.graph._copurchase``'s relation, persisted on
+``v``, with no Exchange over it.
 """
 
 from __future__ import annotations

@@ -23,7 +23,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ekati_spark.checkpoint import cut_lineage
-from ekati_spark.driverside import local_rows_df
 from ekati_spark.graph import ir
 from ekati_spark.graph.model import PropertyGraph
 from ekati_spark.graph.parser import parse
@@ -190,16 +189,14 @@ class QueryEngine:
         if any(s.iri == "*" for s in seeds):
             # full scan (FileStore.fs:300-315)
             return self.graph.props.select("node_id", "remote").distinct()
-        universe = (
-            self._seed_props(seeds).select("node_id", "remote").distinct()
+        # point lookups: the seeds that exist, read with the seed
+        # partitions pruned and node_id IN pushed into the scan
+        return (
+            self._seed_props(seeds)
+            .filter(self._seed_pred(seeds))
+            .select("node_id", "remote")
+            .distinct()
         )
-        seed_df = local_rows_df(
-            self.spark,
-            [(s.iri, s.remote) for s in seeds],
-            "node_id string, remote string",
-        )
-        # point lookups: semi-join prunes to the seed partitions
-        return universe.join(seed_df, ["node_id", "remote"], "left_semi")
 
     def _apply_wo_fields(self, stream: DataFrame, step) -> DataFrame:
         if isinstance(step, ir.FollowStep):

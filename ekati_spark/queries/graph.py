@@ -1223,15 +1223,8 @@ def _copurchase_edges(orders, li):
     when they bought >= 4 common parts, computed over per-part buyer
     neighborhoods capped at ``_CP_PART_CAP`` (see note above). The
     row_number window shuffles by p — the same key the pair join
-    needs, so the cap adds no extra exchange.
-
-    The result is LINEAGE-CUT here: e is tiny after the >=4-shared
-    filter, but the pair aggregation feeding it reduces ~Σd²/2 shuffle
-    records — and every consumer builds ``und = e ∪ swap(e)``, whose
-    two branches would otherwise each re-run that reduce (exchange
-    reuse shares the map side only; the sf1 stage trace showed the
-    final stage reading the 80M-record pair shuffle TWICE and spilling
-    15 GiB). Materializing e once runs the reduce once."""
+    needs, so the cap adds no extra exchange. Consumers read it through
+    ``_copurchase``, which materializes it once per session."""
     from pyspark.sql import Window as _W
 
     # One explicit wide exchange on p feeds the whole chain: p is a
@@ -1287,8 +1280,34 @@ def _copurchase_edges(orders, li):
         .agg(F.count("*").alias("sp"))
         .filter(F.col("sp") >= 4)
         .select("u", "v")
-        .transform(cut_lineage)
     )
+
+
+# One undirected co-purchase relation per (session, sf_dir), 12 queries'
+# substrate: und = e ∪ swap(e) in one pass over the pair aggregation (a
+# two-branch union would run its ~Σd²/2-record reduce twice), hash-
+# partitioned on v and PERSISTED, not cut — a cut frame reports no
+# partitioning, so every join or group on v would re-shuffle it
+# (ekati_spark/checkpoint.py). A consumer needing the directed edges
+# reads und.filter(u < v): exactly e, whose pairs explode from sorted,
+# distinct buyer arrays.
+def _copurchase(spark, sf_dir):
+    def build():
+        e = _copurchase_edges(
+            load_table(spark, sf_dir, "orders"),
+            load_table(spark, sf_dir, "lineitem"),
+        )
+        swap = F.struct(F.col("v").alias("u"), F.col("u").alias("v"))
+        und = (
+            e.select(F.explode(F.array(F.struct("u", "v"), swap)).alias("x"))
+            .select("x.u", "x.v")
+            .repartition(spark.sparkContext.defaultParallelism, "v")
+            .persist()
+        )
+        und.count()
+        return und
+
+    return get_or_build(spark, "copurchase", sf_dir, build, lambda d: d.unpersist())
 
 
 @register(
@@ -1358,14 +1377,8 @@ def g30_link_prediction(spark, sf_dir):
     hash-attested, not dormant. Existing edges removed with a
     left-anti join, top-100 under a total order (ra desc, a, b) ->
     TakeOrderedAndProject, no global sort."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-        .transform(cut_lineage)  # reused 3x: und(x2) + anti join
-    )
-    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    und = _copurchase(spark, sf_dir)
+    e = und.filter(F.col("u") < F.col("v"))
     deg = und.groupBy(F.col("u").alias("z")).agg(F.count("*").alias("deg"))
     undw = und.join(deg, und.u == deg.z).select(
         "z", F.col("v").alias("n"), F.expr("1000000000L div deg").alias("w")
@@ -1450,20 +1463,14 @@ def g31_nation_modularity(spark, sf_dir):
     accumulation. Scale shape: the projection self-join is g24/g30's
     (hub caps apply); everything after is integer aggregates over
     edges and a 25-row nation rollup; the nation labels broadcast."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
     cust = load_table(spark, sf_dir, "customer")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-        .transform(cut_lineage)  # reused: m count, intra join, degrees
-    )
+    und = _copurchase(spark, sf_dir)
+    e = und.filter(F.col("u") < F.col("v"))
     nat = cust.select(F.col("c_custkey").alias("c"), F.col("c_nationkey").alias("nk"))
     lab = (
         e.join(F.broadcast(nat.withColumnRenamed("c", "u").withColumnRenamed("nk", "nk_u")), "u")
         .join(F.broadcast(nat.withColumnRenamed("c", "v").withColumnRenamed("nk", "nk_v")), "v")
     )
-    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = und.groupBy("u").agg(F.count("*").alias("d"))
     dsum = deg.join(F.broadcast(nat.withColumnRenamed("c", "u")), "u").groupBy(
         "nk"
@@ -1645,15 +1652,7 @@ def g33_harmonic_centrality(spark, sf_dir):
     MIN(d) — bounded by #seeds × #nodes × (max_hops+1) rows."""
     from ekati_spark.graph.algorithms import multi_source_hops
 
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).transform(cut_lineage)  # consumed every BFS hop + seed pick
+    und = _copurchase(spark, sf_dir)
     edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
     seeds = (
         und.select(F.col("u").alias("node_id"))
@@ -1726,22 +1725,14 @@ def g34_diameter_sweep(spark, sf_dir):
     reachable-node count, all exact integers (hop cap 8 on both
     engines).
 
-    Scale shape: two bounded BFS passes over the (checkpointed)
+    Scale shape: two bounded BFS passes over the (persisted)
     co-purchase edge table — identical cost to two `follow *` runs;
     the only driver-side values are two scalar rows (the far node and
     the seed's eccentricity) collected between passes. At 100 TB this
     is THE diameter estimator — the exact alternative is all-pairs."""
     from ekati_spark.graph.algorithms import shortest_hops
 
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).transform(cut_lineage)  # consumed by every hop of both sweeps
+    und = _copurchase(spark, sf_dir)
     edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
     seed = und.agg(F.min("u")).first()[0]
     d1 = shortest_hops(
@@ -1904,12 +1895,7 @@ def g36_ktruss(spark, sf_dir):
     subquery replayed inside each level."""
     from ekati_spark.graph.algorithms import k_truss
 
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
+    e = _copurchase(spark, sf_dir).filter(F.col("u") < F.col("v"))
     surv = k_truss(e, k=4)
     und = surv.unionByName(
         surv.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1973,14 +1959,7 @@ def g37_degree_assortativity(spark, sf_dir):
     than the edge count. At true 100 TB the bigint moment products
     approach 2^63 — promote to decimal(38,0) accumulation then (same
     plan shape); test-SF magnitudes stay far inside bigint."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-        .transform(cut_lineage)  # reused: both und branches
-    )
-    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    und = _copurchase(spark, sf_dir)
     deg = und.groupBy("u").agg(F.count("*").cast("long").alias("d"))
     dd = (
         und.join(deg.select(F.col("u"), F.col("d").alias("x")), "u")
@@ -2057,13 +2036,8 @@ def g38_clustering_coefficient(spark, sf_dir):
     skewed hubs (the e1.v join key becomes the LOWER-degree endpoint);
     id-orientation keeps the plan identical and the oracle trivial at
     test SFs."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-        .transform(cut_lineage)  # reused: wedge join x2, closure, deg
-    )
+    und = _copurchase(spark, sf_dir)
+    e = und.filter(F.col("u") < F.col("v"))
     e1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
@@ -2072,7 +2046,6 @@ def g38_clustering_coefficient(spark, sf_dir):
         F.explode(F.array("a", "b", "c")).alias("node")
     )
     tcount = pernode.groupBy("node").agg(F.count("*").cast("long").alias("tri"))
-    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = und.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("long").alias("d")
     )
@@ -2210,17 +2183,9 @@ def g39_betweenness_sampled(spark, sf_dir):
     one join against the next level's delta table. Per-level state is
     localCheckpointed — consumed by the next level AND the final union.
     Levels are bounded (4), so the driver loop is O(1) plans."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
     NANO = 1_000_000_000
     MAXD = 4
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).transform(cut_lineage)  # consumed by every forward + backward level
+    und = _copurchase(spark, sf_dir)
     seeds = (
         und.select(F.col("u").alias("seed"))
         .distinct()
@@ -2410,14 +2375,8 @@ def g40_random_walk_corpus(spark, sf_dir):
     ∝ number of active walks, not edges. Walk count scales out
     trivially (more seeds = more rows in the same joins); step count is
     a bounded driver loop, g39's shape."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
     STEPS = 8
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    und = _copurchase(spark, sf_dir)
     from pyspark.sql import Window as W
 
     adj = und.select(
@@ -2530,20 +2489,13 @@ def g41_coreness_buckets(spark, sf_dir):
     peel-to-fixpoint, chained)."""
     from ekati_spark.graph.algorithms import k_core
 
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .transform(cut_lineage)  # seed of every peel + node set
+    und = _copurchase(spark, sf_dir)
+    bucket = und.select(F.col("v").alias("cust")).distinct().select(
+        "cust", F.lit(1).alias("core_bucket")
     )
-    nodes = (
-        e.select(F.col("src").alias("cust"))
-        .unionByName(e.select(F.col("dst").alias("cust")))
-        .distinct()
+    edges_k = und.filter(F.col("u") < F.col("v")).select(
+        F.col("u").alias("src"), F.col("v").alias("dst")
     )
-    bucket = nodes.select("cust", F.lit(1).alias("core_bucket"))
-    edges_k = e
     for k in range(2, 6):
         surv = k_core(edges_k, k=k)  # (node_id, degree) of the k-core
         members = surv.select(F.col("node_id").alias("cust"))
@@ -2745,27 +2697,20 @@ def g43_neighborhood_function(spark, sf_dir):
     parts — g30/g31's graph). Reference analog: the reference has no
     neighborhood-function operator; this extends the graph-analytics
     family the 100-TB-native way."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .transform(cut_lineage)  # consumed by every superstep
-    )
-    tail = "substr(md5('hb' || CAST(z AS STRING)), 1, 15)"
-    init = und.select(F.col("u").alias("z")).distinct().select(
-        F.col("z").alias("owner"),
+    und = _copurchase(spark, sf_dir)
+    # und is symmetric and partitioned on v: the registers (one per node)
+    # need no exchange, and a superstep is one join against the persisted
+    # relation plus the (owner, j) exchange and the cut
+    tail = "substr(md5('hb' || CAST(owner AS STRING)), 1, 15)"
+    state = und.select(F.col("v").alias("owner")).distinct().select(
+        "owner",
         F.expr(
-            "CAST(conv(substr(md5('hb' || CAST(z AS STRING)), 16, 1), 16, 10)"
+            "CAST(conv(substr(md5('hb' || CAST(owner AS STRING)), 16, 1), 16, 10)"
             " AS BIGINT)"
         ).alias("j"),
         F.expr(_HB_RHO.format(tail=tail)).cast("long").alias("rho"),
     )
-    state = init.transform(cut_lineage)
-    out = []
+    regs = None
     for t in (1, 2, 3):
         contrib = und.join(
             state, state.owner == und.v, "inner"
@@ -2776,28 +2721,22 @@ def g43_neighborhood_function(spark, sf_dir):
             .agg(F.max("rho").alias("rho"))
             .transform(cut_lineage)  # next superstep + this t's report
         )
-        sv = state.groupBy("owner").agg(
-            (
-                F.sum(
-                    F.expr("shiftleft(CAST(1 AS BIGINT), 32 - CAST(rho AS INT))")
-                )
-                + (F.lit(16) - F.count("*")) * F.lit(4294967296)
-            )
-            .cast("long")
-            .alias("sv")
+        reg_t = state.withColumn("t", F.lit(t))
+        regs = reg_t if regs is None else regs.unionByName(reg_t)
+    sv = regs.groupBy("t", "owner").agg(
+        (
+            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 32 - CAST(rho AS INT))"))
+            + (F.lit(16) - F.count("*")) * F.lit(4294967296)
         )
-        out.append(
-            sv.agg(
-                F.count("*").cast("long").alias("n_nodes"),
-                F.sum("sv").cast("long").alias("sum_s"),
-                F.min("sv").cast("long").alias("min_s"),
-                F.max("sv").cast("long").alias("max_s"),
-            ).select(F.lit(t).cast("int").alias("t"), "*")
-        )
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res
+        .cast("long")
+        .alias("sv")
+    )
+    return sv.groupBy(F.col("t").cast("int").alias("t")).agg(
+        F.count("*").cast("long").alias("n_nodes"),
+        F.sum("sv").cast("long").alias("sum_s"),
+        F.min("sv").cast("long").alias("min_s"),
+        F.max("sv").cast("long").alias("max_s"),
+    )
 
 
 @register(
@@ -2847,16 +2786,7 @@ def g44_bidirectional_shortest_path(spark, sf_dir):
     oracle checks it against a plain single-source closure. Frontier
     state is O(visited) DataFrames, lineage-cut per level (reliable
     checkpointable); NULL dist = not reachable within 8 hops."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .transform(cut_lineage)
-    )
+    und = _copurchase(spark, sf_dir)
     lo, hi = und.agg(F.min("u"), F.max("u")).first()
     src, dst = int(lo), int(hi)
 

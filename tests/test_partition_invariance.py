@@ -49,6 +49,9 @@ CASES = [
     "g13_pagerank",
     # BFS traversal with visited-set dedup
     "g02_follow_two_hop",
+    # supersteps over a session-stored relation built at one partition
+    # count (the first run's, or an earlier test's), run at 3 and 17
+    "g43_neighborhood_function",
     # sessionization windows over event time
     "st03_session_window",
 ]

@@ -1,7 +1,8 @@
-"""Step-free DSL gets (exact ids, only ``fields`` steps) are lowered to a
-literal predicate on the props scan instead of the seed semi-join and
-lineage cut: they must answer exactly as the general path does and
-build with no Spark job, in memory and on a bucketed layout."""
+"""Exact-id seeds are read through a literal predicate on the props
+scan. Step-free gets (only ``fields`` steps) must answer exactly as the
+general path does and build with no Spark job; traversals from exact
+seeds stream only the seeds that exist, each once. Both hold in memory
+and on a bucketed layout."""
 
 from __future__ import annotations
 
@@ -23,6 +24,8 @@ def _rows():
         # the same iri on another remote is another node
         prop_row("n7", "size", -7, ts=3, remote="far"),
         prop_row("n7", "name", "far seven", ts=3, remote="far"),
+        prop_row("n5", "knows", "n6", ts=2, is_ref=True),
+        prop_row("n5", "knows", "n9", ts=2, is_ref=True),
     ]
     return rows
 
@@ -71,3 +74,46 @@ def test_step_free_get_matches_general_path(spark, graphs, kind, job_ids):
     latest = engine.execute('get "n7" |> fields "size":*').collect()
     assert [(r.node_id, r.i64) for r in latest] == [("n7", 700)]
 
+
+_N7_FAR = [("n7", "far", "name", 3), ("n7", "far", "size", 3)]
+# query -> its (node_id, remote, key, ts) rows
+_TRAVERSALS = {
+    # a missing seed adds nothing
+    'get "missing", "n7" |> follow "knows" 1': [("n8", "", "size", 1)],
+    # a duplicated seed is followed once
+    'get "n5", "n5" |> follow "knows" 1': [
+        ("n6", "", "size", 1), ("n9", "", "size", 1),
+    ],
+    # n5 exists only on the local remote: "far" "n5" is a missing seed
+    'get "far" "n5" |> follow "knows" 1': [],
+    # n7's latest local size is 700; far n7's is -7
+    'get "missing", "n5", "n5", "far" "n7" |> filter "size" < 10': [
+        ("n5", "", "knows", 2), ("n5", "", "knows", 2), ("n5", "", "size", 1),
+        *_N7_FAR,
+    ],
+    # the stream is (n5, n7, far n7) in (remote, node_id) order
+    'get "n5", "n5", "missing", "far" "n7", "n7" |> skip 1 |> take 2': [
+        ("n7", "", "knows", 2), ("n7", "", "name", 2), ("n7", "", "size", 5),
+        *_N7_FAR,
+    ],
+    'get "n5", "n5", "missing" |> follow "knows" 1 |> filter "size" > 7'
+    ' |> fields "size":*': [("n9", "", "size", 1)],
+}
+
+
+@pytest.mark.parametrize("kind", ["memory", "bucketed"])
+def test_exact_seed_traversals(spark, graphs, kind):
+    """follow, filter and skip/take from missing, duplicated and
+    remote-qualified seeds return fixed rows."""
+    engine = QueryEngine(spark, graph=graphs[kind])
+    for q, want in _TRAVERSALS.items():
+        got = [(r.node_id, r.remote, r.key, r.ts) for r in engine.execute(q).collect()]
+        assert sorted(got) == sorted(want), q
+
+
+def test_one_hop_build_jobs(spark, graphs, job_ids):
+    """A one-hop traversal from an exact seed on the bucketed layout
+    builds with at most 4 Spark jobs."""
+    engine = QueryEngine(spark, graph=graphs["bucketed"])
+    _, jobs = job_ids(lambda: engine.execute('get "n7" |> follow "knows" 1'))
+    assert len(jobs) <= 4, jobs
