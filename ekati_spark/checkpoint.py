@@ -30,13 +30,19 @@ minutes — the reliable write is cheap insurance once expected
 executor-loss-per-job is non-trivial. Keep ``local`` for short loops
 on small state where a rare restart is cheaper than N round-trips.
 
-When to cut eagerly. ``cut_lineage`` runs a job now; ``cut_lineage_lazy``
-defers it to the first action. Cut eagerly only when the result has
-≥ 2 consumers or is costly to recompute. Otherwise the eager job is
-pure overhead, but a lazy cut of a shared result is worse: each
-consumer inside one action re-derives it. l108b's final-assign cut went
-lazy and, at sf1, recomputed 3× inside one action; sf0.1 had not shown
-it (round 16; the cut is eager again).
+When to cut eagerly. ``cut_lineage`` materializes the frame now.
+``cut_lineage_lazy`` does not defer the work to the first action under
+AQE: planning the cut still runs every shuffle stage below it at call
+time, and only the final stage waits. On Spark 4.1.2, a groupBy + join
++ distinct frame fired 3 jobs cut eagerly, 2 cut lazily and 0 uncut
+(pinned in tests/test_checkpoint.py); with AQE off, 2 eagerly and 1
+lazily. So l136's three beam cuts, made lazy, save only 3 of its 19
+warm build jobs at sf0.01. Cut eagerly only when the result has ≥ 2
+consumers or is costly to recompute. Otherwise the eager job is pure
+overhead, but a lazy cut of a shared result is worse: each consumer
+inside one action re-derives it. l108b's final-assign cut went lazy
+and, at sf1, recomputed 3× inside one action; sf0.1 had not shown it
+(round 16; the cut is eager again).
 
 A cut is not a partitioned cache. On Spark 4.1.2 with AQE on, a cut
 frame reports ``UnknownPartitioning``: ``repartition(4, "v")
@@ -77,8 +83,9 @@ def cut_lineage(df: DataFrame) -> DataFrame:
 
 
 def cut_lineage_lazy(df: DataFrame) -> DataFrame:
-    """Lazy variant: plan the cut, materialize on first action (for
-    results that may be consumed zero times on some branches)."""
+    """Lazy variant: the final stage materializes on the first action.
+    Under AQE the shuffle stages below the cut still run now, at call
+    time (module docstring); only the last stage's job is saved."""
     return _cut(df, eager=False)
 
 

@@ -3183,13 +3183,7 @@ def knn_graph_nndescent(
         g = ranked.select("q", "n").transform(
             cut_lineage  # consumed 3x: U (2 branches) + pair union
         )
-        u = (
-            g.select(F.col("q").alias("center"), F.col("n").alias("member"))
-            .unionByName(
-                g.select(F.col("n").alias("center"), F.col("q").alias("member"))
-            )
-            .distinct()
-        )
+        u = undirected(g, "q", "n").toDF("center", "member")
         ua = u.select(F.col("center"), F.col("member").alias("id_a"))
         ub = u.select(F.col("center"), F.col("member").alias("id_b"))
         local = (
@@ -3209,6 +3203,90 @@ def knn_graph_nndescent(
         F.col("n").alias("neighbor_id"),
         "cosine",
         F.col("rank").cast("int").alias("rank"),
+    )
+
+
+def undirected(g: DataFrame, a: str, b: str) -> DataFrame:
+    """The undirected closure of ``g``'s directed edges ``(a, b)``:
+    every edge in both directions, distinct, as columns ``(a, b)`` —
+    NN-Descent's general-neighbor relation U(v) = N(v) ∪ R(v)."""
+    return (
+        g.select(a, b)
+        .unionByName(g.select(F.col(b).alias(a), F.col(a).alias(b)))
+        .distinct()
+    )
+
+
+def graph_serve_topk(
+    seeds: DataFrame,
+    adj: DataFrame,
+    c: DataFrame,
+    q: DataFrame,
+    k: int = 5,
+    dim: int = 64,
+) -> DataFrame:
+    """Graph-ANN serve: per query, the candidates are its seeds, their
+    neighbors and those neighbors' neighbors in the undirected
+    adjacency ``adj`` (a, b), minus the query itself; they are re-ranked
+    to the exact top-``k`` by cosine rounded to 6 decimals (ties on
+    neighbor id, NULL cosines of zero-norm vectors last), and each
+    returned row is audited against the brute-force top-``k``.
+
+    ``seeds`` is (query_id, node), ``c`` the corpus (id, v, nv) and
+    ``q`` the query panel (query_id, qv, nq), norms precomputed. Seeding
+    a query with itself gives the 2-hop expansion N(q) ∪ N(N(q)).
+    Returns (query_id, neighbor_id, cosine, rank, in_exact_top<k>).
+    Serve cost is Θ(|seeds|·deg²) id-keyed equi-join rows at any corpus
+    size; only the audit arm, |Q|·n by construction, scans the corpus
+    (``brute_force_topk``'s broadcast-query shape)."""
+    nbr = adj.select(F.col("a").alias("x"), "b")
+
+    def hop(f: DataFrame) -> DataFrame:
+        return f.join(nbr, "x").select("query_id", F.col("b").alias("x"))
+
+    h0 = seeds.select("query_id", F.col("node").alias("x"))
+    h1 = (
+        h0.unionByName(hop(h0))
+        .distinct()
+        .transform(cut_lineage)  # consumed 2x: union + second hop
+    )
+    cand = (
+        h1.unionByName(hop(h1))
+        .filter(F.col("x") != F.col("query_id"))
+        .distinct()
+    )
+    cx = c.select(
+        F.col("id").alias("x"), F.col("v").alias("vx"), F.col("nv").alias("nx")
+    )
+    cos = F.try_divide(dot("qv", "vx", dim), F.col("nq") * F.col("nx"))
+    scored = (
+        cand.join(cx, "x")
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id",
+            F.col("x").alias("neighbor_id"),
+            F.round(cos, 6).alias("cosine"),
+        )
+    )
+    w = W.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    topk = scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+    exact = brute_force_topk(
+        c, q, k=k, id_col="id", vec_col="v", query_vec_col="qv"
+    ).select("query_id", F.col("neighbor_id").alias("x_id"))
+    return topk.join(
+        exact,
+        (topk.query_id == exact.query_id) & (topk.neighbor_id == exact.x_id),
+        "left",
+    ).select(
+        topk.query_id,
+        "neighbor_id",
+        "cosine",
+        F.col("rank").cast("int").alias("rank"),
+        F.col("x_id").isNotNull().cast("int").alias(f"in_exact_top{k}"),
     )
 
 
@@ -3235,10 +3313,11 @@ def knn_graph_delete_consolidate(
     here for the graph family: build l119/l133, serve l133, delete
     this).
 
-    ``graph`` is a directed top-k edge list (query_id, neighbor_id);
-    ``deleted`` a one-column ``id`` frame. Returns the consolidated
-    adjacency of AFFECTED nodes only: (u, x, cmicro, rank) with
-    ``cmicro`` = floor(round(cosine, 6)·1e6 + 0.5) — the integer
+    ``graph`` is a directed top-k edge list (query_id, neighbor_id),
+    read three times, so callers pass it persisted (the session
+    store's graph is); ``deleted`` a one-column ``id`` frame. Returns
+    the consolidated adjacency of AFFECTED nodes only: (u, x, cmicro,
+    rank) with ``cmicro`` = floor(round(cosine, 6)·1e6 + 0.5) — the integer
     micro-score form whose ranks and sums replay exactly in SQL (the
     l80 smicro pattern). Deterministic: ties break on neighbor id.
 
@@ -3253,7 +3332,7 @@ def knn_graph_delete_consolidate(
         dim = _infer_dim(emb, vec_col)
     g = graph.select(
         F.col("query_id").alias("q"), F.col("neighbor_id").alias("n")
-    ).transform(cut_lineage)  # consumed 3x: live edges + patch source
+    )  # consumed 3x: live edges + patch source
     dl = deleted.select(F.col("id").alias("_did")).transform(
         cut_lineage_lazy  # consumed 3x: the three membership tests
     )
@@ -3341,6 +3420,8 @@ def knn_graph_insert(
     (new nodes that linked to it) — so inserted vectors become
     reachable without rebuilding anything (the l70/l79/l86
     incremental-maintenance contract, here for the graph family).
+    ``graph`` (query_id, neighbor_id) is read twice, so callers pass
+    it persisted (the session store's graph is).
 
     Returns ``(inserted, patched)``: the new nodes' adjacency
     (did, x, cmicro, rank) and the touched base nodes' re-ranked
@@ -3373,7 +3454,7 @@ def knn_graph_insert(
     )
     g = graph.select(
         F.col("query_id").alias("q"), F.col("neighbor_id").alias("n")
-    ).transform(cut_lineage)  # consumed 2x: hop expansion + reverse pool
+    )  # consumed 2x: hop expansion + reverse pool
     exp = seeds.join(
         g.select(F.col("q").alias("sid"), F.col("n").alias("x")), "sid"
     ).select("did", "x")

@@ -19,14 +19,13 @@ from ekati_spark.queries import streaming  # noqa: F401
 from ekati_spark.queries import stats  # noqa: F401
 
 # The driver grades the first 50 registered queries, so registration
-# order IS the graded set. CORRECTNESS_r15.json graded the round-15
-# window green (50/50 hash-match), so the never-driver-attested set is
-# now exactly the 6 round-15 mid-round additions that sat in
-# _POST_WINDOW (l132–l136, st35 — the suffix-sort and graph-ANN
-# lifecycle families). This round-16 window = the 5-query sentinel
-# core + those 6 + 39 least-recently-attested fillers (last green:
-# CORRECTNESS_r08/r10). No queries were added during round 16 (an
-# optimization round), so _POST_WINDOW is empty.
+# order IS the graded set. Every registered query now has a green row
+# in the committed CORRECTNESS/JUDGE artifacts (CORRECTNESS_r16.json
+# attested the six round-15 additions l132–l136 and st35), so the
+# never-driver-attested block is empty. This window = the 5-query
+# sentinel core + 45 least-recently-attested fillers (last green:
+# CORRECTNESS_r10/r11). _POST_WINDOW is empty: no queries were added
+# since the rotation.
 #
 # This list is DERIVED, not hand-curated: `python tools/rotate_window.py`
 # regenerates it from the committed CORRECTNESS/JUDGE artifacts, and
@@ -48,53 +47,52 @@ _GRADED_FIRST = [
     # sentinel core: one per family, re-attested every round
     "r03_pricing_summary", "g01_follow_one_hop",
     "l01_dedup_exact", "l06_knn_bruteforce", "st01_tumbling_window",
-    # --- never driver-attested ---
-    "l132_suffix_dedup_spans",
-    "l133_knn_graph_serve",
-    "l134_knn_graph_delete",
-    "l135_knn_graph_append",
-    "l136_knn_graph_route_serve",
-    "st35_stream_graph_maintenance",
     # --- least-recently attested fillers ---
-    "l51_curriculum_order",  # last green r08
-    "l52_bigram_interp_logprob",  # last green r08
-    "l53_perceptual_dhash",  # last green r08
-    "l56_ngram_novelty",  # last green r08
-    "l58_sq8_recall_audit",  # last green r08
-    "l59_source_overlap_matrix",  # last green r08
-    "l60_eval_apportionment",  # last green r08
-    "l62_audio_resample",  # last green r08
-    "l63_frame_sampling",  # last green r08
-    "l64_skipgram_collocations",  # last green r08
-    "l65_snapshot_diff",  # last green r08
-    "l68_feature_bucketize",  # last green r08
-    "l69_decode_coverage",  # last green r08
-    "l70_ivf_append_parity",  # last green r08
-    "l71_dedup_threshold_sweep",  # last green r08
-    "l73_temperature_mixture",  # last green r08
-    "l75_knn_filtered",  # last green r08
-    "l74_chunk_embedding_pool",  # last green r08
-    "l77_minhash_persisted",  # last green r08
-    "l78_split_integrity_audit",  # last green r08
-    "st15_stream_kmv_distinct",  # last green r08
-    "st16_stream_nt_ingest",  # last green r08
-    "st17_stream_countmin",  # last green r08
-    "r02_filter_project",  # last green r10
-    "r04_single_row_agg",  # last green r10
-    "r07_cube",  # last green r10
-    "r11_local_supplier_volume",  # last green r10
-    "r12_join_left",  # last green r10
-    "r14_join_semi",  # last green r10
-    "r15_join_anti",  # last green r10
-    "r16_cross_theta",  # last green r10
-    "r18_window_running_sum",  # last green r10
-    "r19_window_lag_lead",  # last green r10
-    "r71_dup_drift_daily",  # last green r10
-    "r72_topk_with_ties",  # last green r10
-    "r73_rollup_router",  # last green r10
-    "r74_ordered_set_aggs",  # last green r10
-    "r75_percentile_cont",  # last green r10
-    "g45_bucketed_follow_parity",  # last green r10
+    "g46_dsl_end_to_end",  # last green r10
+    "g47_reverse_follow",  # last green r10
+    "l72_audio_dedup_resampled",  # last green r10
+    "l76_pii_source_report",  # last green r10
+    "l05b_dup_pairs_ann",  # last green r10
+    "l45b_bitext_margin_ann",  # last green r10
+    "l79_minhash_incremental",  # last green r10
+    "l80_bm25_topk",  # last green r10
+    "l81_warc_ingest",  # last green r10
+    "l82_cdc_chunk_dedup",  # last green r10
+    "l83_pca_power_iteration",  # last green r10
+    "l84_chunk_store_gc",  # last green r10
+    "l85_ann_recall_audit",  # last green r10
+    "l86_bm25_index_incremental",  # last green r10
+    "l87_semantic_decontamination",  # last green r10
+    "l88_kcenter_coreset",  # last green r10
+    "l89_adaptive_quality_threshold",  # last green r10
+    "l90_kcenter_composable",  # last green r10
+    "l91_maxsim_late_interaction",  # last green r10
+    "l92_signature_store_gc",  # last green r10
+    "l93_ivf_delete_parity",  # last green r10
+    "st18_rocksdb_state_parity",  # last green r10
+    "st19_warc_tail_ingest",  # last green r10
+    "st20_stream_rollup_maintenance",  # last green r10
+    "st21_stream_chunk_dedup_ingest",  # last green r10
+    "st22_stream_bm25_maintenance",  # last green r10
+    "st23_stream_quality_gate",  # last green r10
+    "st24_stream_ivf_maintenance",  # last green r10
+    "r06_rollup",  # last green r11
+    "r09_join_broadcast_dims",  # last green r11
+    "r10_shipping_priority",  # last green r11
+    "r17_window_topk_per_group",  # last green r11
+    "r21_window_range_frame",  # last green r11
+    "r22_global_topk",  # last green r11
+    "r23_offset_limit",  # last green r11
+    "r24_set_ops",  # last green r11
+    "r25_string_funcs",  # last green r11
+    "r26_date_funcs",  # last green r11
+    "r27_math_funcs",  # last green r11
+    "r28_case_null",  # last green r11
+    "r29_json_extract",  # last green r11
+    "r30_array_ops",  # last green r11
+    "r31_higher_order_funcs",  # last green r11
+    "r32_in_subquery",  # last green r11
+    "r33_scalar_subquery",  # last green r11
 ]
 
 

@@ -10,15 +10,18 @@ differentially tested against exact baselines in pytest.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import pandas as pd
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from pyspark.sql import Window as W
 
 from ekati_spark.checkpoint import cut_lineage, cut_lineage_lazy
 
 from ekati_spark.catalog import load_table
+from ekati_spark.driverside import collect_bounded
 from ekati_spark.operators import dedup as D, sampling as P, similarity as S, text as X
 from ekati_spark.operators.multimodal import content_stats, with_media_columns
 from ekati_spark.scratch import mkscratch, rmscratch
@@ -10345,7 +10348,6 @@ def l128_mmr_diversified_topk(spark, sf_dir):
     page, never the corpus; the bound RAISES if the contract breaks).
     Scores stay Spark-computed doubles→micro ints, so no driver float
     op touches the comparison path."""
-    from ekati_spark.driverside import collect_bounded
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 7).select(
@@ -10508,7 +10510,6 @@ def l129_domain_reweighting(spark, sf_dir):
     l128 pattern; a mixture optimizer's state IS the domain table).
     Output: per domain, the diversity stats, excess, and the final
     ppm weight a sampler (l43/l47) consumes directly."""
-    from ekati_spark.driverside import collect_bounded
 
     docs = load_table(spark, sf_dir, "documents")
     tk = X.tokens(F.col("text"))
@@ -10873,26 +10874,107 @@ def l132_suffix_dedup_spans(spark, sf_dir):
     return D.suffix_window_spans(docs, cap=32, min_len=15)
 
 
-def _l133_store(spark, sf_dir) -> str:
-    """Build the NN-Descent k-NN graph ONCE per (session, sf_dir) and
-    persist its edge list — the navigable serving index graph-ANN reads."""
+_KNN_DIM = 64
+_L135_BASE = "vec_id % 23 != 0"  # l135/st35's frozen pre-insert corpus
+_L136_UPPER = "vec_id % 16 = 0"  # l136's sampled upper layer
 
-    def build() -> str:
-        base = mkscratch("l133_graph_")
-        emb = load_table(spark, sf_dir, "embeddings")
-        # Beefier build than l119's registered query (k=8 degree, two
-        # NN-Descent rounds): the store is built once and amortized, so
-        # build-time investment buys serve-time recall — measured
-        # overlap@5 at sf0.01: 0.26 (k=5, r=1) → 0.56 (k=8, r=2).
-        g = S.knn_graph_nndescent(
-            emb, k=8, n_planes=None, n_tables=4, rounds=2
+
+class _KnnGraph(NamedTuple):
+    edges: DataFrame  # directed (query_id, neighbor_id), persisted
+    adj: DataFrame  # undirected distinct (a, b), persisted at first read
+    n_planes: int  # the build's LSH planes, which an insert probes with
+
+
+def _knn_valid(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    return emb.filter(
+        F.col("embedding").isNotNull() & (F.size("embedding") == _KNN_DIM)
+    )
+
+
+def _knn_graph(spark, sf_dir, slot, k=5, rounds=1, where=None) -> _KnnGraph:
+    """The NN-Descent k-NN graph over the valid embeddings (those
+    matching the SQL predicate ``where``), built once per (session,
+    sf_dir) into store slot ``slot``: the graph-ANN index l133–l136 and
+    st35 serve, delete from and append to. Its directed edges are
+    persisted and filled at build; their undirected adjacency, which
+    every serve hop joins, is persisted too but fills at its first
+    read, so a slot whose callers read only the edges (l135, st35)
+    never builds it. The edges stay cached under every slot, also
+    where only the adjacency is served (l133, l136's upper layer):
+    they are its source until it fills. Measured at sf0.01, those
+    edges take 30 KB, and all four slots' frames 0.12 MB."""
+
+    def build() -> _KnnGraph:
+        corpus = _knn_valid(spark, sf_dir)
+        if where is not None:
+            corpus = corpus.filter(where)
+        n_planes = S.auto_n_planes(corpus.count())
+        edges = (
+            S.knn_graph_nndescent(
+                corpus, k=k, n_planes=n_planes, n_tables=4, dim=_KNN_DIM,
+                rounds=rounds,
+            )
+            .select("query_id", "neighbor_id")
+            .persist()
         )
-        g.select(
-            F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
-        ).write.mode("overwrite").parquet(f"{base}/edges")
-        return base
+        edges.count()
+        adj = S.undirected(edges, "query_id", "neighbor_id").toDF("a", "b")
+        return _KnnGraph(edges, adj.persist(), n_planes)
 
-    return get_or_build(spark, "l133_graph", sf_dir, build, rmscratch)
+    def dispose(g: _KnnGraph) -> None:
+        g.edges.unpersist()
+        g.adj.unpersist()
+
+    return get_or_build(
+        spark, slot, (sf_dir, k, rounds, where), build, dispose
+    )
+
+
+def _knn_corpus(spark, sf_dir):
+    """The valid embeddings with their norms, (id, v, nv), and the
+    query panel drawn from them, (query_id, qv, nq): both persisted
+    once per (session, sf_dir), the corpus and queries l133 and l136
+    route, re-rank and audit against. The panel is persisted apart
+    because every scoring join reads it: filtered from the cached
+    corpus per use, it rescans the whole corpus each time (measured at
+    sf0.01 on 4 cores: l136 warm 23 + 11 jobs and 4.8 s, against
+    19 + 9 jobs and 3.6 s persisted).
+
+    Panel: % 37 spreads queries across the id space, and the < 2048
+    cap pins |Q| <= 56 at ANY corpus size (l06's bounded-query
+    principle at panel scale). Without it the exact AUDIT arm, |Q|·n by
+    construction, silently grows quadratic as both |Q| and n scale with
+    the corpus (measured 97 s at sf1). All graded SFs have ids < 2048,
+    so the cap is invisible there."""
+
+    def build():
+        c = (
+            _knn_valid(spark, sf_dir)
+            .select(
+                F.col("vec_id").alias("id"),
+                F.col("embedding").alias("v"),
+                S.norm("embedding", _KNN_DIM).alias("nv"),
+            )
+            .persist()
+        )
+        q = (
+            c.filter((F.col("id") % 37 == 0) & (F.col("id") < 2048))
+            .select(
+                F.col("id").alias("query_id"),
+                F.col("v").alias("qv"),
+                F.col("nv").alias("nq"),
+            )
+            .persist()
+        )
+        q.count()  # also fills the corpus cache, which q is filtered from
+        return c, q
+
+    def dispose(cq) -> None:
+        for df in cq:
+            df.unpersist()
+
+    return get_or_build(spark, "knn_corpus", sf_dir, build, dispose)
 
 
 def _l133_oracle() -> str:
@@ -10959,14 +11041,16 @@ def l133_knn_graph_serve(spark, sf_dir):
     the triad: table-based LSH serves l127b's dense arm, partition-
     based IVF serves l108b, and here queries navigate a PERSISTED
     NN-Descent k-NN graph (l119's construction at beefier build
-    parameters — k=8, rounds=2 — built once per session/sf_dir into a
-    scratch store: the DiskANN/HNSW premise that the graph IS the
-    index and serve-time work is independent of corpus size): seeds =
-    the query's general neighbors (out- plus in-edges, undirected
-    degree ≤ 2k), candidates = the 2-hop expansion N(q) ∪ N(N(q))
-    (≤ 2k + (2k)² rows per query at fixed degree — serve cost is
-    Θ(|Q|·k²), never Θ(|Q|·n)), exact cosine re-rank to top-5, plus a
-    per-row ``in_exact_top5`` audit against the brute-force top-5
+    parameters — k=8, rounds=2 — built once per session/sf_dir and
+    persisted with its undirected adjacency in a session store: the
+    DiskANN/HNSW premise that the graph IS the index and serve-time
+    work is independent of corpus size): seeds = the query's general
+    neighbors (out- plus in-edges, undirected degree ≤ 2k), candidates
+    = the 2-hop expansion N(q) ∪ N(N(q)) (≤ 2k + (2k)² rows per query
+    at fixed degree — serve cost is Θ(|Q|·k²), never Θ(|Q|·n)), exact
+    cosine re-rank to top-5, plus a per-row ``in_exact_top5`` audit
+    against the brute-force top-5 — the serve kernel
+    ``similarity.graph_serve_topk``, shared with l136
     (the l127b ``in_exact_top10`` pattern — the committed recall
     evidence; measured overlap@5 0.56 at sf0.01 on the near-random
     synthetic embeddings, vs 0.26 for a degree-5/1-round graph —
@@ -10977,129 +11061,14 @@ def l133_knn_graph_serve(spark, sf_dir):
     — the graph CTE comes from the SAME parameterized generator as
     l119's oracle. The exact-audit arm is l06's sanctioned broadcast
     shape; the SERVING arms are equi-joins only."""
-    base = _l133_store(spark, sf_dir)
-    stored = spark.read.parquet(f"{base}/edges")
-    # undirected navigation: NN-Descent's general-neighbor relation
-    # (out- plus in-edges) — degree ≤ 2k, candidates ≤ 2k + (2k)²
-    edges = stored.unionByName(
-        stored.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-    ).distinct()
-    emb = load_table(spark, sf_dir, "embeddings")
-    dim = 64
-    valid = emb.filter(
-        F.col("embedding").isNotNull() & (F.size("embedding") == dim)
-    )
-    c = valid.select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("v")
-    ).withColumn("nv", S.norm("v", dim))
-    # bounded benchmark panel: % 37 spreads queries across the id
-    # space, the < 2048 cap pins |Q| <= 56 at ANY corpus size (l06's
-    # bounded-query principle at panel scale) — without it the exact
-    # AUDIT arm, |Q|·n by construction, silently grows quadratic as
-    # both |Q| and n scale with the corpus (measured 97 s at sf1).
-    # All graded SFs have ids < 2048, so the cap is invisible there.
-    q = c.filter((F.col("id") % 37 == 0) & (F.col("id") < 2048)).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("nq"),
-    )
-    h1 = (
-        q.select("query_id")
-        .join(edges, F.col("query_id") == F.col("src"))
-        .select("query_id", "dst")
-    )
-    e2 = edges.select(
-        F.col("src").alias("mid"), F.col("dst").alias("dst2")
-    )
-    h2 = h1.join(e2, F.col("dst") == F.col("mid")).select(
-        "query_id", F.col("dst2").alias("dst")
-    )
-    cand = (
-        h1.unionByName(h2)
-        .filter(F.col("dst") != F.col("query_id"))
-        .distinct()
-    )
-    cos = F.try_divide(
-        S.dot("qv", "v", dim), F.col("nq") * F.col("nv")
-    )
-    scored = (
-        cand.join(c.withColumnRenamed("id", "dst"), "dst")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", F.col("dst").alias("neighbor_id"),
-                F.round(cos, 6).alias("cosine"))
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    topk = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= 5
-    )
-    vq = valid.filter(
-        (F.col("vec_id") % 37 == 0) & (F.col("vec_id") < 2048)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    exact = S.brute_force_topk(valid, vq, k=5).select(
-        "query_id", F.col("neighbor_id").alias("x_id")
-    )
-    return (
-        topk.join(
-            exact,
-            (topk.query_id == exact.query_id)
-            & (topk.neighbor_id == exact.x_id),
-            "left",
-        )
-        .select(
-            topk.query_id,
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("x_id").isNotNull().cast("int").alias("in_exact_top5"),
-        )
-    )
-
-
-def _l134_store(spark, sf_dir) -> str:
-    """Full-corpus l119-parameter graph (k=5, rounds=1) for the
-    delete-consolidation query; like l135/l136's it is persisted, as a
-    production delete/append maintains an index it never rebuilds."""
-
-    def build() -> str:
-        base = mkscratch("l134_graph_")
-        emb = load_table(spark, sf_dir, "embeddings")
-        S.knn_graph_nndescent(emb, k=5, n_planes=None, n_tables=4).select(
-            "query_id", "neighbor_id"
-        ).write.mode("overwrite").parquet(f"{base}/edges")
-        return base
-
-    return get_or_build(spark, "l134_graph", sf_dir, build, rmscratch)
-
-
-def _l135_store(spark, sf_dir) -> str:
-    """BASE-corpus (vec_id % 23 != 0) l119-parameter graph shared by
-    the append query (l135) and its streaming twin (st35) — both
-    maintain the same frozen pre-insert index."""
-
-    def build() -> str:
-        base = mkscratch("l135_graph_")
-        emb = load_table(spark, sf_dir, "embeddings")
-        dim = 64
-        b = emb.filter(
-            F.col("embedding").isNotNull()
-            & (F.size("embedding") == dim)
-            & (F.col("vec_id") % 23 != 0)
-        )
-        S.knn_graph_nndescent(
-            b, k=5, n_planes=S.auto_n_planes(b.count()), n_tables=4
-        ).select("query_id", "neighbor_id").write.mode(
-            "overwrite"
-        ).parquet(f"{base}/edges")
-        return base
-
-    return get_or_build(spark, "l135_graph", sf_dir, build, rmscratch)
+    # Beefier build than l119's registered query (k=8 degree, two
+    # NN-Descent rounds): the store is built once and amortized, so
+    # build-time investment buys serve-time recall — measured
+    # overlap@5 at sf0.01: 0.26 (k=5, r=1) → 0.56 (k=8, r=2).
+    g = _knn_graph(spark, sf_dir, "l133_graph", k=8, rounds=2)
+    c, q = _knn_corpus(spark, sf_dir)
+    seeds = q.select("query_id", F.col("query_id").alias("node"))
+    return S.graph_serve_topk(seeds, g.adj, c, q, k=5, dim=_KNN_DIM)
 
 
 def _l134_oracle() -> str:
@@ -11191,16 +11160,14 @@ def l134_knn_graph_delete(spark, sf_dir):
     node, all id-keyed equi-joins (Θ(|affected|·k²) score pairs on
     top of the attested l119 build; see
     operators/similarity.py::knn_graph_delete_consolidate)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    dim = 64
-    g = spark.read.parquet(f"{_l134_store(spark, sf_dir)}/edges")
-    valid = emb.filter(
-        F.col("embedding").isNotNull() & (F.size("embedding") == dim)
-    )
+    valid = _knn_valid(spark, sf_dir)
+    g = _knn_graph(spark, sf_dir, "l134_graph").edges
     deleted = valid.filter(F.col("vec_id") % 23 == 0).select(
         F.col("vec_id").alias("id")
     )
-    adj = S.knn_graph_delete_consolidate(g, emb, deleted, k=5, dim=dim)
+    adj = S.knn_graph_delete_consolidate(
+        g, valid, deleted, k=5, dim=_KNN_DIM
+    )
     live = g.filter(F.col("query_id") % 23 != 0).select(
         F.col("query_id").alias("u"), F.col("neighbor_id").alias("x")
     )
@@ -11337,18 +11304,13 @@ def l135_knn_graph_append(spark, sf_dir):
     ANY skew, hop ×k, reverse patch ≤ |delta|·k nodes × (k+1)
     candidates — Θ(|delta|), never the corpus (see
     operators/similarity.py::knn_graph_insert)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    dim = 64
-    valid = emb.filter(
-        F.col("embedding").isNotNull() & (F.size("embedding") == dim)
-    )
-    base = valid.filter(F.col("vec_id") % 23 != 0)
+    valid = _knn_valid(spark, sf_dir)
+    base = valid.filter(_L135_BASE)
     delta = valid.filter(F.col("vec_id") % 23 == 0)
-    npl = S.auto_n_planes(base.count())
-    g = spark.read.parquet(f"{_l135_store(spark, sf_dir)}/edges")
+    g = _knn_graph(spark, sf_dir, "l135_graph", where=_L135_BASE)
     inserted, patched = S.knn_graph_insert(
-        g, base, delta, k=5, n_planes=npl, n_tables=4, dim=dim,
-        bucket_cap=64,
+        g.edges, base, delta, k=5, n_planes=g.n_planes, n_tables=4,
+        dim=_KNN_DIM, bucket_cap=64,
     )
     outagg = inserted.groupBy("did").agg(
         F.count("*").alias("out_degree"),
@@ -11371,31 +11333,6 @@ def l135_knn_graph_append(spark, sf_dir):
             F.coalesce("rev_links", zero).alias("rev_links"),
         )
     )
-
-
-def _l136_store(spark, sf_dir) -> str:
-    """UPPER-LAYER graph for routed serving: l119-parameter NN-Descent
-    among the deterministic 1/16 node sample (vec_id % 16 = 0) — the
-    HNSW upper-level construction (a sampled layer whose graph is
-    navigated greedily to find entry points into the base layer)."""
-
-    def build() -> str:
-        base = mkscratch("l136_l1_")
-        emb = load_table(spark, sf_dir, "embeddings")
-        dim = 64
-        l1 = emb.filter(
-            F.col("embedding").isNotNull()
-            & (F.size("embedding") == dim)
-            & (F.col("vec_id") % 16 == 0)
-        )
-        S.knn_graph_nndescent(
-            l1, k=5, n_planes=S.auto_n_planes(l1.count()), n_tables=4
-        ).select("query_id", "neighbor_id").write.mode(
-            "overwrite"
-        ).parquet(f"{base}/edges")
-        return base
-
-    return get_or_build(spark, "l136_l1", sf_dir, build, rmscratch)
 
 
 def _l136_oracle() -> str:
@@ -11502,163 +11439,76 @@ def l136_knn_graph_route_serve(spark, sf_dir):
     here the query arrives with no edges and is routed in — a greedy
     3-step descent over an UPPER-LAYER graph (l119-parameter
     NN-Descent on the deterministic 1/16 node sample, persisted in
-    its own store) from the 4 smallest-id entry points at BEAM WIDTH
-    2, each step keeping the top-2 micro-cosine nodes over (current
-    beam ∪ its undirected neighbors) — measured overlap@5 at sf0.01:
-    0.14 single-entry greedy → 0.30 at (4 entries, beam 2), with
-    (8, 3) only reaching 0.34 (the diminishing-returns knee; every
-    knob is a mirrored engine+oracle constant); the landing beam
-    seeds l133's base-layer 2-hop expansion + exact re-rank (query
-    excluded from candidates), with the committed ``in_exact_top5``
-    audit. Serve cost per query: 3·beam·(2k+1) routing scores +
-    ≤ beam·(2k+(2k)²) expansion candidates —
-    INDEPENDENT of corpus size (the logarithmic-layers premise,
+    its own session store slot, its entry points in another) from the 4
+    smallest-id entry points at BEAM WIDTH 2, each step keeping the
+    top-2 nodes by rounded cosine (the oracle's micro-cosine order)
+    over (current beam ∪ its undirected neighbors) — measured
+    overlap@5 at sf0.01: 0.14 single-entry greedy → 0.30 at (4
+    entries, beam 2), with (8, 3) only reaching 0.34 (the
+    diminishing-returns knee; every knob is a mirrored engine+oracle
+    constant); the landing beam seeds l133's serve kernel
+    (``similarity.graph_serve_topk``: base-layer 2-hop expansion +
+    exact re-rank, query excluded from candidates), with the
+    committed ``in_exact_top5`` audit. Serve cost per query:
+    3·beam·(2k+1) routing scores + ≤ beam·(2k+(2k)²) expansion
+    candidates — INDEPENDENT of corpus size (the logarithmic-layers premise,
     flattened to one upper layer at these SFs). Deterministic
     end-to-end: both layer graphs come from the shared NN-Descent
     generator (full layer = l134's store, upper layer from the 1/16
     predicate pushed into the generator's corpus CTE), the descent
     unrolls to 3 argmax CTEs, so the DuckDB oracle replays routing,
     expansion, re-rank, and audit exactly."""
-    from ekati_spark.driverside import collect_bounded  # noqa: PLC0415
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    dim = 64
-    valid = emb.filter(
-        F.col("embedding").isNotNull() & (F.size("embedding") == dim)
+    c, q = _knn_corpus(spark, sf_dir)
+    top = _knn_graph(spark, sf_dir, "l136_l1", where=_L136_UPPER)
+    entries = get_or_build(
+        spark, "l136_entries", sf_dir,
+        lambda: [
+            int(r.vec_id)
+            for r in collect_bounded(
+                _knn_valid(spark, sf_dir).filter(_L136_UPPER)
+                .select("vec_id").orderBy("vec_id").limit(4),
+                4,
+                "l136 entry points",
+            )
+        ],
     )
-    c = valid.select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("v"),
-        S.norm("embedding", dim).alias("nv"),
-    ).transform(cut_lineage)  # consumed per routing step + expansion
-    gfull = spark.read.parquet(f"{_l134_store(spark, sf_dir)}/edges")
-    gl1 = spark.read.parquet(f"{_l136_store(spark, sf_dir)}/edges")
-
-    def undirected(g):
-        return g.select(
-            F.col("query_id").alias("a"), F.col("neighbor_id").alias("b")
-        ).unionByName(
-            g.select(
-                F.col("neighbor_id").alias("a"), F.col("query_id").alias("b")
-            )
-        ).distinct()
-
-    u1 = undirected(gl1).transform(cut_lineage)  # 3 routing steps
-    uf = undirected(gfull).transform(cut_lineage)  # h1 + h2
-    qp = c.filter((F.col("id") % 37 == 0) & (F.col("id") < 2048)).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nv").alias("nq"),
-    ).transform(cut_lineage)  # joined by every scoring stage
-    entries = [
-        int(r.vec_id)
-        for r in collect_bounded(
-            valid.filter(F.col("vec_id") % 16 == 0)
-            .select("vec_id")
-            .orderBy("vec_id")
-            .limit(4),
-            4,
-            "l136 entry points",
-        )
-    ]
-
-    def micro(qv, nq, xv, nx):
-        # qv/xv are column NAMES: S.dot then parses the unrolled fold
-        # from ONE SQL string (identical tree) instead of ~6*dim py4j
-        # Column-API round-trips — this runs 4x per fn() build.
-        return (
-            F.floor(
-                F.round(F.try_divide(S.dot(qv, xv, dim), nq * nx), 6)
-                * 1000000
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("cmicro")
-        )
-
     cy = c.select(
         F.col("id").alias("y"), F.col("v").alias("vy"),
         F.col("nv").alias("ny"),
     )
-    cur = qp.select("query_id").withColumn(
+    nbr = top.adj.select(F.col("a").alias("node"), F.col("b").alias("y"))
+    cos = F.round(
+        F.try_divide(S.dot("qv", "vy", _KNN_DIM), F.col("nq") * F.col("ny")),
+        6,
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("y"))
+    cur = q.select("query_id").withColumn(
         "node",
         F.explode(F.array(*[F.lit(e).cast("long") for e in entries])),
     )
     for _ in range(3):
-        cands = cur.select(
-            "query_id", F.col("node").alias("y")
-        ).unionByName(
-            cur.join(u1, cur.node == u1.a).select(
-                "query_id", F.col("b").alias("y")
-            )
-        ).distinct()
-        scored = (
-            cands.join(cy, "y")
-            .join(qp, "query_id")
-            .select(
-                "query_id", "y",
-                micro("qv", F.col("nq"), "vy", F.col("ny")),
-            )
+        cands = (
+            cur.select("query_id", F.col("node").alias("y"))
+            .unionByName(cur.join(nbr, "node").select("query_id", "y"))
+            .distinct()
         )
-        w = W.partitionBy("query_id").orderBy(F.desc("cmicro"), F.asc("y"))
         cur = (
-            scored.withColumn("rn", F.row_number().over(w))
+            cands.join(cy, "y")
+            .join(q, "query_id")
+            .select("query_id", "y", cos.alias("cosine"))
+            .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= 2)
             .select("query_id", F.col("y").alias("node"))
             .transform(cut_lineage)  # consumed 2x by the next step
         )
-    h1 = cur.select(
-        "query_id", F.col("node").alias("x")
-    ).unionByName(
-        cur.join(uf, cur.node == uf.a).select(
-            "query_id", F.col("b").alias("x")
-        )
-    ).distinct().transform(cut_lineage)  # consumed 2x: union + h2 join
-    h2 = h1.join(
-        uf.select(F.col("a").alias("x"), F.col("b").alias("x2")), "x"
-    ).select("query_id", F.col("x2").alias("x"))
-    cand = (
-        h1.unionByName(h2)
-        .filter(F.col("x") != F.col("query_id"))
-        .distinct()
-    )
-    cx = c.select(
-        F.col("id").alias("x"), F.col("v").alias("vx"),
-        F.col("nv").alias("nx"),
-    )
-    scf = (
-        cand.join(cx, "x")
-        .join(qp, "query_id")
-        .select(
-            "query_id", F.col("x").alias("neighbor_id"),
-            micro("qv", F.col("nq"), "vx", F.col("nx")),
-        )
-    )
-    wf = W.partitionBy("query_id").orderBy(
-        F.desc("cmicro"), F.asc("neighbor_id")
-    )
-    topk = scf.withColumn("rank", F.row_number().over(wf)).filter(
-        F.col("rank") <= 5
-    )
-    vq = valid.filter(
-        (F.col("vec_id") % 37 == 0) & (F.col("vec_id") < 2048)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    exact = S.brute_force_topk(valid, vq, k=5).select(
-        "query_id", F.col("neighbor_id").alias("x_id")
-    )
-    return (
-        topk.join(
-            exact,
-            (topk.query_id == exact.query_id)
-            & (topk.neighbor_id == exact.x_id),
-            "left",
-        )
-        .select(
-            topk.query_id,
-            "neighbor_id",
-            "cmicro",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("x_id").isNotNull().cast("int").alias("in_exact_top5"),
-        )
+    full = _knn_graph(spark, sf_dir, "l134_graph")
+    return S.graph_serve_topk(cur, full.adj, c, q, k=5, dim=_KNN_DIM).select(
+        "query_id",
+        "neighbor_id",
+        # the integer micro-cosine: same order as the rounded cosine
+        F.floor(F.col("cosine") * 1000000 + F.lit(0.5))
+        .cast("bigint")
+        .alias("cmicro"),
+        "rank",
+        "in_exact_top5",
     )

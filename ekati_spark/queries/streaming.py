@@ -2276,27 +2276,24 @@ def st35_stream_graph_maintenance(spark, sf_dir):
     from pathlib import Path
 
     from ekati_spark.operators import similarity as S
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    dim = 64
-    valid = emb.filter(
-        F.col("embedding").isNotNull() & (F.size("embedding") == dim)
+    from ekati_spark.queries.llm import (
+        _KNN_DIM as dim, _L135_BASE, _knn_graph, _knn_valid,
     )
-    base = valid.filter(F.col("vec_id") % 23 != 0)
-    delta = valid.filter(F.col("vec_id") % 23 == 0)
-    npl = S.auto_n_planes(base.count())
-    from ekati_spark.queries.llm import _l135_store
 
-    # FROZEN index: the same persisted base-graph store l135
-    # maintains — built once per (session, sf_dir), read per trigger
-    g = spark.read.parquet(f"{_l135_store(spark, sf_dir)}/edges")
+    valid = _knn_valid(spark, sf_dir)
+    base = valid.filter(_L135_BASE)
+    delta = valid.filter(F.col("vec_id") % 23 == 0)
+    # FROZEN index: l135's persisted base graph — built once per
+    # (session, sf_dir), joined by every trigger
+    index = _knn_graph(spark, sf_dir, "l135_graph", where=_L135_BASE)
+    g = index.edges
     tmp = Path(mkscratch("st35_"))
     store = str(tmp / "edges")
     sink = ops.idempotent_batch_sink(store)
 
     def land(b, batch_id):
         ins, _ = S.knn_graph_insert(
-            g, base, b, k=5, n_planes=npl, n_tables=4, dim=dim,
+            g, base, b, k=5, n_planes=index.n_planes, n_tables=4, dim=dim,
             bucket_cap=64,
         )
         sink(ins, batch_id)
@@ -2313,7 +2310,7 @@ def st35_stream_graph_maintenance(spark, sf_dir):
         shutil.rmtree(tmp / f"b{m}")
         q = (
             spark.readStream.format("parquet")
-            .schema(emb.schema)
+            .schema(valid.schema)
             .load(str(src))
             .writeStream.foreachBatch(land)
             .option("checkpointLocation", str(tmp / "ck"))

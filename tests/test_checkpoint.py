@@ -12,8 +12,12 @@ import os
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from ekati_spark.checkpoint import (
     MODE_KEY,
+    cut_lineage,
+    cut_lineage_lazy,
     disable_reliable_checkpoints,
     enable_reliable_checkpoints,
 )
@@ -72,3 +76,20 @@ def test_follow_identical_under_reliable_checkpoint(spark, reliable):
     )
     assert rel == loc
     assert spark.conf.get(MODE_KEY, "local") == "local"
+
+
+def test_lazy_cut_runs_shuffle_stages_at_call_time(spark, job_ids):
+    """Under AQE a lazy cut is not free: planning it materializes every
+    shuffle stage below it, so it fires jobs at call time, only fewer
+    than the eager cut (which also runs the final stage)."""
+
+    def frame():
+        base = spark.range(400).select((F.col("id") % 7).alias("k"), "id")
+        per_key = base.groupBy("k").count()
+        return base.join(per_key, "k").select("k", "id").distinct()
+
+    _, eager = job_ids(lambda: cut_lineage(frame()))
+    _, lazy = job_ids(lambda: cut_lineage_lazy(frame()))
+    _, uncut = job_ids(frame)
+    assert len(uncut) == 0
+    assert 0 < len(lazy) < len(eager), (lazy, eager)

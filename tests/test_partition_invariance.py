@@ -52,6 +52,10 @@ CASES = [
     # supersteps over a session-stored relation built at one partition
     # count (the first run's, or an earlier test's), run at 3 and 17
     "g43_neighborhood_function",
+    # graph-ANN serves over session-stored graphs and corpus, likewise
+    # built at one partition count and served at 3 and 17
+    "l133_knn_graph_serve",
+    "l136_knn_graph_route_serve",
     # sessionization windows over event time
     "st03_session_window",
 ]

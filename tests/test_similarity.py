@@ -1018,7 +1018,7 @@ def test_l133_graph_serve_recall_and_store(spark):
     synthetic embeddings (measured 0.56 at sf0.01, 0.21 at sf0.001 for
     the k=8/rounds=2 store graph — floor pinned with margin), rank is
     dense 1..5 per query, and the per-(session, sf_dir) store is built
-    once (second call returns the cached path)."""
+    once (a second call returns the same entry and counts a hit)."""
     from ekati_spark import session_store
     from ekati_spark.queries import REGISTRY, llm as L
 
@@ -1034,11 +1034,110 @@ def test_l133_graph_serve_recall_and_store(spark):
             assert all(x.neighbor_id != q for x in rs)
         overlap = sum(r.in_exact_top5 for r in rows) / len(rows)
         assert overlap >= 0.10  # chance is ~5/500
-        base1 = L._l133_store(spark, sf)
-        base2 = L._l133_store(spark, sf)
-        assert base1 == base2
+        g1 = L._knn_graph(spark, sf, "l133_graph", k=8, rounds=2)
+        hits = session_store.stats()["l133_graph"]["hits"]
+        assert L._knn_graph(spark, sf, "l133_graph", k=8, rounds=2) is g1
+        assert session_store.stats()["l133_graph"]["hits"] == hits + 1
     finally:
-        session_store.evict(spark, "l133_graph")
+        for slot in ("l133_graph", "knn_corpus"):
+            session_store.evict(spark, slot)
+
+
+def test_knn_graph_store_new_sf_dir_unpersists_old(spark, sf_dir):
+    """A graph store slot holds one entry per session: building it for
+    a new sf_dir unpersists the old entry's edges and adjacency."""
+    from pathlib import Path
+
+    from pyspark import StorageLevel
+
+    from ekati_spark import session_store
+    from ekati_spark.queries import llm as L
+
+    def graph(sf):
+        return L._knn_graph(spark, sf, "l136_l1", where=L._L136_UPPER)
+
+    try:
+        old = graph(sf_dir)
+        assert old.edges.storageLevel != StorageLevel.NONE
+        assert old.adj.storageLevel != StorageLevel.NONE
+        new = graph(str(Path(sf_dir).with_name("sf0.01")))
+        assert old.edges.storageLevel == StorageLevel.NONE
+        assert old.adj.storageLevel == StorageLevel.NONE
+        assert new.adj.storageLevel != StorageLevel.NONE
+    finally:
+        session_store.evict(spark, "l136_l1")
+    assert new.edges.storageLevel == StorageLevel.NONE
+
+
+def _serve_reference(seeds, edges, vecs, queries, k):
+    """Pure-Python graph_serve_topk: seeds ∪ N ∪ N(N) minus the query,
+    top-k by 6-decimal cosine (NULL last, ties on id), audit flags."""
+    nbrs = {}
+    for a, b in edges:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+
+    def cos(x, y):
+        dot = sum(p * r for p, r in zip(vecs[x], vecs[y]))
+        den = math.sqrt(sum(p * p for p in vecs[x])) * math.sqrt(
+            sum(r * r for r in vecs[y])
+        )
+        return round(dot / den, 6) if den else None
+
+    def top(qid, ids):
+        scored = [(cos(qid, i), i) for i in ids]
+        scored.sort(key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]))
+        return scored[:k]
+
+    out = set()
+    for qid in queries:
+        h1 = {n for s, n in seeds if s == qid}
+        h1 |= {m for n in h1 for m in nbrs.get(n, ())}
+        cand = h1 | {m for n in h1 for m in nbrs.get(n, ())}
+        cand.discard(qid)
+        exact = {i for _, i in top(qid, [i for i in vecs if i != qid])}
+        for rank, (c, i) in enumerate(top(qid, cand), 1):
+            out.add((qid, i, c, rank, int(i in exact)))
+    return out
+
+
+def test_graph_serve_topk_matches_reference(spark):
+    """The serve kernel l133 and l136 share, on a planted adjacency:
+    a duplicated seed, a seed with no edges, tied cosines (identical
+    vectors 3 and 4, equal angles 1 and 6) and a zero-norm vector 9,
+    whose cosine is NULL and ranks last."""
+    dim, k = 4, 6
+    vecs = {
+        0: [1.0, 0.0, 0.0, 0.0], 1: [1.0, 1.0, 0.0, 0.0],
+        2: [1.0, 2.0, 0.0, 0.0], 3: [0.0, 1.0, 1.0, 0.0],
+        4: [0.0, 1.0, 1.0, 0.0], 5: [0.0, 0.0, 1.0, 1.0],
+        6: [1.0, 0.0, 1.0, 0.0], 7: [0.0, 0.0, 0.0, 1.0],
+        8: [2.0, 1.0, 0.0, 1.0], 9: [0.0, 0.0, 0.0, 0.0],
+    }
+    edges = [(0, 1), (1, 2), (1, 3), (2, 4), (0, 6), (5, 9), (3, 5), (2, 8)]
+    seeds = [(0, 0), (0, 0), (5, 7), (5, 3)]
+    c = spark.createDataFrame(
+        list(vecs.items()), "id long, v array<double>"
+    ).withColumn("nv", S.norm("v", dim))
+    q = c.filter(F.col("id").isin(0, 5)).select(
+        F.col("id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nv").alias("nq"),
+    )
+    adj = S.undirected(
+        spark.createDataFrame(edges, "a long, b long"), "a", "b"
+    )
+    got = S.graph_serve_topk(
+        spark.createDataFrame(seeds, "query_id long, node long"),
+        adj, c, q, k=k, dim=dim,
+    )
+    assert got.columns == [
+        "query_id", "neighbor_id", "cosine", "rank", f"in_exact_top{k}"
+    ]
+    rows = {tuple(r) for r in got.collect()}
+    assert rows == _serve_reference(seeds, edges, vecs, [0, 5], k)
+    # the zero-norm neighbor is served, with a NULL cosine, last
+    assert (5, 9, None, 6, 0) in rows
 
 
 def test_knn_graph_delete_consolidate_planted(spark):
@@ -1153,7 +1252,8 @@ def test_l136_routed_serve_external_query_contract(spark):
     query never appears among its own results, ranks are dense 1..5,
     and the greedy-routed 2-hop overlap@5 with the exact top-5 is
     above the random-candidate chance floor (~2.5% at sf0.001). The
-    upper-layer store is built once per (session, sf_dir)."""
+    upper-layer store is built once per (session, sf_dir): a second
+    call returns the same entry and counts a hit."""
     from ekati_spark import session_store
     from ekati_spark.queries import REGISTRY, llm as L
 
@@ -1169,9 +1269,13 @@ def test_l136_routed_serve_external_query_contract(spark):
             assert sorted(x.rank for x in rs) == list(range(1, len(rs) + 1))
         overlap = sum(r.in_exact_top5 for r in rows) / len(rows)
         assert overlap >= 0.05, overlap
-        base1 = L._l136_store(spark, sf)
-        base2 = L._l136_store(spark, sf)
-        assert base1 == base2
+        g1 = L._knn_graph(spark, sf, "l136_l1", where=L._L136_UPPER)
+        hits = session_store.stats()["l136_l1"]["hits"]
+        assert L._knn_graph(spark, sf, "l136_l1", where=L._L136_UPPER) is g1
+        assert session_store.stats()["l136_l1"]["hits"] == hits + 1
     finally:
-        for slot in ("l134_graph", "l135_graph", "l136_l1"):
+        for slot in (
+            "l134_graph", "l135_graph", "l136_l1", "l136_entries",
+            "knn_corpus",
+        ):
             session_store.evict(spark, slot)
