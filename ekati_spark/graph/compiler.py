@@ -2,14 +2,26 @@
 
 The reference executes the Step list as a lazy pull pipeline over node
 sequences (``src/core/FileStore.fs:343-396``); here each Step lowers to a
-DataFrame transformation and Catalyst replaces the reference's peephole
-fusion (``MergeSameSteps``, FileStore.fs:221-269) with CombineFilters/
-CombineLimits/CollapseProject (SURVEY §4: do not reimplement).
+DataFrame transformation and Catalyst replaces most of the reference's
+peephole fusion (``MergeSameSteps``, FileStore.fs:221-269) with
+CombineFilters/CombineLimits/CollapseProject (SURVEY §4). One fusion
+lives here: Catalyst does not combine an ``Offset`` across two sorts, so
+``run_get`` folds each run of ``skip``/``take`` steps into one ordered
+window, ``orderBy(remote, node_id).limit(k + n).offset(k)``, which plans
+as one TakeOrderedAndProject.
 
-Execution model: a query is a *node stream* (DataFrame of node_id) that
-steps transform; the terminal materialization returns the surviving
-nodes' attribute rows (long format), with latest-wins or history
-versioning (``Printers.cs:139-169``).
+Execution model: a query is a *node stream* (DataFrame of node_id,
+remote) that steps transform; the terminal materialization joins the
+stream to the props and returns the surviving nodes' attribute rows
+(long format), with latest-wins or history versioning
+(``Printers.cs:139-169``). The stream is a multiset: a follow hop and a
+filter are left-semi joins, which do not need the stream distinct, so
+only the consumers whose result depends on multiplicity (skip, take,
+transform plugins and the materialization's join) take ``distinct()``
+first, and Catalyst drops that ``distinct()`` where the stream is
+already distinct (after a follow or a skip/take window). A get with
+steps fires no Spark job until its action (a follow of more than one
+hop cuts its inner frontiers).
 
 Determinism: the reference's stream order is storage order; skip/limit
 here use the canonical node_id ordering (SURVEY §5d).
@@ -22,7 +34,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ekati_spark.checkpoint import cut_lineage
 from ekati_spark.graph import ir
 from ekati_spark.graph.model import PropertyGraph
 from ekati_spark.graph.parser import parse
@@ -129,8 +140,7 @@ class QueryEngine:
         if exact and len(fields_steps) == len(q.steps):
             # Step-free get (exact ids, only `fields` steps): the result
             # nodes ARE the seeds, so a literal predicate the scan pushes
-            # down replaces the universe distinct, the seed semi-join and
-            # the lineage cut — the frame builds with no Spark job. Steps
+            # down replaces the seed stream and its semi-join. Steps
             # that change the stream keep the path below: skip/take must
             # not count a seed that does not exist.
             return self._materialize(
@@ -138,8 +148,18 @@ class QueryEngine:
                 fields_steps, q.history,
             )
         stream = self._seed_stream(q.seeds)
+        window: list = []  # the current run of skip/take steps
         for step in q.steps:
-            stream = self._apply_wo_fields(stream, step)
+            if isinstance(step, ir.FieldsStep):
+                continue  # applied at materialization
+            if isinstance(step, (ir.SkipStep, ir.LimitStep)):
+                window.append(step)
+                continue
+            if window:
+                stream, window = self._skip_take(stream, window), []
+            stream = self._apply_step(stream, step)
+        if window:
+            stream = self._skip_take(stream, window)
         # When the result set provably stays inside the seed set (exact
         # iris, no expanding step), the attribute fetch reads only the
         # seeds' bucket partitions. Expanding steps (follow/transform)
@@ -190,15 +210,15 @@ class QueryEngine:
             # full scan (FileStore.fs:300-315)
             return self.graph.props.select("node_id", "remote").distinct()
         # point lookups: the seeds that exist, read with the seed
-        # partitions pruned and node_id IN pushed into the scan
+        # partitions pruned and node_id IN pushed into the scan; one row
+        # per attribute row (a multiset, module docstring)
         return (
             self._seed_props(seeds)
             .filter(self._seed_pred(seeds))
             .select("node_id", "remote")
-            .distinct()
         )
 
-    def _apply_wo_fields(self, stream: DataFrame, step) -> DataFrame:
+    def _apply_step(self, stream: DataFrame, step) -> DataFrame:
         if isinstance(step, ir.FollowStep):
             # traversal targets are plain iri refs (the cluster seam is
             # the shuffle, SURVEY §2 #22): followed nodes resolve in the
@@ -211,37 +231,51 @@ class QueryEngine:
                 ["node_id", "remote"],
                 "left_semi",
             )
-        if isinstance(step, ir.SkipStep):
-            return stream.orderBy("remote", "node_id").offset(step.n)
-        if isinstance(step, ir.LimitStep):
-            return stream.orderBy("remote", "node_id").limit(step.n)
-        if isinstance(step, ir.FieldsStep):
-            return stream  # applied at materialization
         if isinstance(step, ir.TransformStep):
             # user query-operator plugin by name (the reference's WASM
-            # seam, ekati_spark/plugins.py): gets the node stream + the
-            # graph, returns a node stream
+            # seam, ekati_spark/plugins.py): gets the node stream, each
+            # node once, + the graph, returns a node stream
             from ekati_spark.plugins import apply_stream_plugin
 
-            return apply_stream_plugin(stream, step.name, self.graph)
+            return apply_stream_plugin(stream.distinct(), step.name, self.graph)
         raise TypeError(f"unknown step {step!r}")
+
+    @staticmethod
+    def _skip_take(stream: DataFrame, steps) -> DataFrame:
+        """A run of skip/take steps as one ordered window over the
+        distinct stream: the same rows the steps return one by one, with
+        one sort. Folds each step into (offset, limit): ``skip k`` moves
+        the offset and shortens the limit, ``take n`` caps the limit."""
+        offset, limit = 0, None
+        for s in steps:
+            if isinstance(s, ir.SkipStep):
+                offset += s.n
+                limit = None if limit is None else max(limit - s.n, 0)
+            else:
+                limit = s.n if limit is None else min(limit, s.n)
+        if limit is None and offset == 0:
+            return stream  # `skip 0`: every node, in no particular order
+        ordered = stream.distinct().orderBy("remote", "node_id")
+        if limit is not None:
+            ordered = ordered.limit(offset + limit)
+        return ordered.offset(offset) if offset else ordered
 
     def _filter_nodes(self, pred) -> DataFrame:
         """(node_id, remote) set satisfying the compare tree. Compounds
         evaluate at *node* level (FileStore.fs:140-164: leaf = ∃
         attribute): '&&' is the intersection of matching node sets (a
         node may satisfy each side via different attribute rows), '||'
-        the union."""
+        the union. The set is a multiset: it is only ever the build side
+        of a left-semi join."""
         if isinstance(pred, ir.Compound):
             l = self._filter_nodes(pred.left)
             r = self._filter_nodes(pred.right)
             if pred.bool_op == "&&":
                 return l.join(r, ["node_id", "remote"], "left_semi")
-            return l.unionByName(r).distinct()
+            return l.unionByName(r)
         return (
             self.graph.props.filter(self._compare_col(pred))
             .select("node_id", "remote")
-            .distinct()
         )
 
     def _compare_col(self, pred) -> F.Column:
@@ -330,15 +364,19 @@ class QueryEngine:
         # with it — and the window then runs over only the result nodes'
         # rows instead of the whole store (the reference merges
         # fragments per looked-up node, never store-wide;
-        # NodeAttrIndex.cs:96-105). Catalyst cannot push a semi-join
+        # NodeAttrIndex.cs:96-105). Catalyst does not push the join
         # below a window on its own.
         if isinstance(nodes, DataFrame):
-            # only stream-changing steps get here: the stream is
-            # result-node-id sized and materialized so the traversal
-            # subtree is not re-planned into the window input
-            props = props.join(
-                nodes.transform(cut_lineage), ["node_id", "remote"], "left_semi"
-            )
+            # No cut: the stream has this one consumer, so an eager cut
+            # would only run its plan as build jobs before the action
+            # (checkpoint.py: cut eagerly only for >= 2 consumers). An
+            # inner join, not a semi-join: Catalyst pushes a semi-join
+            # into every branch of a union props frame (from_relational),
+            # which runs the whole stream plan once per branch (g46 at
+            # sf0.1, 4 cores: 2.3 -> 3.3 s). Catalyst removes the
+            # distinct this needs when the stream is already distinct
+            # (after a follow or a skip/take window).
+            props = props.join(nodes.distinct(), ["node_id", "remote"])
         else:
             props = props.filter(nodes)
         pruned = PropertyGraph(props)

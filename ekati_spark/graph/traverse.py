@@ -16,11 +16,15 @@ Semantics (mirroring the reference):
   matches the uniqueness the tests assert, ``Tests.fs:882-900``).
 - Hop 0 (the seeds) is emitted iff the range includes 0.
 
-Scale design: frontier and visited stay DataFrames (never collected);
-each hop is ``frontier ⋈ edges`` shuffling on the edge key only. Each
-hop's result is eagerly ``localCheckpoint``-ed (it feeds ≥3 downstream
-plans; see ``follow``'s docstring), which also caps lineage growth
-(bounded hops make the driver loop safe; SURVEY §7 risks).
+Scale design: frontier and visited stay DataFrames (never collected).
+Each hop is a left-semi join ``hop_edges ⋉ frontier`` on ``src =
+node_id`` (Pregelix: a message-passing superstep is a join whose type
+the planner picks), so the frontier is only probed, never made
+distinct: a node stream may repeat a node and the hop returns the same
+edges. AQE broadcasts the frontier when it is small. Each non-final
+hop's result is eagerly cut (it feeds 3 downstream plans; see
+``follow``'s docstring), which also caps lineage growth (bounded hops
+make the driver loop safe; SURVEY §7 risks); the final hop stays lazy.
 """
 
 from __future__ import annotations
@@ -107,7 +111,6 @@ def follow(
     edges,
     seeds: DataFrame,
     spec,
-    dedup: bool = True,
     with_hop: bool = False,
     max_frontier: int | None = None,
     on_overflow: str = "error",
@@ -122,18 +125,24 @@ def follow(
     partition-pruned scan, the reference's per-hop remote partition
     lookup). Semantics are identical either way.
 
+    ``seeds`` may repeat a node: every hop is a left-semi join of the
+    hop's edges against the frontier, which returns each matching edge
+    once however often its source appears, and the per-hop ``groupBy``
+    and the final one reduce the reached nodes to one row each.
+
     Returns a DataFrame of ``node_id`` (plus ``hop`` when ``with_hop``) of
     every node emitted by the follow spec, deduplicated query-wide.
 
-    Each hop's frontier is **eagerly localCheckpoint-ed**: the next hop's
-    join, the visited anti-join, and the emitted union all reference the
-    same per-hop plan, and without materialization the lazy DAG recomputes
-    every earlier hop's edge scan 3-4x per hop (exponential in hop count).
-    The frontier is tiny relative to the edge table, so the checkpoint is
-    cheap; the edge scan stays pruned per hop because ``_expand_pred``
-    pushes the label predicate into the scan (constant-folding prunes
-    union branches -- only the tables a hop can reach are read). AQE
-    broadcasts the checkpointed frontier when it is small.
+    Each non-final hop's frontier is **eagerly cut** (``cut_lineage``):
+    the next hop's join, the visited anti-join, and the emitted union
+    all reference the same per-hop plan, and without materialization the
+    lazy DAG recomputes every earlier hop's edge scan 3-4x per hop
+    (exponential in hop count). The frontier is tiny relative to the
+    edge table, so the cut is cheap; the edge scan stays pruned per hop
+    because ``_expand_pred`` pushes the label predicate into the scan
+    (constant-folding prunes union branches -- only the tables a hop can
+    reach are read). The final hop has one consumer and stays lazy, so
+    a one-hop follow fires no job of its own.
 
     ``max_frontier`` guards against adversarial fan-out (a super-node
     exploding a hop into a frontier that swamps the next join). When a
@@ -144,12 +153,12 @@ def follow(
     lowest node_ids (deterministic total order) and continue — emitted
     results are then a documented UNDER-approximation, the shape a
     bounded interactive explorer wants. The per-hop count this costs
-    reads the already-checkpointed frontier, not the edge table; with
+    reads the already-cut frontier, not the edge table; with
     ``max_frontier=None`` (default) no count job runs.
     """
     if on_overflow not in ("error", "truncate"):
         raise ValueError(f"on_overflow must be error|truncate: {on_overflow}")
-    seeds = seeds.select("node_id").distinct()
+    seeds = seeds.select("node_id")
     max_hop = _max_hops(spec)
 
     emitted: list[DataFrame] = []
@@ -160,19 +169,24 @@ def follow(
     frontier = seeds
     for hop in range(1, max_hop + 1):
         hop_edges = edges(frontier, hop) if callable(edges) else edges
+        # semi-join on the frontier's own node_id: at hop 1 the frontier
+        # and the visited set are the same seeds plan, so AQE reuses one
+        # broadcast of it for this join and the anti-join below
         step = (
-            frontier.join(hop_edges, frontier.node_id == hop_edges.src)
+            hop_edges.join(
+                frontier, hop_edges.src == frontier.node_id, "left_semi"
+            )
             .filter(_expand_pred(spec, hop))
             .select(
                 F.col("dst").alias("node_id"),
                 _emit_pred(spec, hop).alias("__emit"),
             )
+            .groupBy("node_id")
+            .agg(F.max("__emit").alias("__emit"))
+            .join(visited, "node_id", "left_anti")
         )
-        if dedup:
-            step = step.groupBy("node_id").agg(F.max("__emit").alias("__emit"))
-            step = step.join(visited, "node_id", "left_anti")
         if hop < max_hop:
-            # materialize: consumed by >=3 downstream plans (next join,
+            # materialize: consumed by 3 downstream plans (next join,
             # visited, emit); the last hop is consumed once -- stay lazy.
             step = step.transform(cut_lineage)
             if max_frontier is not None and step.count() > max_frontier:
@@ -181,10 +195,8 @@ def follow(
                         f"follow hop {hop} frontier exceeds "
                         f"max_frontier={max_frontier}"
                     )
-                # __emit in the sort key: with dedup=False node_id rows
-                # repeat and the order must stay total for determinism
                 step = (
-                    step.orderBy("node_id", "__emit")
+                    step.orderBy("node_id")
                     .limit(max_frontier)
                     .transform(cut_lineage)
                 )
@@ -194,16 +206,14 @@ def follow(
                 "hop", F.lit(hop)
             )
         )
-        if dedup:
-            # no checkpoint: a union of already-checkpointed frontiers —
-            # recompute is a cheap in-memory union, not an edge scan.
-            visited = visited.unionByName(new_frontier).distinct()
+        # no cut: a union of already-cut frontiers and the seeds, read
+        # only by the next hop's anti-join, which needs no distinct rows
+        visited = visited.unionByName(new_frontier)
         frontier = new_frontier
 
     out = emitted[0]
     for e in emitted[1:]:
         out = out.unionByName(e)
-    if dedup:
-        # one row per node (min hop), mirroring emit-once semantics
-        out = out.groupBy("node_id").agg(F.min("hop").alias("hop"))
+    # one row per node (min hop), mirroring emit-once semantics
+    out = out.groupBy("node_id").agg(F.min("hop").alias("hop"))
     return out if with_hop else out.select("node_id")

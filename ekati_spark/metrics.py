@@ -208,11 +208,12 @@ def run_with_observation(df, *metric_cols, name: str = "obs"):
 
 # -- per-run profiling -------------------------------------------------------
 
-# Physical operators a plan summary counts, by key. ``exchanges`` counts
-# shuffle Exchange operators: broadcasts and reused exchanges are not
-# shuffles of their own.
+# Physical operators a plan summary counts, by key: a pattern matched
+# against each node of the plan's final tree (``final_tree``).
+# ``exchanges`` counts shuffle Exchange operators: broadcasts and reused
+# exchanges are not shuffles of their own.
 PLAN_OPS = {
-    "exchanges": r"(?m)^[\s:+\-*]*Exchange ",
+    "exchanges": r"^Exchange ",
     "smj": r"SortMergeJoin",
     "bhj": r"BroadcastHashJoin",
     "shj": r"ShuffledHashJoin",
@@ -224,9 +225,34 @@ PLAN_OPS = {
 TOP_STAGES = 5
 
 
+def final_tree(plan: str) -> list[tuple[int, str]]:
+    """(depth, node) per node of a physical plan's tree, from its tree
+    string (``executedPlan().toString()``) or its formatted description
+    (``explain("formatted")``, whose node details follow the first blank
+    line). Left out: header lines, AQE's initial plan, and the subtree
+    under each ``InMemoryRelation`` -- the plan that built a persisted
+    frame, which a read of the frame does not run."""
+    rows, skip = [], None
+    for line in plan.split("\n\n")[0].splitlines():
+        node = line.lstrip(" :+-")
+        depth = len(line) - len(node)
+        if skip is not None and depth > skip:
+            continue
+        if node.startswith("== Initial Plan =="):  # the tree's last branch
+            break
+        skip = depth if node.startswith("InMemoryRelation") else None
+        if not node.startswith("=="):
+            rows.append((depth, node))
+    return rows
+
+
 def plan_ops(plan: str) -> dict[str, int]:
-    """``PLAN_OPS`` counts of a physical plan's tree string."""
-    return {k: len(re.findall(pat, plan)) for k, pat in PLAN_OPS.items()}
+    """``PLAN_OPS`` counts of a physical plan's final tree."""
+    nodes = [node for _, node in final_tree(plan)]
+    return {
+        k: sum(1 for node in nodes if re.search(pat, node))
+        for k, pat in PLAN_OPS.items()
+    }
 
 
 @contextmanager

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark import StorageLevel
 
 from ekati_spark import session_store
+from ekati_spark.metrics import final_tree
 from ekati_spark.queries import REGISTRY
 from ekati_spark.queries.graph import _copurchase
 
@@ -29,26 +30,10 @@ def _sql_plans(spark, job_ids) -> list[str]:
     return out
 
 
-def _final_tree(plan: str) -> list[tuple[int, str]]:
-    """(depth, node) per line of the plan's tree, leaving out AQE's
-    initial plan and the plans that built cached relations."""
-    rows, skip = [], None
-    for line in plan.split("\n\n")[0].splitlines()[1:]:
-        node = line.lstrip(" :+-")
-        depth = len(line) - len(node)
-        if skip is not None and depth > skip:
-            continue
-        if node.startswith("== Initial Plan =="):  # the tree's last branch
-            break
-        skip = depth if node.startswith("InMemoryRelation") else None
-        rows.append((depth, node))
-    return rows
-
-
 def _shuffles_over_cache(plan: str) -> int:
     """Shuffle Exchanges whose input is an InMemoryTableScan, reached
     through projections and filters only."""
-    rows, n = _final_tree(plan), 0
+    rows, n = final_tree(plan), 0
     for i, (depth, node) in enumerate(rows):
         if not node.startswith("Exchange"):
             continue

@@ -156,3 +156,27 @@ def test_back_to_back_profiles_count_the_same_jobs(spark):
     b = profile(spark, build, "b")
     keys = ("build_jobs", "action_jobs", "build_stages", "action_stages")
     assert [a[k] for k in keys] == [b[k] for k in keys]
+
+
+def test_plan_ops_counts_no_exchange_of_a_cached_build(spark):
+    """A plan that reads a persisted groupBy frame runs none of the
+    frame's build plan: its Exchange, printed under the
+    InMemoryRelation, is not counted."""
+    from ekati_spark.metrics import plan_ops
+
+    cached = (
+        spark.range(0, 1_000).groupBy((F.col("id") % 7).alias("k")).count()
+    ).persist()
+    try:
+        cached.count()
+        df = cached.filter(F.col("k") > 2).select("k")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" in plan and "Exchange hashpartitioning" in plan
+        assert plan_ops(plan)["exchanges"] == 0
+        # a shuffle of the query's own still counts
+        df = cached.groupBy("count").count()
+        assert plan_ops(df._jdf.queryExecution().executedPlan().toString())[
+            "exchanges"
+        ] == 1
+    finally:
+        cached.unpersist()

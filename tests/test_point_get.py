@@ -1,16 +1,20 @@
 """Exact-id seeds are read through a literal predicate on the props
 scan. Step-free gets (only ``fields`` steps) must answer exactly as the
 general path does and build with no Spark job; traversals from exact
-seeds stream only the seeds that exist, each once. Both hold in memory
-and on a bucketed layout."""
+seeds stream only the seeds that exist, each once, and build with no
+Spark job either. A run of skip/take steps is one ordered window over
+the distinct stream. All of it holds in memory and on a bucketed
+layout."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from ekati_spark.graph.compiler import QueryEngine
 from ekati_spark.graph.model import PropertyGraph
 from ekati_spark.graph.storage import write_bucketed_props
+from ekati_spark.plugins import PLUGINS, register_plugin
 from ekati_spark.schemas import PROPS_SCHEMA, prop_row
 
 
@@ -111,9 +115,111 @@ def test_exact_seed_traversals(spark, graphs, kind):
         assert sorted(got) == sorted(want), q
 
 
+# latest (node_id, remote, key, ts) rows of single nodes
+_N5 = [("n5", "", "knows", 2), ("n5", "", "knows", 2), ("n5", "", "size", 1)]
+_N6 = [("n6", "", "size", 1)]
+_N7 = [("n7", "", "knows", 2), ("n7", "", "name", 2), ("n7", "", "size", 5)]
+_N8 = [("n8", "", "size", 1)]
+# the distinct stream in (remote, node_id) order is n5, n6, n7, n8,
+# far n7; n5 and n7 have several attribute rows each
+_WINDOW_SEEDS = 'get "n7", "n5", "n6", "far" "n7", "n5", "missing", "n8"'
+_WINDOWS = {
+    "skip 1 |> take 2": _N6 + _N7,
+    "take 3 |> skip 1": _N6 + _N7,
+    "skip 1 |> skip 2": _N8 + _N7_FAR,
+    "take 4 |> take 2": _N5 + _N6,
+    "take 2 |> skip 3": [],
+    "skip 1 |> take 3 |> skip 1 |> take 5": _N7 + _N8,
+    "skip 2 |> fields \"size\":* |> take 1": [("n7", "", "size", 5)],
+    "skip 4": _N7_FAR,
+}
+
+
+@pytest.mark.parametrize("kind", ["memory", "bucketed"])
+def test_skip_take_windows(spark, graphs, kind):
+    """Runs of skip/take steps count each node once, in (remote,
+    node_id) order, whatever the order and repeats of the seeds."""
+    engine = QueryEngine(spark, graph=graphs[kind])
+    for steps, want in _WINDOWS.items():
+        q = f"{_WINDOW_SEEDS} |> {steps}"
+        got = [(r.node_id, r.remote, r.key, r.ts) for r in engine.execute(q).collect()]
+        assert sorted(got) == sorted(want), q
+
+
+_STREAM_CASES = {
+    # a duplicated and a missing seed under skip 0: n5 once
+    'get "n5", "n5", "missing" |> skip 0': _N5,
+    # -h keeps repeated rows: each of n5's rows once
+    'get -h "n5", "n5", "missing" |> skip 0': _N5,
+    # n5 matches one side of the `||`; take counts it once, not per row
+    'get "n7", "n5", "n6" |> filter ("size" == 5 || "size" == 6)'
+    ' |> take 2': _N5 + _N6,
+    # n6 matches both sides
+    'get "n6", "n9" |> filter ("size" == 6 || "size" < 7) |> take 1': _N6,
+    # the plugin sees n5 and n6, one row each, and names node n2
+    'get "n5", "n5", "n6", "missing" |> transform "count_stream_rows"':
+        [("n2", "", "size", 1)],
+}
+
+
+@pytest.fixture()
+def count_plugin():
+    """A stream plugin that returns one node, ``n<input rows>``."""
+    saved = dict(PLUGINS)
+
+    @register_plugin("count_stream_rows", kind="stream")
+    def count_stream_rows(stream, graph):
+        return stream.groupBy().count().select(
+            F.concat(F.lit("n"), F.col("count").cast("string")).alias("node_id")
+        )
+
+    yield
+    PLUGINS.clear()
+    PLUGINS.update(saved)
+
+
+@pytest.mark.parametrize("kind", ["memory", "bucketed"])
+def test_stream_steps_see_each_node_once(spark, graphs, kind, count_plugin):
+    """skip, take and transform plugins read the stream as a set: a
+    duplicated seed, a node with many attribute rows and a node on both
+    sides of `||` each count once."""
+    engine = QueryEngine(spark, graph=graphs[kind])
+    for q, want in _STREAM_CASES.items():
+        got = [(r.node_id, r.remote, r.key, r.ts) for r in engine.execute(q).collect()]
+        assert sorted(got) == sorted(want), q
+
+
 def test_one_hop_build_jobs(spark, graphs, job_ids):
     """A one-hop traversal from an exact seed on the bucketed layout
-    builds with at most 4 Spark jobs."""
+    builds with no Spark job."""
     engine = QueryEngine(spark, graph=graphs["bucketed"])
     _, jobs = job_ids(lambda: engine.execute('get "n7" |> follow "knows" 1'))
-    assert len(jobs) <= 4, jobs
+    assert jobs == [], jobs
+
+
+# the served traversal shapes besides one_hop, on this fixture's edges
+_SHAPES = {
+    "two_hop": 'get "n5" |> follow "knows" 1 |> follow "knows" 1',
+    "follow_filter_fields": 'get "n5" |> follow "knows" 1'
+    ' |> filter "size" > 7 |> fields "size":*',
+    "follow_skip_limit": 'get "n5" |> follow "knows" 1 |> skip 1 |> take 2',
+}
+
+
+def test_traversal_shapes_run_as_one_action(spark, graphs, job_ids):
+    """The served traversal shapes build with no Spark job, and the fused
+    `skip 1 |> take 2` window fires no more jobs than `take 2`."""
+    engine = QueryEngine(spark, graph=graphs["bucketed"])
+    for name, q in _SHAPES.items():
+        _, jobs = job_ids(lambda: engine.execute(q))
+        assert jobs == [], (name, jobs)
+
+    def action_jobs(q):
+        df = engine.execute(q)
+        rows, jobs = job_ids(df.collect)
+        return sorted(r.node_id for r in rows), len(jobs)
+
+    fused, fused_jobs = action_jobs(_SHAPES["follow_skip_limit"])
+    taken, take_jobs = action_jobs('get "n5" |> follow "knows" 1 |> take 2')
+    assert (fused, taken) == (["n9"], ["n6", "n9"])
+    assert fused_jobs <= take_jobs, (fused_jobs, take_jobs)
