@@ -1501,17 +1501,19 @@ def suffix_window_spans(
     duplicated substring of length l <= cap makes two suffixes agree on
     their first l tokens, i.e. sort-adjacent neighbors with LCP >= l.
     So: posexplode suffix positions -> slice the ``cap``-token window
-    -> ONE distributed range-sort with a global row index
-    (``sampling.ordered_row_number`` — range-repartition + per-partition
-    offsets, never a single-reducer window) -> adjacent-pair equi-join
-    on the index -> token-level LCP as a codegen'd zip_with/
+    -> ONE distributed sort with a global row index and in-row
+    sort-neighbors (``sampling.ordered_row_number`` over a sampled
+    range layout: per-partition offsets and boundary neighbors come
+    from one distributed aggregate broadcast back, never a
+    single-reducer window) -> token-level LCP as a codegen'd zip_with/
     array_position expression -> per-suffix dup_len = max(LCP with
     sort-predecessor, LCP with sort-successor) -> per-doc aggregate.
 
     Scale shape: every stage is linear in corpus tokens — suffix rows
     carry <= cap tokens (~cap * avg-token bytes each), the sort is
-    Spark's range-partitioned sort, adjacency is an equi-join on a
-    dense long, and the window-free LCP keeps whole-stage codegen. At
+    Spark's range-partitioned sort plus one window per partition,
+    adjacency is a lead/lag in that window, and the LCP keeps
+    whole-stage codegen. At
     100 TB the sort IS the cost (the published distributed suffix-array
     bound); ``cap`` bounds both row width and comparison depth, and is
     a semantic parameter, not an approximation: dedup thresholds

@@ -24,9 +24,13 @@ the training-pipeline extension (SURVEY §2.3).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
-
-from ekati_spark.driverside import local_rows_df
+from pyspark.sql import (
+    Column,
+    DataFrame,
+    Observation,
+    Window as W,
+    functions as F,
+)
 
 _SPACE = 16**8
 
@@ -173,6 +177,89 @@ def domain_mix(
     )
 
 
+def _num_partitions(df: DataFrame, num_partitions: int | None) -> int:
+    return int(
+        num_partitions
+        or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+
+
+def _pinned(
+    df: DataFrame,
+    order_cols: list[str],
+    n: int,
+    bucket_col: Column | None = None,
+) -> DataFrame:
+    """``df`` plus ``_pid``, a partition id monotone non-decreasing in
+    the ``order_cols`` total order (every row of ``_pid`` i sorts before
+    every row of ``_pid`` i+1), hash-partitioned on ``_pid`` and
+    persisted.
+
+    ``_pid`` is ``bucket_col`` when the caller has a deterministic
+    monotone bucket (``global_shuffle``'s hash prefix); otherwise it is
+    the partition id of a sampled ``repartitionByRange`` on the order
+    columns (string keys: ``dedup.suffix_window_spans``, the weight
+    line of ``weighted_systematic_sample``). The range sample is
+    re-drawn per job, so the persist is what makes the offset aggregate
+    and the window that consume this frame see one set of boundaries;
+    for a bucket it only saves recomputing the input (a 100-TB
+    deployment re-derives a narrow projection per pass instead).
+    ``hashpartitioning(_pid)`` sorted on (``_pid``, *order_cols*)
+    satisfies both the offset aggregate's and the window's clustering
+    and ordering, so neither consumer re-shuffles or re-sorts the
+    cache."""
+    if bucket_col is None:
+        df = df.repartitionByRange(n, *order_cols)
+        bucket_col = F.spark_partition_id()
+    return (
+        df.withColumn("_pid", bucket_col.cast("long"))
+        .repartition(n, F.col("_pid"))
+        .sortWithinPartitions("_pid", *order_cols)
+        .persist()
+    )
+
+
+def _offsets(
+    pinned: DataFrame, weight: Column, **per_partition: Column
+) -> DataFrame:
+    """``(_pid, _off, *per_partition)``: ``_off`` is the exclusive
+    running sum of ``weight`` over the ``_pid`` order, each partition's
+    start on the global line (a row count for ``weight = 1``);
+    ``per_partition`` names extra aggregates over each ``_pid``.
+
+    A per-``_pid`` aggregate and a running-sum window over its
+    #partitions rows, broadcast back on ``_pid`` by the caller: no
+    driver round-trip and a constant-size plan, so the offsets fold
+    into the caller's one action. Replaying collected offsets as a
+    literal frame instead re-analyzed a thousands-of-structs
+    expression tree on every build (l32 measured 18.7 s at sf1 against
+    sub-3 s)."""
+    per = pinned.groupBy("_pid").agg(
+        F.sum(weight).alias("_s"),
+        *[c.alias(name) for name, c in per_partition.items()],
+    )
+    before = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
+    return per.withColumn(
+        "_off", F.coalesce(F.sum("_s").over(before), F.lit(0))
+    ).drop("_s")
+
+
+def _total(df: DataFrame, col: Column):
+    """``sum(col)`` over ``df`` in one Spark job with no shuffle: an
+    Observation rides a noop write and the tasks' partial sums merge on
+    the driver (``agg().first()`` runs a shuffle map job and a result
+    job under AQE)."""
+    obs = Observation()
+    (
+        df.select(col.alias("_v"))
+        .observe(obs, F.sum("_v").alias("s"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    return obs.get["s"]
+
+
 def weighted_systematic_sample(
     df: DataFrame,
     key_col: str,
@@ -192,44 +279,25 @@ def weighted_systematic_sample(
     e.g. a token-budget-proportional eval slice.
 
     Scale shape (the reason this isn't one ``row_number`` window): the
-    prefix sum is two-level — range-repartition by key, per-partition
-    weight totals (a #partitions-row collect), broadcast the partition
-    offsets, and a partition-local window adds the within-partition
-    prefix. No single-partition global window; shuffle is the one range
-    exchange. The sorted frame is persisted so the offset job and the
-    output job see identical range boundaries (same rationale as
-    ``global_shuffle``). Intermediate products ``k·cum`` stay in int64 —
-    safe while ``k·W < 2^63`` (true for any corpus where W counts
-    chars/tokens and k ≤ ~1e5; switch the two products to
-    ``decimal(38,0)`` past that).
+    prefix sum is two-level — range-partition by key (``_pinned``),
+    per-partition weight offsets (``_offsets``), and a
+    partition-local window adds the within-partition prefix. No
+    single-partition global window and no driver round-trip for the
+    offsets. The one eager job is the total weight ``W``: the pick
+    formula needs it as a literal, and a non-positive total raises
+    ``ValueError`` here instead of dividing by zero in the action.
+    Intermediate products ``k·cum`` stay in int64 — safe while
+    ``k·W < 2^63`` (true for any corpus where W counts chars/tokens and
+    k ≤ ~1e5; switch the two products to ``decimal(38,0)`` past that).
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    n = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     w = F.col(weight_col).cast("bigint")
-    rng = (
-        df.withColumn("_w", w)
-        .repartitionByRange(n, key_col)
-        .sortWithinPartitions(key_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    per = {
-        r["_pid"]: r["s"]
-        for r in rng.groupBy("_pid").agg(F.sum("_w").alias("s")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in range(n):
-        offsets.append((pid, acc))
-        acc += per.get(pid, 0)
-    total = acc
+    total = _total(df, w) or 0
     if total <= 0:
         raise ValueError("total weight must be positive")
-    off = local_rows_df(
-        df.sparkSession, offsets, "_pid int, _off long"
+    rng = _pinned(
+        df.withColumn("_w", w), [key_col], _num_partitions(df, num_partitions)
     )
     win = (
         W.partitionBy("_pid")
@@ -241,7 +309,7 @@ def weighted_systematic_sample(
         f"(({k} * _cum) div {total})"
     )
     return (
-        rng.join(F.broadcast(off), "_pid")
+        rng.join(F.broadcast(_offsets(rng, F.col("_w"))), "_pid")
         .withColumn("_cum", cum)
         .withColumn("n_picks", picks)
         .filter(F.col("n_picks") > 0)
@@ -254,63 +322,50 @@ def global_shuffle(
     key_col: str,
     salt: str = "shuf",
     num_partitions: int | None = None,
-    prefix_col: Column | None = None,
+    stage_col: str | None = None,
 ) -> DataFrame:
     """Deterministic global shuffle: every row gets a stable 1-based
     ``pos`` in the order of ``md5(salt || key)`` (ties broken by key) —
     the "shuffle the corpus before training" step, reproducible across
     reruns and engines because the permutation is a hash order, not RNG.
+    NULL keys hash to NULL and sort first (positions 1..#nulls).
 
-    Scale shape: a naive ``row_number() OVER (ORDER BY hash)`` collapses
-    into ONE window partition. Instead: range-repartition + sort by the
-    hash (Spark's distributed sort), count rows per partition (a
-    #partitions-row aggregate), broadcast the cumulative offsets, and
-    assign ``pos = offset + local index``. Only the ``prefix_col``
-    (sampled range) path persists its sorted frame to pin boundaries;
-    the default path's buckets are analytic. NULL keys sort first on
-    both paths (positions 1..#nulls).
+    ``stage_col`` (curriculum use, l51) names a non-negative integer
+    column; the order becomes (stage, hash, key): stages in ascending
+    order, a deterministic shuffle within each. Stages are few: each
+    one adds ``m`` rows (below) to the broadcast offset frame. A NULL
+    or negative stage fails the action.
+
+    Scale shape: ``ordered_row_number`` over an analytic bucket, never
+    a single-partition window. The sort key within a stage IS a uniform
+    hash, so the range boundaries are known without sampling: bucket
+    ``stage·m + i`` covers the stage's hash prefixes [i/m, (i+1)/m) of
+    the 40-bit keyspace. Lowercase-hex lexicographic order equals the
+    prefix's numeric order, so the bucket is monotone in the
+    (stage, hash, key) total order, and no range exchange or boundary
+    job runs.
     """
-    h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
-    if prefix_col is not None:
-        # Curriculum use: a fixed-width string prefix makes the order
-        # (prefix asc, hash) — deterministic shuffle WITHIN each prefix
-        # stage. Same machinery, same scale shape (the prefix breaks
-        # the hash's uniformity, so no analytic bucket: this path
-        # keeps the sampled range exchange).
-        h = F.concat(prefix_col, h)
-        return ordered_row_number(
-            df.withColumn("_h", h),
-            ["_h", key_col],
-            out_col="pos",
-            drop_cols=["_h"],
-            num_partitions=num_partitions,
-        )
-    # The sort key IS a uniform hash, so the range boundaries are known
-    # analytically: bucket i covers hash prefixes [i/m, (i+1)/m) of the
-    # 40-bit keyspace (m buckets, below). lowercase-hex lexicographic
-    # order == numeric order of the prefix, so the bucket is monotone
-    # in the (_h, key) total order — ordered_row_number's pinned-bucket
-    # contract — and the sampled range exchange and its boundary job
-    # drop out (round-16 verdict item 6; guide §2.4).
-    n = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n = _num_partitions(df, num_partitions)
     # 64 buckets per partition (guide §2.5: many more distinct bucket
     # values than partitions, so the hash layout stays even), capped so
     # value*m stays in int64 against the 40-bit prefix (10 hex chars);
     # integer div keeps the mapping exact end-to-end. A NULL key's hash
-    # is NULL and sorts first, so it goes to bucket 0.
+    # is NULL and sorts first, so it goes to its stage's first bucket.
     m = min(64 * n, 1 << 22)
-    bucket = F.expr(
-        f"coalesce(cast(conv(substring(_h, 1, 10), 16, 10) as bigint) * {m}"
-        " div 1099511627776, 0)"  # 2^40
+    stage = F.lit(0) if stage_col is None else F.col(stage_col).cast("bigint")
+    stage = F.when(stage >= 0, stage).otherwise(
+        F.raise_error(F.lit(f"global_shuffle: NULL or negative {stage_col}"))
     )
+    bucket = F.expr(
+        f"_s * {m} + coalesce(cast(conv(substring(_h, 1, 10), 16, 10)"
+        f" as bigint) * {m} div 1099511627776, 0)"  # 2^40
+    )
+    h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
     return ordered_row_number(
-        df.withColumn("_h", h),
-        ["_h", key_col],
+        df.withColumn("_s", stage).withColumn("_h", h),
+        ["_s", "_h", key_col],
         out_col="pos",
-        drop_cols=["_h"],
+        drop_cols=["_s", "_h"],
         num_partitions=n,
         bucket_col=bucket,
     )
@@ -330,158 +385,87 @@ def ordered_row_number(
     be a total order — include a unique tie-break key).
 
     Scale shape: a naive global-ORDER-BY window collapses into ONE
-    window partition. Instead: range-repartition by the order columns
-    (Spark's distributed sort layout), count rows per partition (a
-    #partitions-row aggregate), broadcast-join the cumulative offsets
-    back by partition id, and assign ``out_col = offset + local
-    row_number`` with a window PARTITIONED by partition id — every
-    stage is JVM-side whole-stage-codegen-adjacent (no Python/Arrow
-    round-trip: the first version Arrow-assigned the index and paid
-    the pandas conversion of every payload column on every
-    consumption — measured ~3× the job cost when rows carry token
-    arrays, ``suffix_window_spans`` at sf1). The ranged frame is
-    persisted so the count job and the assignment job see identical
-    partition boundaries (range sampling is otherwise re-drawn per
-    job; a deployment would checkpoint instead). ``drop_cols`` lets
-    callers discard sort-only helper columns. Shared by
-    ``global_shuffle`` (hash order) and the suffix-array sort
-    (``dedup.suffix_window_spans``).
+    window partition. Instead the rows are laid out on ``_pid``
+    partitions monotone in the order (``_pinned``), each partition's
+    row offset comes from a distributed running count (``_offsets``),
+    broadcast back on ``_pid``, and ``out_col = offset + local
+    row_number`` over a window PARTITIONED by ``_pid``. Building the
+    frame fires no Spark job; the offsets run inside the caller's
+    action. Every stage is JVM-side (the first version Arrow-assigned
+    the index and paid the pandas conversion of every payload column
+    on every consumption — ~3× the job cost when rows carry token
+    arrays, ``suffix_window_spans`` at sf1). ``drop_cols`` lets callers
+    discard sort-only helper columns.
+
+    The partitioner is the one choice. ``bucket_col`` is a
+    caller-supplied DETERMINISTIC bucket, monotone non-decreasing in
+    the ``order_cols`` total order (``global_shuffle``'s hash prefix);
+    without it the layout is a sampled ``repartitionByRange`` on the
+    order columns (the suffix-array sort's string keys have no analytic
+    boundary).
 
     ``neighbor_col`` additionally emits ``<neighbor_col>_next`` /
     ``<neighbor_col>_prev`` — that column's value on the global-order
     successor/predecessor row (NULL at the two ends of the total
-    order). Within a range partition these are a lead/lag over the SAME
+    order). Within a partition these are a lead/lag over the SAME
     window the row number already pays for (no new exchange, no
-    self-join); the ≤ #partitions boundary rows are fixed up with two
-    broadcast joins keyed on the dense ``out_col`` (each partition's
-    first row is the successor of index ``off``, its last row the
-    predecessor of index ``off + count + 1``). This replaces the
-    adjacent-pair SELF-JOIN consumers used to run on ``out_col`` —
-    which re-shuffled the whole sorted frame once per join side
-    (ENSURE_REQUIREMENTS hash exchanges; the round-16 l132 profile
-    showed three extra 270k-row exchanges at sf0.1) — with in-row
-    neighbor columns (guide §2.4: remove shuffles outright).
-    ``bucket_col`` (round-16 verdict item 6 — pin the boundaries): a
-    caller-supplied DETERMINISTIC partition id, monotone
-    non-decreasing in the ``order_cols`` total order (all rows of
-    bucket i sort before all rows of bucket i+1). When given, the
-    range exchange is replaced by the bucket expression: no
-    ``repartitionByRange`` (whose per-job boundary re-sampling is an
-    extra full input pass AND the reason the ranged frame had to be
-    persisted for bit-stability), and the cached layout is a hash
-    partitioning on ``_pid`` that the assignment window consumes with
-    NO further exchange — the range path re-shuffled its cache
-    through an ENSURE_REQUIREMENTS hash exchange on every
-    consumption. Used by ``global_shuffle`` (md5-hash
-    order ⇒ an analytic uniform bucket from the hash prefix exists);
-    the suffix-array sort keeps the sampled range path — string keys
-    have no analytic boundary, and a re-sampled boundary set would
-    not be bit-stable across the two consuming jobs.
+    self-join); across partitions, the offset aggregate also carries
+    each partition's first and last value, and a lead/lag over its
+    #partitions rows hands them to the neighboring partitions'
+    boundary rows. No adjacent-pair self-join on ``out_col`` (it
+    re-shuffled the whole sorted frame once per join side) and no
+    fix-up join keyed on it (each recomputed the window and the
+    offsets; AQE reused neither). It takes the range layout only: no
+    caller needs a bucket layout with neighbors, and that pairing is
+    untested.
     """
     drop_cols = drop_cols or []
-    n = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     if bucket_col is not None and neighbor_col is not None:
         raise ValueError("bucket_col and neighbor_col cannot be combined")
-    if bucket_col is not None:
-        # The pinned bucket needs no range exchange and no boundary
-        # sampling pass — one full input pass fewer. Hash-repartition
-        # by the bucket BEFORE the persist: hashpartitioning(_pid)
-        # satisfies the window's ClusteredDistribution(_pid), so the
-        # assignment job reads the cache with NO further exchange
-        # (guide §2.4 — the range path paid an ENSURE_REQUIREMENTS
-        # hash exchange above its cache on every consumption). The
-        # persist is NOT a correctness guard here (the bucket is
-        # deterministic; both jobs would agree without it) — it is a
-        # measured recompute guard for the second consumption. A
-        # 100-TB deployment drops it and re-derives the narrow
-        # (key, hash, bucket) projection per pass instead of spilling
-        # a corpus-sized cache.
-        rng = (
-            df.withColumn("_pid", bucket_col.cast("int"))
-            .repartition(n, F.col("_pid"))
-            .persist()
-        )
-        # The bucket ids are data columns, so the offsets need NO
-        # driver round-trip at all: per-bucket counts + a running sum
-        # over the (#buckets)-row aggregate, broadcast-joined back.
-        # The first version collected the counts and replayed them as
-        # a local_rows_df literal frame — at 64 buckets/partition
-        # that is a thousands-of-structs literal expression tree,
-        # re-analyzed on every build and every plan copy (the exact
-        # Catalyst literal-blowup failure mode the k-means/minhash
-        # kernels hit in round 12; l32 at sf1 measured 18.7 s
-        # minimum against sub-3 s before). Distributed offsets fold
-        # the count pass into the one final action (no separate
-        # collect job) and keep the plan tree constant-size.
-        per = rng.groupBy("_pid").agg(F.count("*").alias("_n"))
-        off = per.select(
-            "_pid",
-            F.coalesce(
-                F.sum("_n").over(
-                    W.orderBy("_pid").rowsBetween(
-                        W.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).alias("_off"),
-        )
-    else:
-        rng = (
-            df.repartitionByRange(n, *order_cols)
-            .withColumn("_pid", F.spark_partition_id())
-            .persist()
-        )
-        cnt = {
-            r["pid"]: r["n"]
-            for r in rng.groupBy(F.col("_pid").alias("pid"))
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        offsets, acc = [], 0
-        for pid in range(n):
-            offsets.append((pid, acc))
-            acc += cnt.get(pid, 0)
-        off = local_rows_df(
-            df.sparkSession, offsets, "_pid int, _off long"
-        )
+    rng = _pinned(
+        df, order_cols, _num_partitions(df, num_partitions), bucket_col
+    )
     w = W.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    base = (
-        rng.join(F.broadcast(off), "_pid")
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn(out_col, F.col("_rn") + F.col("_off"))
-    )
     if neighbor_col is None:
-        return base.drop("_pid", "_off", "_rn", *drop_cols)
-    nxt, prv = f"{neighbor_col}_next", f"{neighbor_col}_prev"
-    base = (
-        base.withColumn("_ld", F.lead(neighbor_col).over(w))
-        .withColumn("_lg", F.lag(neighbor_col).over(w))
-        .withColumn("_last", F.lead(F.lit(1)).over(w).isNull())
-    )
-    # partition-FIRST rows are the global successors of index off (the
-    # previous partition's last row); partition-LAST rows (no row after
-    # them in the window — not `_ld IS NULL`, which a NULL neighbor
-    # value also produces) the predecessors of index off+count+1.
-    # Indices are dense 1..N by construction, so the two fix-up frames
-    # join purely on out_col — ≤ n rows each, broadcast.
-    firsts = base.filter(F.col("_rn") == 1).select(
-        (F.col(out_col) - 1).alias(out_col),
-        F.col(neighbor_col).alias("_bnd_n"),
-    )
-    lasts = base.filter(F.col("_last")).select(
-        (F.col(out_col) + 1).alias(out_col),
-        F.col(neighbor_col).alias("_bnd_p"),
-    )
-    return (
-        base.join(F.broadcast(firsts), out_col, "left")
-        .join(F.broadcast(lasts), out_col, "left")
-        .withColumn(nxt, F.coalesce("_ld", "_bnd_n"))
-        .withColumn(prv, F.coalesce("_lg", "_bnd_p"))
-        .drop(
-            "_pid", "_off", "_rn", "_ld", "_lg", "_last", "_bnd_n",
-            "_bnd_p", *drop_cols,
+        return (
+            rng.join(F.broadcast(_offsets(rng, F.lit(1))), "_pid")
+            .withColumn(out_col, F.row_number().over(w) + F.col("_off"))
+            .drop("_pid", "_off", *drop_cols)
         )
+    # Each partition's first and last neighbor value ride the offset
+    # aggregate; over the #partitions-row frame (empty partitions have
+    # no row), the next partition's first value is the successor of
+    # this partition's last row, the previous partition's last value
+    # the predecessor of this partition's first row.
+    order = F.struct(*order_cols)
+    by_pid = W.orderBy("_pid")
+    off = _offsets(
+        rng,
+        F.lit(1),
+        _head=F.min_by(neighbor_col, order),
+        _tail=F.max_by(neighbor_col, order),
+    ).select(
+        "_pid",
+        "_off",
+        F.lead("_head").over(by_pid).alias("_bnd_n"),
+        F.lag("_tail").over(by_pid).alias("_bnd_p"),
+    )
+    # partition-LAST rows are those with no row after them in the
+    # window — not `lead(neighbor) IS NULL`, which a NULL neighbor
+    # value also produces.
+    rn = F.row_number().over(w)
+    last = F.lead(F.lit(1)).over(w).isNull()
+    return (
+        rng.join(F.broadcast(off), "_pid")
+        .select(
+            "*",
+            (rn + F.col("_off")).alias(out_col),
+            F.when(last, F.col("_bnd_n"))
+            .otherwise(F.lead(neighbor_col).over(w))
+            .alias(f"{neighbor_col}_next"),
+            F.when(rn == 1, F.col("_bnd_p"))
+            .otherwise(F.lag(neighbor_col).over(w))
+            .alias(f"{neighbor_col}_prev"),
+        )
+        .drop("_pid", "_off", "_bnd_n", "_bnd_p", *drop_cols)
     )

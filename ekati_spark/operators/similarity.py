@@ -454,7 +454,6 @@ def embedding_dup_pairs_ann(
     dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    fetch: str = "auto",
 ) -> DataFrame:
     """Embedding near-duplicate pairs over LSH candidates — the
     sub-quadratic twin of ``dedup.embedding_dup_pairs`` (which scores
@@ -466,21 +465,18 @@ def embedding_dup_pairs_ann(
     replay of buckets + scoring; pairs the LSH misses are ABSENT BY
     DEFINITION (recall audited separately, l55-style).
 
-    ``fetch`` picks how pair vectors reach the scorer:
-
-    - ``"join"``: two id equi-joins attach (v, nv) to every pair —
-      shuffle ∝ |pairs| × vector width. The 100-TB default (the corpus
-      never fits one executor).
-    - ``"broadcast"``: pairs stay NARROW (two longs); the whole
-      filtered vector table is broadcast and the Arrow scorer gathers
-      rows by id. On duplicate-heavy candidate sets each vector is
-      re-sent once per pair under ``join`` (measured 7.3M candidate
-      pairs × two 64-float payloads ≈ 7.5 GB through Arrow at sf1 —
-      the dominant cost); broadcast moves 16 bytes/pair + the corpus
-      once per executor (sf1: 6.6 s → 2.4 s median).
-    - ``"auto"``: broadcast when the corpus is ≤ ``8M`` floats
-      (~64 MB as float64 — comfortably an executor-memory dimension),
-      else join. The count is one cheap job over the filtered frame.
+    Pair vectors reach the scorer one of two ways, picked by size:
+    corpora of ≤ 8M floats (~64 MB as float64, comfortably an
+    executor-memory dimension; the count is one cheap job over the
+    filtered frame) broadcast the whole filtered vector table and keep
+    the pairs NARROW (two longs; ``_score_pairs_broadcast``); larger
+    ones attach (v, nv) to every pair with two id equi-joins, a
+    shuffle ∝ |pairs| × vector width (``_score_pairs_join``, the
+    100-TB path: the corpus never fits one executor). On
+    duplicate-heavy candidate sets the join re-sends each vector once
+    per pair (measured 7.3M candidate pairs × two 64-float payloads ≈
+    7.5 GB through Arrow at sf1); the broadcast moves 16 bytes/pair +
+    the corpus once per executor (sf1: 6.6 s → 2.4 s median).
 
     Both paths run the SAME float ops in the SAME order (per-dim
     sequential left-fold dot, norm product, one divide), so their
@@ -490,9 +486,7 @@ def embedding_dup_pairs_ann(
     cand, v = lsh_candidate_ids(
         emb, n_planes, n_tables, seed, dim, id_col, vec_col
     )
-    if fetch == "auto":
-        fetch = "broadcast" if v.count() * dim <= 8_000_000 else "join"
-    if fetch == "broadcast":
+    if v.count() * dim <= 8_000_000:
         scored = _score_pairs_broadcast(cand, v, dim)
     else:
         scored = _score_pairs_join(cand, v)

@@ -1211,19 +1211,14 @@ def l27_unigram_logprob(spark, sf_dir):
     toks = docs.select(
         "doc_id", F.explode(X.tokens(F.col("text"))).alias("tok")
     )
-    # materialize the unigram table once: it feeds both the total and
-    # the scoring join (otherwise the tokenize+aggregate pass reruns)
-    freq = (
-        toks.groupBy("tok")
-        .agg(F.count("*").alias("c"))
-        .transform(cut_lineage)
-    )
-    row = freq.agg(F.sum("c").cast("double").alias("n")).first()
-    # empty corpus: total is NULL; any placeholder works — lp is empty
-    total = float(row.n) if row and row.n is not None else 1.0
-    lp = toks.join(F.broadcast(freq), "tok").select(
-        "doc_id", F.round(F.log(F.col("c") / F.lit(total)), 6).alias("lp")
-    )
+    # The corpus total is a window over the unigram table (which the
+    # scoring join broadcasts, so it is small), not a collected
+    # scalar: building the frame fires no Spark job.
+    n = F.sum("c").over(W.partitionBy()).cast("double")
+    freq = toks.groupBy("tok").agg(F.count("*").alias("c"))
+    lp = toks.join(
+        F.broadcast(freq.select("tok", (F.col("c") / n).alias("p"))), "tok"
+    ).select("doc_id", F.round(F.log(F.col("p")), 6).alias("lp"))
     from ekati_spark.queries.base import dsum
 
     return lp.groupBy("doc_id").agg(
@@ -1394,9 +1389,9 @@ def l31_domain_mix(spark, sf_dir):
 def l32_global_shuffle(spark, sf_dir):
     """Deterministic corpus shuffle for training-batch assembly: stable
     global position in md5-hash order, assigned distributedly
-    (operators/sampling.py::global_shuffle — range-partitioned sort +
-    broadcast offsets + one Arrow pass, never a single-partition
-    window)."""
+    (operators/sampling.py::global_shuffle — analytic hash-prefix
+    buckets + distributed offsets broadcast back + a per-bucket
+    row_number, never a single-partition window)."""
     from ekati_spark.operators.sampling import global_shuffle
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2492,9 +2487,11 @@ def l51_curriculum_order(spark, sf_dir):
     document's global training position — the "curriculum learning with
     intra-stage shuffling" layout a dataloader consumes directly.
 
-    Position assignment is l32's distributed machinery (range partition
-    on the combined (decile-prefix || hash) key, per-partition counts,
-    broadcast offsets, one Arrow pass) — no global single-task window,
+    Position assignment is l32's ``global_shuffle`` with the decile as
+    its stage: the analytic bucket ``decile·m + md5 bucket`` is monotone
+    in (decile, hash, doc_id), the oracle's order (the zero-padded
+    decile prefix sorts like the number). No sampled range exchange, no
+    global single-task window, and no Spark job until the action;
     reproducible across engines/reruns because the permutation is hash
     order, not RNG. The decile itself rides l41's ntile (a corpus-sized
     rank; at 100 TB swap in broadcast quantile boundaries on
@@ -2502,12 +2499,7 @@ def l51_curriculum_order(spark, sf_dir):
     machinery)."""
     scored = l41_perplexity_buckets(spark, sf_dir)
     kept = scored.filter(F.col("kept")).select("doc_id", "decile")
-    pos = P.global_shuffle(
-        kept,
-        "doc_id",
-        salt="cur",
-        prefix_col=F.lpad(F.col("decile").cast("string"), 2, "0"),
-    )
+    pos = P.global_shuffle(kept, "doc_id", salt="cur", stage_col="decile")
     return pos.select("doc_id", "decile", "pos")
 
 
@@ -4907,13 +4899,13 @@ def l05b_dup_pairs_ann(spark, sf_dir):
     the approximate operator is exactly checkable. This is the entry
     the 100 TB cluster runs where l05 is the recall oracle.
 
-    Fetch strategy is ``auto``: on corpora ≤ 8M floats the scorer
-    gathers vectors from a broadcast instead of joining two 64-float
-    payloads onto every candidate pair — bit-identical results
-    (tests), measured sf1 interleaved medians 23.6 s exact vs 4.7 s
-    ANN (5.0×). Per-band recall vs the exact pair set is the l85
-    audit; the candidate set (8 planes × 8 tables) is unchanged by
-    the fetch choice."""
+    The operator picks how pair vectors reach the scorer by corpus
+    size: on corpora ≤ 8M floats it gathers vectors from a broadcast
+    instead of joining two 64-float payloads onto every candidate pair
+    — bit-identical results (tests), measured sf1 interleaved medians
+    23.6 s exact vs 4.7 s ANN (5.0×). Per-band recall vs the exact
+    pair set is the l85 audit; the candidate set (8 planes × 8 tables)
+    is the same on either path."""
     emb = load_table(spark, sf_dir, "embeddings")
     return S.embedding_dup_pairs_ann(
         emb, threshold=0.4, n_planes=8, n_tables=8

@@ -45,6 +45,10 @@ CASES = [
     "l21_stratified_sample",
     # deterministic global shuffle (rank assignment across partitions)
     "l32_global_shuffle",
+    # the same with a stage column (curriculum order), and the sampled
+    # range layout with in-row neighbors (suffix-array sort)
+    "l51_curriculum_order",
+    "l132_suffix_dedup_spans",
     # iterative PageRank (float accumulation across partitions)
     "g13_pagerank",
     # BFS traversal with visited-set dedup

@@ -142,26 +142,115 @@ def test_global_shuffle_bucket_path_matches_window_reference(spark):
         assert got == ref, f"num_partitions={n}"
 
 
-def test_global_shuffle_null_keys_match_range_path(spark):
-    """NULL keys hash to NULL: the analytic-bucket path keeps those rows
-    and gives them the same positions as the sampled range path (first,
-    1..#nulls), so both paths assign identical (key, pos)."""
-    rows = [(None,)] * 7 + [(i,) for i in range(500)]
-    df = spark.createDataFrame(rows, "k long")
-    # prefix_col="" leaves the hash order as is but takes the range path
-    ranged = S.global_shuffle(df, "k", num_partitions=8, prefix_col=F.lit(""))
-    bucketed = S.global_shuffle(df, "k", num_partitions=8)
+def _positions(out, key, col="pos"):
+    return {r[key]: r[col] for r in out.collect()}
 
-    def key_pos(out):
-        return sorted(
-            ((r.k, r.pos) for r in out.collect()),
-            key=lambda kp: (kp[0] is not None, kp[0] or 0, kp[1]),
+
+def test_global_shuffle_null_keys_and_stages_match_window_reference(spark):
+    """NULL keys hash to NULL and sort first within their stage; with
+    and without a stage column, the positions equal the single-window
+    ``row_number() OVER (ORDER BY stage, md5(salt||key), key)``
+    reference at any partition count."""
+    from pyspark.sql import Window
+
+    rows = [(i, None, i % 4) for i in range(9)] + [
+        (i, i, (i * 7) % 4) for i in range(9, 800)
+    ]
+    df = spark.createDataFrame(rows, "rid long, k long, stage int")
+    h = F.md5(F.concat(F.lit("shuf"), F.col("k").cast("string")))
+    # tied NULL keys may take their stage block's first positions in any
+    # order; every other row's position is exact
+    nulls = {rid: stage for rid, k, stage in rows if k is None}
+    for stage_col, order in ((None, [h, "k"]), ("stage", ["stage", h, "k"])):
+        # row ids tell the NULL-key rows apart
+        ref = _positions(
+            df.withColumn(
+                "pos", F.row_number().over(Window.orderBy(*order, "rid"))
+            ),
+            "rid",
         )
+        if stage_col is None:
+            assert {ref[i] for i in range(9)} == set(range(1, 10))
+        for n in (1, 7, 64):
+            got = _positions(
+                S.global_shuffle(
+                    df, "k", num_partitions=n, stage_col=stage_col
+                ),
+                "rid",
+            )
+            block = nulls if stage_col else dict.fromkeys(nulls, 0)
+            assert {(b, got[i]) for i, b in block.items()} == {
+                (b, ref[i]) for i, b in block.items()
+            }, (stage_col, n)
+            assert {i: p for i, p in got.items() if i not in nulls} == {
+                i: p for i, p in ref.items() if i not in nulls
+            }, (stage_col, n)
 
-    got = key_pos(bucketed)
-    assert got == key_pos(ranged)
-    assert sorted(p for _, p in got) == list(range(1, 508))
-    assert {p for k, p in got if k is None} == set(range(1, 8))
+
+def test_global_shuffle_rejects_negative_or_null_stage(spark):
+    for bad in (-1, None):
+        df = spark.createDataFrame([(1, bad), (2, 0)], "k long, stage int")
+        with pytest.raises(Exception, match="NULL or negative stage"):
+            S.global_shuffle(df, "k", stage_col="stage").collect()
+
+
+def test_ordered_row_number_range_path_matches_window_reference(spark):
+    """The sampled range layout (string keys with duplicates and NULLs,
+    a unique tie-break): positions and in-row neighbors equal one
+    global window's row_number/lead/lag at 1, 7 and 64 partitions —
+    64 leaves most range partitions empty."""
+    from pyspark.sql import Window
+
+    rows = [
+        (i, None if i % 11 == 0 else f"s{(i * 37) % 50:02d}",
+         None if i % 5 == 0 else f"v{i}")
+        for i in range(600)
+    ]
+    df = spark.createDataFrame(rows, "k long, s string, v string")
+    w = Window.orderBy("s", "k")
+    ref = sorted(
+        tuple(r)
+        for r in df.select(
+            "k",
+            F.row_number().over(w).alias("pos"),
+            F.lead("v").over(w).alias("v_next"),
+            F.lag("v").over(w).alias("v_prev"),
+        ).collect()
+    )
+    for n in (1, 7, 64):
+        out = S.ordered_row_number(
+            df, ["s", "k"], num_partitions=n, neighbor_col="v"
+        )
+        got = sorted(
+            tuple(r)
+            for r in out.select("k", "pos", "v_next", "v_prev").collect()
+        )
+        assert got == ref, n
+        plain = S.ordered_row_number(df, ["s", "k"], num_partitions=n)
+        assert _positions(plain, "k") == {r[0]: r[1] for r in ref}, n
+
+
+def test_row_numbering_builds_fire_no_jobs(spark, job_ids):
+    """Offsets are computed inside the action: building either
+    ordered_row_number layout fires no Spark job, and the weighted
+    sample fires one (its validated total weight)."""
+    df = spark.createDataFrame(
+        [(i, f"s{i % 13}", i % 4, i % 9 + 1) for i in range(300)],
+        "k long, s string, stage int, w long",
+    )
+    _, ranged = job_ids(
+        lambda: S.ordered_row_number(
+            df, ["s", "k"], num_partitions=7, neighbor_col="s"
+        )
+    )
+    _, staged = job_ids(
+        lambda: S.global_shuffle(df, "k", num_partitions=7, stage_col="stage")
+    )
+    _, weighted = job_ids(
+        lambda: S.weighted_systematic_sample(df, "k", "w", k=20)
+    )
+    assert (len(ranged), len(staged)) == (0, 0)
+    assert len(weighted) <= 1
 
 
 def test_ordered_row_number_rejects_bucket_with_neighbor(spark):

@@ -669,10 +669,11 @@ def test_debias_removes_planted_component(spark):
 
 def test_dup_pairs_ann_fetch_paths_bit_identical(spark, sf_dir):
     """The broadcast-gather scorer and the per-pair join scorer must
-    return the SAME pair set with bit-identical cosines: both run the
-    per-dim sequential left-fold, the same norm product, and one
-    divide, so any difference is a float-op-order bug. Zero-norm
-    vectors must drop from both (try_divide NULL vs the anti-join)."""
+    return the SAME pair set with bit-identical cosines over one
+    candidate set: both run the per-dim sequential left-fold, the same
+    norm product, and one divide, so any difference is a float-op-order
+    bug. Zero-norm vectors must drop from both (try_divide NULL vs the
+    anti-join)."""
     from ekati_spark.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -685,22 +686,18 @@ def test_dup_pairs_ann_fetch_paths_bit_identical(spark, sf_dir):
         "label",
     )
     both = emb.unionByName(zero)
-    a = sorted(
-        map(
-            tuple,
-            S.embedding_dup_pairs_ann(
-                both, threshold=0.3, fetch="join"
-            ).collect(),
+    dim = S._infer_dim(both, "embedding")
+    cand, v = S.lsh_candidate_ids(both, dim=dim)
+
+    def pairs(scored):
+        out = scored.withColumn("cosine", F.round("cos_raw", 6)).filter(
+            F.col("cosine") >= F.lit(0.3)
         )
-    )
-    b = sorted(
-        map(
-            tuple,
-            S.embedding_dup_pairs_ann(
-                both, threshold=0.3, fetch="broadcast"
-            ).collect(),
-        )
-    )
+        rows = out.select("id_a", "id_b", "cosine").collect()
+        return sorted(map(tuple, rows))
+
+    a = pairs(S._score_pairs_join(cand, v))
+    b = pairs(S._score_pairs_broadcast(cand, v, dim))
     assert a, "no pairs at threshold 0.3 — parity check is vacuous"
     assert a == b
     assert not any(9000002 in (p[0], p[1]) for p in a)
