@@ -1,9 +1,15 @@
 """Lineage-cut policy for iterative kernels (PageRank, BFS, star-CC,
 k-means, k-truss, ...).
 
-Every driver-side loop in this repo must cut lineage once per round —
-otherwise the lazy plan re-derives the whole iteration history each
-round and the optimizer DAG grows without bound. Two modes:
+A driver-side loop whose round reads its state twice must cut lineage
+once per round — otherwise the plan doubles every round, and each
+action re-derives the whole iteration history. A loop of fixed, small
+depth whose state has one consumer per round needs no cut: its plan
+grows by one round's operators per round and runs as one action.
+g43's HyperBall reads its one-row-per-node register state once per
+superstep (one join against the stored relation, one group-by), so its
+three supersteps are one lazy plan; keeping ``state ∪ contributions``
+read the state twice and doubled the plan each superstep. Two modes:
 
 - ``local`` (default): ``DataFrame.localCheckpoint`` — executor-local
   block storage, zero HDFS round-trip, the right call on a healthy
@@ -49,9 +55,10 @@ frame reports ``UnknownPartitioning``: ``repartition(4, "v")
 .localCheckpoint()`` followed by ``groupBy("v")`` plans 1 Exchange (0
 with AQE off, 0 on the same frame persisted). So every consumer of a
 cut frame re-shuffles it. A relation that many plans join or group on
-one key is persisted instead, hash-partitioned on that key: g43's
-supersteps join ``queries.graph._copurchase``'s relation, persisted on
-``v``, with no Exchange over it.
+one key is persisted instead, hash-partitioned on that key:
+``queries.graph._copurchase``'s relation is persisted on ``v``, and a
+join on ``v`` reads it with no Exchange over it (g43's supersteps,
+pinned in tests/test_copurchase_store.py).
 """
 
 from __future__ import annotations

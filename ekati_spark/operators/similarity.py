@@ -1102,39 +1102,32 @@ def margin_from_scored_pairs(
     ``bitext_margin_pairs``, split out so sub-quadratic candidate
     sources (LSH buckets, IVF probes) feed the identical formula: the
     top-k neighborhood sums and the per-source argmax only ever see the
-    supplied pairs."""
-    ws = W.partitionBy("src_id").orderBy(F.desc("cosine"), F.asc("tgt_id"))
-    wt = W.partitionBy("tgt_id").orderBy(F.desc("cosine"), F.asc("src_id"))
-    ranked = pairs.withColumn("rs", F.row_number().over(ws)).withColumn(
-        "rt", F.row_number().over(wt)
-    )
-    # one pass computes both neighborhood sums; persist so the sum
-    # aggregates and the final pair join reuse the ranked pairs
-    ranked = ranked.transform(cut_lineage_lazy)
+    supplied pairs.
+
+    One window chain, no join back: the target's rank and top-k sum
+    over ``tgt_id``, then the source's rank, top-k sum, margin and
+    argmax over ``src_id`` — two exchanges, one per key, and every
+    intermediate has one consumer, so nothing is cut. The window sums
+    accumulate ``decimal(18,6)`` into ``decimal(28,6)``, as the grouped
+    sums they replace did, so margins are bit-identical."""
     dec = F.col("cosine").cast("decimal(18,6)")
-    sum_s = (
-        ranked.filter(F.col("rs") <= k)
-        .groupBy("src_id")
-        .agg(F.sum(dec).alias("sum_s"))
-    )
-    sum_t = (
-        ranked.filter(F.col("rt") <= k)
-        .groupBy("tgt_id")
-        .agg(F.sum(dec).alias("sum_t"))
-    )
+    wt, ws = W.partitionBy("tgt_id"), W.partitionBy("src_id")
     denom = (F.col("sum_s") + F.col("sum_t")).cast("double") / F.lit(
         float(2 * k)
     )
-    # sums are |S|- / |T|-row frames: not broadcast-annotated — AQE
-    # broadcasts them when small, sort-merges when the sides are big
-    scored = (
-        ranked.join(sum_s, "src_id")
-        .join(sum_t, "tgt_id")
-        .withColumn("margin", F.round(F.col("cosine") / denom, 6))
-    )
-    wbest = W.partitionBy("src_id").orderBy(F.desc("margin"), F.asc("tgt_id"))
     return (
-        scored.withColumn("best", F.row_number().over(wbest))
+        pairs.withColumn(
+            "rt", F.row_number().over(wt.orderBy(F.desc("cosine"), "src_id"))
+        )
+        .withColumn("sum_t", F.sum(F.when(F.col("rt") <= k, dec)).over(wt))
+        .withColumn(
+            "rs", F.row_number().over(ws.orderBy(F.desc("cosine"), "tgt_id"))
+        )
+        .withColumn("sum_s", F.sum(F.when(F.col("rs") <= k, dec)).over(ws))
+        .withColumn("margin", F.round(F.col("cosine") / denom, 6))
+        .withColumn(
+            "best", F.row_number().over(ws.orderBy(F.desc("margin"), "tgt_id"))
+        )
         .filter(
             (F.col("best") == 1)
             & (F.col("margin") >= F.lit(float(margin_threshold)))
@@ -1171,7 +1164,12 @@ def bitext_margin_ann(
     left-fold contract), but JIT-stable: the interpreted fold's
     executor CPU degraded 3-10× with JVM age inside a long bench
     session (the round-15 l45b driver regression — 10-12 s of executor
-    time in the scoring stage a fresh JVM runs in ~2 s)."""
+    time in the scoring stage a fresh JVM runs in ~2 s).
+
+    The build fires one Spark job, ``_infer_dim``'s, and none when
+    ``dim`` is given: the sides' lazy cuts have no shuffle below them
+    and the margin kernel is one window chain, so bucketing, scoring
+    and margins run in the caller's action."""
     if dim is None:
         dim = _infer_dim(src, vec_col)
     bucket_ids = _sign_lsh_bucket_udf(dim, n_planes, n_tables, seed)

@@ -2698,44 +2698,39 @@ def g43_neighborhood_function(spark, sf_dir):
     neighborhood-function operator; this extends the graph-analytics
     family the 100-TB-native way."""
     und = _copurchase(spark, sf_dir)
-    # und is symmetric and partitioned on v: the registers (one per node)
-    # need no exchange, and a superstep is one join against the persisted
-    # relation plus the (owner, j) exchange and the cut
-    tail = "substr(md5('hb' || CAST(owner AS STRING)), 1, 15)"
-    state = und.select(F.col("v").alias("owner")).distinct().select(
+    # One row per node, registers r0..r15 (NULL = empty). und is symmetric
+    # and every node has a neighbor, so a superstep is one join on
+    # v = owner sending regs(v) to u and to v itself, then a max by owner:
+    # the state has one consumer per round, so no cut (checkpoint.py).
+    # groupBy(owner) lands on und's partitioning on v; shuffle_hash keeps
+    # the join co-partitioned. SQL text: one py4j call per projection.
+    regs = [f"r{i}" for i in range(16)]
+    h = "md5('hb' || CAST(owner AS STRING))"
+    state = und.selectExpr("v AS owner").distinct().selectExpr(
         "owner",
-        F.expr(
-            "CAST(conv(substr(md5('hb' || CAST(owner AS STRING)), 16, 1), 16, 10)"
-            " AS BIGINT)"
-        ).alias("j"),
-        F.expr(_HB_RHO.format(tail=tail)).cast("long").alias("rho"),
-    )
-    regs = None
+        f"CAST(conv(substr({h}, 16, 1), 16, 10) AS INT) AS j",
+        f"CAST({_HB_RHO.format(tail=f'substr({h}, 1, 15)')} AS INT) AS rho",
+    ).selectExpr("owner", *(f"IF(j = {i}, rho, NULL) AS r{i}" for i in range(16)))
+    # S_v = Σ_j 2^(32-M_j), absent register ⇒ 2^32. Radius t's rides to
+    # the end as sv_t, set on the node's own row and NULL on the other.
+    s_v = " + ".join(f"coalesce(shiftleft(1L, 32 - {r}), 4294967296)" for r in regs)
     for t in (1, 2, 3):
-        contrib = und.join(
-            state, state.owner == und.v, "inner"
-        ).select(F.col("u").alias("owner"), "j", "rho")
+        sv = [f"sv_{i}" for i in range(1, t)]
+        own = ["v AS owner", *regs, *sv[:-1], *(f"{s_v} AS {c}" for c in sv[-1:])]
+        nbr = ["u AS owner", *regs, *(f"CAST(NULL AS BIGINT) AS {c}" for c in sv)]
+        rows = ", ".join(f"struct({', '.join(x)})" for x in (own, nbr))
         state = (
-            state.unionByName(contrib)
-            .groupBy("owner", "j")
-            .agg(F.max("rho").alias("rho"))
-            .transform(cut_lineage)  # next superstep + this t's report
+            und.join(state.hint("shuffle_hash"), F.expr("v = owner"))
+            .selectExpr(f"inline(array({rows}))")
+            .groupBy("owner")
+            .agg(*(F.max(c).alias(c) for c in regs + sv))
         )
-        reg_t = state.withColumn("t", F.lit(t))
-        regs = reg_t if regs is None else regs.unionByName(reg_t)
-    sv = regs.groupBy("t", "owner").agg(
-        (
-            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 32 - CAST(rho AS INT))"))
-            + (F.lit(16) - F.count("*")) * F.lit(4294967296)
-        )
-        .cast("long")
-        .alias("sv")
+    reports = ", ".join(
+        f"struct({i} AS t, {c} AS sv)" for i, c in enumerate(sv + [s_v], 1)
     )
-    return sv.groupBy(F.col("t").cast("int").alias("t")).agg(
-        F.count("*").cast("long").alias("n_nodes"),
-        F.sum("sv").cast("long").alias("sum_s"),
-        F.min("sv").cast("long").alias("min_s"),
-        F.max("sv").cast("long").alias("max_s"),
+    return state.selectExpr(f"inline(array({reports}))").groupBy("t").agg(
+        F.count("*").alias("n_nodes"), F.sum("sv").alias("sum_s"),
+        F.min("sv").alias("min_s"), F.max("sv").alias("max_s"),
     )
 
 

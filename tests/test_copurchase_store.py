@@ -11,7 +11,7 @@ from ekati_spark.metrics import final_tree
 from ekati_spark.queries import REGISTRY
 from ekati_spark.queries.graph import _copurchase
 
-# nodes a shuffle Exchange may pass through and still shuffle the scan's rows
+# nodes an operator's input may pass through and still be the scan's rows
 _NARROW = ("Project", "Filter", "ColumnarToRow", "TableCacheQueryStage")
 
 
@@ -30,22 +30,33 @@ def _sql_plans(spark, job_ids) -> list[str]:
     return out
 
 
-def _shuffles_over_cache(plan: str) -> int:
-    """Shuffle Exchanges whose input is an InMemoryTableScan, reached
-    through projections and filters only."""
-    rows, n = final_tree(plan), 0
-    for i, (depth, node) in enumerate(rows):
-        if not node.startswith("Exchange"):
+def _inputs(rows, i) -> list[str]:
+    """The first node down each input of node ``i`` of a ``final_tree``
+    that is not a projection, filter or stage wrapper."""
+    out, first = [], None
+    for j in range(i + 1, len(rows)):
+        if rows[j][0] <= rows[i][0]:
+            break
+        first = first or rows[j][0]
+        if rows[j][0] != first:
             continue
-        for d, child in rows[i + 1:]:
-            if d <= depth:
-                break
-            depth = d
-            if child.startswith("InMemoryTableScan"):
-                n += 1
-            if not child.lstrip("* ").startswith(_NARROW):
-                break
-    return n
+        while (rows[j][1].lstrip("* ").startswith(_NARROW)
+               and j + 1 < len(rows) and rows[j + 1][0] > rows[j][0]):
+            j += 1
+        out.append(rows[j][1])
+    return out
+
+
+def _over_cache(plan: str, op: str) -> int:
+    """Nodes whose name contains ``op`` (``Exchange``, ``Join``) with an
+    InMemoryTableScan input, reached through projections and filters
+    only."""
+    rows = final_tree(plan)
+    return sum(
+        1 for i, (_, node) in enumerate(rows)
+        if op in node.lstrip("* ").split(" ")[0]
+        and any(c.startswith("InMemoryTableScan") for c in _inputs(rows, i))
+    )
 
 
 def test_tree_parser_finds_a_shuffle_over_a_cached_scan():
@@ -67,29 +78,48 @@ AdaptiveSparkPlan (9)
    Exchange (13)
    +- InMemoryTableScan (14)
 """
-    assert _shuffles_over_cache(plan) == 1
+    assert _over_cache(plan, "Exchange") == 1
+    assert _over_cache(plan, "Join") == 0
+
+    plan = """== Physical Plan ==
+AdaptiveSparkPlan (6)
++- == Final Plan ==
+   * HashAggregate (5)
+   +- * ShuffledHashJoin Inner BuildRight (4)
+      :- ShuffleQueryStage (3)
+      :  +- Exchange (2)
+      :     +- * Range (1)
+      +- TableCacheQueryStage (7)
+         +- InMemoryTableScan (8)
+"""
+    assert _over_cache(plan, "Join") == 1
+    assert _over_cache(plan, "Exchange") == 0
 
 
 def test_g43_supersteps_join_the_stored_relation(spark, sf_dir, job_ids):
     _g43(spark, sf_dir)  # fills the store
     df, build = job_ids(lambda: _g43(spark, sf_dir))
     _, action = job_ids(lambda: df.write.format("noop").mode("overwrite").save())
-    assert len(build) <= 10 and len(action) <= 3, (build, action)
+    assert len(build) == 0 and len(action) <= 5, (build, action)
 
-    # at scale the relation is too big to broadcast: a superstep's join
-    # then must take the persisted partitioning on v as it is
+    # at scale the relation is too big to broadcast: each superstep's
+    # join then must take the persisted partitioning on v as it is. The
+    # state is read once per superstep, so the plan holds one join per
+    # superstep (reading it twice would double the tree: 1 + 2 + 4)
     key = "spark.sql.autoBroadcastJoinThreshold"
     before = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        _, build = job_ids(lambda: _g43(spark, sf_dir))
+        df = _g43(spark, sf_dir)
+        _, action = job_ids(
+            lambda: df.write.format("noop").mode("overwrite").save()
+        )
     finally:
         spark.conf.set(key, before)
-    plans = _sql_plans(spark, build)
-    steps = [p for p in plans if "InMemoryTableScan" in p]
-    assert len(steps) == 3, len(plans)
-    assert all("SortMergeJoin" in p for p in steps)
-    assert [_shuffles_over_cache(p) for p in steps] == [0, 0, 0]
+    [plan] = _sql_plans(spark, action)
+    assert _over_cache(plan, "Join") == 3, plan
+    assert _over_cache(plan, "Exchange") == 0, plan
+    assert "ExistingRDD" not in plan  # no lineage cut
 
 
 def test_copurchase_store_hit_and_eviction(spark, sf_dir):

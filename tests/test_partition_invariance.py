@@ -60,6 +60,9 @@ CASES = [
     # built at one partition count and served at 3 and 17
     "l133_knn_graph_serve",
     "l136_knn_graph_route_serve",
+    # margin scoring as a window chain: decimal window sums and
+    # row_number ties
+    "l45b_bitext_margin_ann",
     # sessionization windows over event time
     "st03_session_window",
 ]

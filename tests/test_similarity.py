@@ -314,6 +314,77 @@ def test_bitext_margin_ann_mines_planted_pair(spark):
     assert mined[0][1] >= 1.05
 
 
+def _margin_reference(pairs, k, threshold):
+    """``margin_from_scored_pairs`` in plain Python: exact decimal top-k
+    sums (ties at rank k break on the other side's id), one double
+    division, Spark's HALF_UP round to 6 places, argmax by (margin desc,
+    tgt_id)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def topk_sums(key, order):
+        groups = {}
+        for p in pairs:
+            groups.setdefault(p[key], []).append(p)
+        return {
+            g: sum((Decimal(repr(p[2])) for p in sorted(ps, key=order)[:k]),
+                   Decimal(0))
+            for g, ps in groups.items()
+        }
+
+    sum_s = topk_sums(0, lambda p: (-p[2], p[1]))
+    sum_t = topk_sums(1, lambda p: (-p[2], p[0]))
+    best = {}
+    for s, t, c in pairs:
+        m = c / (float(sum_s[s] + sum_t[t]) / (2 * k))
+        m = float(Decimal(repr(m)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+        best[s] = min(best.get(s, (math.inf, 0, 0.0)), (-m, t, c))
+    return {(s, t, c, -nm) for s, (nm, t, c) in best.items() if -nm >= threshold}
+
+
+def test_margin_from_scored_pairs_matches_reference(spark):
+    """Hand-built candidate pairs with equal cosines straddling rank k on
+    both sides and one hub target every source scores high: the window
+    chain equals the Python reference exactly, at 3 and 17 shuffle
+    partitions."""
+    import random
+
+    rng = random.Random(11)
+    levels = [0.91, 0.73, 0.73, 0.5, 0.5, 0.5, 0.212345, -0.1]
+    pairs = [(s, 100, 0.88) for s in range(12)]  # the hub target
+    pairs += [
+        (s, t, rng.choice(levels))
+        for s in range(12) for t in range(101, 109) if rng.random() < 0.6
+    ]
+    pairs += [(12, 201, 0.95), (12, 200, 0.95)]  # equal margins: tgt 200 wins
+    df = spark.createDataFrame(pairs, "src_id long, tgt_id long, cosine double")
+    want = _margin_reference(pairs, 2, 0.95)
+    assert (12, 200, 0.95, 1.333333) in want
+    assert any(t == 100 for _, t, _, _ in want)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        for n in ("3", "17"):
+            spark.conf.set(key, n)
+            got = S.margin_from_scored_pairs(df, k=2, margin_threshold=0.95)
+            assert {tuple(r) for r in got.collect()} == want, n
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_bitext_margin_ann_builds_without_jobs(spark, sf_dir, job_ids):
+    """Only the embedding-dimension inference runs at build time; with
+    ``dim`` given the whole kernel is one lazy plan."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    src, tgt = emb.filter(F.col("label") == 0), emb.filter(F.col("label") == 1)
+    _, jobs = job_ids(lambda: S.bitext_margin_ann(src, tgt, k=4, n_planes=6))
+    assert len(jobs) <= 1, jobs
+    dim = len(emb.first().embedding)
+    _, jobs = job_ids(
+        lambda: S.bitext_margin_ann(src, tgt, k=4, n_planes=6, dim=dim)
+    )
+    assert jobs == [], jobs
+
+
 def test_pq_recall_vs_bruteforce(spark, sf_dir):
     """PQ@5 recall against exact cosine top-5. PQ approximates L2 on
     unnormalized vectors while the baseline ranks by cosine, so the

@@ -22,6 +22,7 @@ Prints one JSON line: per-mode medians + per-round overhead.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -32,7 +33,9 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     iters = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     from ekati_spark.checkpoint import (
         disable_reliable_checkpoints,
         enable_reliable_checkpoints,

@@ -15,6 +15,7 @@ Usage: python tools/invariance_sweep.py [sf_dir] [prefix...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
@@ -54,7 +55,9 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     prefixes = tuple(sys.argv[2:]) or ("",)
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     from ekati_spark.session import get_spark
     import ekati_spark.queries as Q
 

@@ -18,6 +18,7 @@ the committed LOCAL_CORRECTNESS_r{N}.json files come from this.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import traceback
@@ -76,7 +77,9 @@ def main():
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     prefixes = tuple(argv[1:]) or ("",)
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     import __spark_entry__ as entry_mod
     from ekati_spark.session import get_spark
 
