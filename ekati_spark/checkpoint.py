@@ -50,6 +50,18 @@ inside one action re-derives it. l108b's final-assign cut went lazy
 and, at sf1, recomputed 3× inside one action; sf0.1 had not shown it
 (round 16; the cut is eager again).
 
+Two consumers inside one plan are not shared for free either, even when
+the result is small and read from a persisted frame. Under AQE each read
+of a cached frame is its own ``TableCacheQueryStage``, and two identical
+broadcasts over it are not reused: on Spark 4.1.2, ``probe ⋉ t ▷ t``
+with ``t = cached.filter(...).select("k")`` fires 3 jobs and plans no
+``ReusedExchange``; with AQE off, 2 jobs and 1 reuse; over an uncached
+``spark.range`` frame, 2 jobs either way (pinned in
+tests/test_checkpoint.py). A served two_hop pays this once: its second
+``follow`` broadcasts the first one's stream as the frontier and again
+as the visited set. An eager cut would replace that one job with its
+own, so a one-action plan keeps it.
+
 A cut is not a partitioned cache. On Spark 4.1.2 with AQE on, a cut
 frame reports ``UnknownPartitioning``: ``repartition(4, "v")
 .localCheckpoint()`` followed by ``groupBy("v")`` plans 1 Exchange (0

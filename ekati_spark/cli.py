@@ -5,7 +5,7 @@ execute → print with latest-wins grouping, ``Printers.cs:139-169``).
 Usage::
 
     python -m ekati_spark.cli            # empty graph
-    python -m ekati_spark.cli <dir>      # preload the FK graph from a
+    python -m ekati_spark.cli <dir>      # serve the FK graph of a
                                          # testdata sf dir
 
 Commands: the full language (``put``, ``get`` incl. ``-h``, ``load
@@ -50,7 +50,6 @@ def _print_nodes(df: DataFrame, limit: int = 50) -> None:
 def main(argv: list[str] | None = None) -> int:
     argv = sys.argv[1:] if argv is None else argv
     from ekati_spark.graph.compiler import QueryEngine
-    from ekati_spark.graph.model import PropertyGraph
     from ekati_spark.session import get_spark
 
     def show_progress(p: dict) -> None:
@@ -66,10 +65,12 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("ekati_cli")
     if argv:
+        # the registry's fk_graph store: edges persisted once, laid out
+        # on dst, so a traversal neither re-derives nor re-shuffles them
+        from ekati_spark.queries.graph import _graph
+
         engine = QueryEngine(
-            spark,
-            PropertyGraph.from_relational(spark, argv[0]),
-            on_progress=show_progress,
+            spark, _graph(spark, argv[0]), on_progress=show_progress
         )
         print(f"loaded FK graph from {argv[0]}")
     else:

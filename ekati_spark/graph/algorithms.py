@@ -10,9 +10,10 @@ edge table, and checkpointing stops the lazy plan from re-deriving every
 earlier superstep (see graph/traverse.py for the same pattern).
 
 Scale: state and edges stay distributed; each superstep is one shuffle on
-the edge key (or zero when the edge table is pre-partitioned by src —
-``PropertyGraph.partition_edges``). No collect() of vertex state; the
-only driver-side values are scalar convergence counts.
+the edge key, none over an edge relation persisted hash-partitioned on
+the join key (``checkpoint.py``; ``from_relational``'s FK edges are on
+``dst``, the co-purchase relation on ``v``). No collect() of vertex
+state; the only driver-side values are scalar convergence counts.
 """
 
 from __future__ import annotations

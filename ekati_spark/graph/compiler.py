@@ -23,6 +23,17 @@ already distinct (after a follow or a skip/take window). A get with
 steps fires no Spark job until its action (a follow of more than one
 hop cuts its inner frontiers).
 
+Shuffles: over the FK graph's persisted edges, hash-partitioned on
+``dst`` (``PropertyGraph.from_relational``), a follow step's output
+arrives clustered on ``node_id`` (``graph/traverse.py``), and so does a
+filter's semi-join of it against a broadcast node set. The
+materialization's inner join keeps that clustering when it broadcasts
+the props, as it does on a bucketed layout from sf0.001 to sf0.1, so its
+latest-wins window over ``(node_id, remote, key)`` runs with no Exchange
+either: a served one_hop, two_hop or follow-filter-fields plans none. A
+skip/take window sorts globally and shuffles once. After a put the edges
+are a union with no layout and each hop shuffles again.
+
 Determinism: the reference's stream order is storage order; skip/limit
 here use the canonical node_id ordering (SURVEY §5d).
 """

@@ -19,9 +19,9 @@ keeps all versions ordered by ts.
 lineitem etc.) so traversal results are verifiable by the relational
 DuckDB oracle via joins.
 
-Scale: both DataFrames stay distributed; ``edges`` can be pre-hash-
-partitioned on ``src`` (``partition_edges``) so every BFS hop reuses the
-same partitioning instead of reshuffling.
+Scale: both DataFrames stay distributed. ``from_relational``'s edges
+are hash-partitioned on ``dst``, so a traversal over them, persisted,
+runs no Exchange (its docstring).
 """
 
 from __future__ import annotations
@@ -109,10 +109,6 @@ class PropertyGraph:
             F.col("ts"),
         )
         return PropertyGraph(self.props, rev)
-
-    def partition_edges(self, n: int) -> "PropertyGraph":
-        """Hash-partition edges by src once so each BFS hop co-locates."""
-        return PropertyGraph(self.props, self.edges.repartition(n, "src"))
 
     # -- mutation / lookup (SURVEY §2 #8, #9) ------------------------------
 
@@ -213,6 +209,18 @@ class PropertyGraph:
         lineitem-[of_part]->part, lineitem-[from_supplier]->supplier,
         customer/supplier-[in_nation]->nation, nation-[in_region]->region.
         Props carry each table's scalar columns long-format.
+
+        The edges are hash-partitioned on ``dst`` into
+        ``defaultParallelism`` partitions. A traversal hop is
+        ``edges ⋉ frontier`` with the frontier broadcast, so its output
+        keeps that layout, clustered on the reached node: a caller that
+        persists the edges (the registry's ``fk_graph`` store) serves a
+        hop's group-by, the visited anti-join and the materialization
+        with no Exchange. ``src`` would be the wrong key: a broadcast
+        frontier never needs the edges clustered on it. A put unions new
+        edges in (``QueryEngine._append``), which drops the layout:
+        traversals then shuffle each hop's output, as over any edges
+        with no layout.
         """
         cust = load_table(spark, sf_dir, "customer")
         ords = load_table(spark, sf_dir, "orders")
@@ -247,6 +255,7 @@ class PropertyGraph:
             .unionByName(edge(cust, nid("customer", F.col("c_custkey")), "in_nation", nid("nation", F.col("c_nationkey"))))
             .unionByName(edge(supp, nid("supplier", F.col("s_suppkey")), "in_nation", nid("nation", F.col("s_nationkey"))))
             .unionByName(edge(nat, nid("nation", F.col("n_nationkey")), "in_region", nid("region", F.col("n_regionkey"))))
+            .repartition(spark.sparkContext.defaultParallelism, "dst")
         )
 
         def sprops(df, id_col, mapping: dict[str, F.Column]) -> DataFrame:

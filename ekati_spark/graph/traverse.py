@@ -21,10 +21,16 @@ Each hop is a left-semi join ``hop_edges ⋉ frontier`` on ``src =
 node_id`` (Pregelix: a message-passing superstep is a join whose type
 the planner picks), so the frontier is only probed, never made
 distinct: a node stream may repeat a node and the hop returns the same
-edges. AQE broadcasts the frontier when it is small. Each non-final
-hop's result is eagerly cut (it feeds 3 downstream plans; see
-``follow``'s docstring), which also caps lineage growth (bounded hops
-make the driver loop safe; SURVEY §7 risks); the final hop stays lazy.
+edges. AQE broadcasts the frontier when it is small. The semi-join then
+keeps the edges' own partitioning, so edges hash-partitioned on ``dst``
+(Pregelix partitions a superstep's messages on the destination vertex)
+deliver each hop's reached nodes already clustered on ``node_id``: the
+per-hop group-by, the visited anti-join and the final group-by need no
+Exchange once those edges are persisted (a cut or uncached frame reports
+no partitioning; ``checkpoint.py``). Each non-final hop's result is
+eagerly cut (it feeds 3 downstream plans; see ``follow``'s docstring),
+which also caps lineage growth (bounded hops make the driver loop safe;
+SURVEY §7 risks); the final hop stays lazy.
 """
 
 from __future__ import annotations
@@ -133,6 +139,13 @@ def follow(
     Returns a DataFrame of ``node_id`` (plus ``hop`` when ``with_hop``) of
     every node emitted by the follow spec, deduplicated query-wide.
 
+    Over persisted edges hash-partitioned on ``dst`` the hops run no
+    Exchange (module docstring). Seeds that read a cached frame (the
+    stream out of an earlier ``follow`` step) are broadcast twice at
+    hop 1, as the frontier and as the visited set: AQE does not reuse
+    two broadcasts over one cached frame (``checkpoint.py``; one extra
+    job in a served two_hop).
+
     Each non-final hop's frontier is **eagerly cut** (``cut_lineage``):
     the next hop's join, the visited anti-join, and the emitted union
     all reference the same per-hop plan, and without materialization the
@@ -171,7 +184,8 @@ def follow(
         hop_edges = edges(frontier, hop) if callable(edges) else edges
         # semi-join on the frontier's own node_id: at hop 1 the frontier
         # and the visited set are the same seeds plan, so AQE reuses one
-        # broadcast of it for this join and the anti-join below
+        # broadcast of it for this join and the anti-join below -- unless
+        # the seeds read a cached frame (follow's docstring)
         step = (
             hop_edges.join(
                 frontier, hop_edges.src == frontier.node_id, "left_semi"

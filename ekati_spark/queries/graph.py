@@ -23,14 +23,18 @@ from ekati_spark.session_store import get_or_build
 from ekati_spark.queries.base import register
 
 
-# One FK-graph per (session, sf_dir), edges persisted: a deployment
-# materializes its edge table once (at 100 TB: a bucketed parquet/Delta
-# table partitioned by src); re-deriving the 7-way union-of-scans per
-# query re-reads lineitem 3× per hop. MEMORY_AND_DISK spills safely.
+# One FK-graph per (session, sf_dir), edges persisted with the
+# from_relational layout, hash-partitioned on dst, so a traversal's hops
+# and materialization read them with no Exchange (graph/traverse.py): a
+# deployment materializes its edge table once; re-deriving the 7-way
+# union-of-scans per query re-reads lineitem 3× per hop. MEMORY_AND_DISK
+# spills safely. Filled at build, so the store's build cost is its own
+# and not the first reader's.
 def _graph(spark, sf_dir) -> PropertyGraph:
     def build() -> PropertyGraph:
         g = PropertyGraph.from_relational(spark, sf_dir)
         g.edges = g.edges.persist()
+        g.edges.count()
         return g
 
     return get_or_build(

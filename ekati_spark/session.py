@@ -3,9 +3,10 @@
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: all cores);
 the config below is chosen so the same code path scales to a real
 multi-executor cluster: AQE on (runtime coalesce + skew-join handling),
-shuffle partitions sized to the parallelism, Arrow enabled for the
-Pandas-UDF operators, UTC session timezone so results compare exactly
-against the DuckDB oracle (DuckDB timestamps are UTC-naive).
+shuffle partitions and a bounded fetch's first wave sized to the
+parallelism, Arrow enabled for the Pandas-UDF operators, UTC session
+timezone so results compare exactly against the DuckDB oracle (DuckDB
+timestamps are UTC-naive).
 """
 
 from __future__ import annotations
@@ -26,6 +27,10 @@ def get_spark(app_name: str = "ekati_spark", cores: int | None = None) -> SparkS
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
+        # a bounded fetch (take/first/limit().collect()) scans one wave
+        # of n tasks in its first job, not one partition and then more
+        # jobs: a served result on n partitions is one job, not 2-4
+        .config("spark.sql.limit.initialNumPartitions", str(n))
         .config("spark.default.parallelism", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -93,3 +93,37 @@ def test_lazy_cut_runs_shuffle_stages_at_call_time(spark, job_ids):
     _, uncut = job_ids(frame)
     assert len(uncut) == 0
     assert 0 < len(lazy) < len(eager), (lazy, eager)
+
+
+def test_aqe_reuses_no_broadcast_of_a_cached_frame(spark, job_ids):
+    """Under AQE a cached frame read twice in one plan is not one shared
+    broadcast: each read is its own TableCacheQueryStage, so two
+    identical broadcasts of it both run and no ReusedExchange is
+    planned. With AQE off, or over an uncached frame, one broadcast is
+    reused. A served two_hop pays this once: the stream out of its
+    first follow is broadcast as the next frontier and again as the
+    visited set (checkpoint.py docstring)."""
+    from ekati_spark.metrics import final_tree
+
+    cached = spark.range(400).select((F.col("id") % 50).alias("k"), "id")
+    cached = cached.persist()
+    cached.count()
+    uncached = spark.range(400).select((F.col("id") % 49).alias("k"), "id")
+    probe = spark.range(300).select((F.col("id") % 70).alias("k"))
+
+    def jobs_and_reuses(base, aqe):
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        t = base.filter(F.col("id") < 100).select("k")
+        df = probe.join(t, "k", "left_semi").join(t, "k", "left_anti")
+        _, jobs = job_ids(df.collect)
+        tree = final_tree(df._jdf.queryExecution().executedPlan().toString())
+        return len(jobs), sum(n.startswith("ReusedExchange") for _, n in tree)
+
+    try:
+        assert jobs_and_reuses(cached, "true") == (3, 0)
+        assert jobs_and_reuses(cached, "false") == (2, 1)
+        assert jobs_and_reuses(uncached, "true") == (2, 1)
+        assert jobs_and_reuses(uncached, "false") == (2, 1)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        cached.unpersist()

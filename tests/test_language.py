@@ -421,7 +421,19 @@ def test_save_load_preserves_fk_edges(spark, sf_dir, tmp_path):
     assert (s0.n_edges, s0.n_edge_labels) == (s1.n_edges, s1.n_edge_labels)
 
 
-def test_repl_end_to_end(spark, monkeypatch, capsys):
+@pytest.fixture()
+def repl_cores(spark, monkeypatch):
+    """``cli.main`` calls ``get_spark()``, which re-applies its runtime
+    confs (shuffle partitions, a bounded fetch's first wave) for
+    ``SPARK_GRAFT_CPUS`` cores to the running session: pin that to the
+    session's own core count, so a REPL test leaves the confs later
+    tests count jobs under as they were."""
+    monkeypatch.setenv(
+        "SPARK_GRAFT_CPUS", str(spark.sparkContext.defaultParallelism)
+    )
+
+
+def test_repl_end_to_end(spark, monkeypatch, capsys, repl_cores):
     """CLI REPL: put → get → :stats → :quit drive through the real main
     loop (input() monkeypatched)."""
     import builtins
@@ -458,6 +470,26 @@ def test_repl_end_to_end(spark, monkeypatch, capsys):
     assert "repl_demo" in out and "Demo plugin" in out
     assert "== Physical Plan ==" in out  # :explain printed a plan
     assert "error: :explain takes a get pipeline" in out
+
+
+def test_repl_serves_fk_graph_store(
+    spark, sf_dir, monkeypatch, capsys, repl_cores
+):
+    """Given an sf dir, the REPL serves the registry's persisted FK graph
+    store (`queries.graph._graph`), not an unpersisted re-derivation."""
+    import builtins
+
+    from ekati_spark import session_store
+    from ekati_spark.cli import main
+    from ekati_spark.queries.graph import _graph
+
+    _graph(spark, sf_dir)
+    hits = session_store.stats()["fk_graph"]["hits"]
+    lines = iter(['get "customer:1" |> follow "placed" 1', ":quit"])
+    monkeypatch.setattr(builtins, "input", lambda prompt="": next(lines))
+    assert main([sf_dir]) == 0
+    assert session_store.stats()["fk_graph"]["hits"] == hits + 1
+    assert '"order:' in capsys.readouterr().out
 
 
 def test_parser_rejects_trailing_garbage():

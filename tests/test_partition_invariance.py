@@ -53,6 +53,10 @@ CASES = [
     "g13_pagerank",
     # BFS traversal with visited-set dedup
     "g02_follow_two_hop",
+    # the served DSL path (follow, filter, fields, latest-wins window)
+    # over the FK graph store, its edges laid out on dst at the store's
+    # first build and served at 3 and 17
+    "g46_dsl_end_to_end",
     # supersteps over a session-stored relation built at one partition
     # count (the first run's, or an earlier test's), run at 3 and 17
     "g43_neighborhood_function",

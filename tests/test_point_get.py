@@ -4,7 +4,8 @@ general path does and build with no Spark job; traversals from exact
 seeds stream only the seeds that exist, each once, and build with no
 Spark job either. A run of skip/take steps is one ordered window over
 the distinct stream. All of it holds in memory and on a bucketed
-layout."""
+layout. Over the FK graph's persisted edges, laid out on ``dst``, a
+served traversal runs no shuffle."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 from ekati_spark.graph.compiler import QueryEngine
 from ekati_spark.graph.model import PropertyGraph
 from ekati_spark.graph.storage import write_bucketed_props
+from ekati_spark.metrics import final_tree
 from ekati_spark.plugins import PLUGINS, register_plugin
 from ekati_spark.schemas import PROPS_SCHEMA, prop_row
 
@@ -223,3 +225,43 @@ def test_traversal_shapes_run_as_one_action(spark, graphs, job_ids):
     taken, take_jobs = action_jobs('get "n5" |> follow "knows" 1 |> take 2')
     assert (fused, taken) == (["n9"], ["n6", "n9"])
     assert fused_jobs <= take_jobs, (fused_jobs, take_jobs)
+
+
+# served shapes over the FK graph -> their job bound for a server fetch
+_FK_SHAPES = {
+    "one_hop": ('get "customer:1" |> follow "placed" 1', 3),
+    "two_hop": (
+        'get "customer:1" |> follow "in_nation" 1 |> follow "in_region" 1', 5
+    ),
+}
+
+
+def test_fk_serve_runs_no_shuffle(spark, sf_dir, tmp_path, job_ids):
+    """The registry's FK edges are persisted hash-partitioned on `dst`,
+    so a served traversal over them (props on a bucketed layout) plans
+    no shuffle Exchange, and the server's bounded fetch of one_hop fires
+    at most 3 jobs (two_hop 5), with the rows of the same graph whose
+    edges carry no layout (as after a put)."""
+    from ekati_spark.queries.graph import _graph
+
+    fk = _graph(spark, sf_dir)
+    assert fk.edges.is_cached
+    # the cached scan's own partitioning (executedPlan is AQE's wrapper)
+    part = fk.edges._jdf.queryExecution().sparkPlan().outputPartitioning()
+    assert part.toString().startswith("hashpartitioning(dst"), part.toString()
+    path = str(tmp_path / "props")
+    write_bucketed_props(fk.props, path, n_buckets=8)
+    served = PropertyGraph.from_bucketed(spark, path)
+    served.edges = fk.edges
+    engine = QueryEngine(spark, graph=served)
+    unlaid = QueryEngine(
+        spark, graph=PropertyGraph(fk.props, fk.edges.repartition(3))
+    )
+    for name, (q, max_jobs) in _FK_SHAPES.items():
+        rows, jobs = job_ids(engine.execute(q).limit(1000).collect)
+        assert 0 < len(jobs) <= max_jobs, (name, jobs)
+        assert rows and sorted(rows) == sorted(unlaid.execute(q).collect()), name
+    one_hop = engine.execute(_FK_SHAPES["one_hop"][0])
+    one_hop.collect()
+    tree = final_tree(one_hop._jdf.queryExecution().executedPlan().toString())
+    assert not [n for _, n in tree if n.startswith("Exchange ")], tree

@@ -6,9 +6,13 @@ built there) and then N warm runs, each through
 tag and written to the noop sink under another, so every record splits
 wall time, jobs, stages, executor time, shuffle, spill and peak memory
 into its build and action layers, and counts the plan's Exchanges and
-joins. Prints one JSON line per run, then one summary line: the min and
-median of every numeric field over the warm runs. The session is warmed
-first by ``bench.warm_up``, as ``bench.py`` warms it.
+joins. Each record also carries ``stores``: per session-store slot kind
+the run missed, its misses and build seconds (``session_store.stats()``
+before and after), so a cold record shows which part of its build was a
+store build. Prints one JSON line per run, then one summary line: the
+min and median of every numeric field over the warm runs. The session is
+warmed first by ``bench.warm_up``, as ``bench.py`` warms it, which
+builds the FK graph store; the first line records that warm-up.
 
 Usage: python tools/qprofile.py [--n N] [--plans DIR] [sf_dir] [query...]
 
@@ -30,6 +34,7 @@ import json
 import os
 import statistics
 import sys
+import time
 
 
 def _summary(runs: list[dict]) -> dict:
@@ -38,6 +43,18 @@ def _summary(runs: list[dict]) -> dict:
         "min": {k: min(r[k] for r in runs) for k in keys},
         "median": {k: statistics.median(r[k] for r in runs) for k in keys},
     }
+
+
+def _store_delta(before: dict, after: dict) -> dict:
+    """Per store slot kind that missed between two ``stats()`` reads:
+    the misses and the seconds spent building."""
+    out = {}
+    for kind, c in after.items():
+        b = before.get(kind, {"misses": 0, "build_s": 0.0})
+        if c["misses"] > b["misses"]:
+            out[kind] = {"misses": c["misses"] - b["misses"],
+                         "build_s": c["build_s"] - b["build_s"]}
+    return out
 
 
 def _rounded(v):
@@ -68,6 +85,7 @@ def main() -> None:
     )
     import bench
     import ekati_spark.queries as Q
+    from ekati_spark import session_store
     from ekati_spark.metrics import profile
     from ekati_spark.session import get_spark
 
@@ -79,7 +97,11 @@ def main() -> None:
         os.makedirs(opts.plans, exist_ok=True)
 
     spark = get_spark("ekati_profile")
+    before, t0 = session_store.stats(), time.perf_counter()
     bench.warm_up(spark, sf_dir)
+    print(_line({"label": "warm_up", "s": time.perf_counter() - t0,
+                 "stores": _store_delta(before, session_store.stats())}),
+          flush=True)
     for name in names:
         last = {}
 
@@ -89,7 +111,9 @@ def main() -> None:
 
         runs = []
         for i in range(opts.n + 1):
+            before = session_store.stats()
             rec = profile(spark, build, name)
+            rec["stores"] = _store_delta(before, session_store.stats())
             print(_line({"run": f"warm{i}" if i else "cold", **rec}), flush=True)
             runs.append(rec)
         warm = runs[1:] or runs
