@@ -1,15 +1,21 @@
-"""Lineage-cut policy for iterative kernels (PageRank, BFS, star-CC,
-k-means, k-truss, ...).
+"""Lineage-cut policy for iterative kernels (``graph/algorithms.py``'s
+``_relax_min`` under BFS, multi-source BFS, bounded Bellman-Ford,
+earliest arrival and min-label components; star-CC, k-core, k-truss,
+k-means, ...).
 
 A driver-side loop whose round reads its state twice must cut lineage
 once per round — otherwise the plan doubles every round, and each
-action re-derives the whole iteration history. A loop of fixed, small
-depth whose state has one consumer per round needs no cut: its plan
-grows by one round's operators per round and runs as one action.
-g43's HyperBall reads its one-row-per-node register state once per
-superstep (one join against the stored relation, one group-by), so its
-three supersteps are one lazy plan; keeping ``state ∪ contributions``
-read the state twice and doubled the plan each superstep. Two modes:
+action re-derives the whole iteration history. ``_relax_min``'s
+frontier is read by the next round's join, by every later round's
+visited anti join and by the result, so it is cut once per round. A
+loop of fixed, small depth whose state has one consumer per round needs
+no cut: its plan grows by one round's operators per round and runs as
+one action. g43's HyperBall reads its one-row-per-node register state
+once per superstep (one join against the stored relation, one
+group-by), so its three supersteps are one lazy plan; keeping ``state ∪
+contributions`` read the state twice and doubled the plan each
+superstep. PageRank's ranks are likewise read once per superstep and
+are not cut. Two modes:
 
 - ``local`` (default): ``DataFrame.localCheckpoint`` — executor-local
   block storage, zero HDFS round-trip, the right call on a healthy

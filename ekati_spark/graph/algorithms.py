@@ -4,21 +4,32 @@ The reference has no analytics surface (its only traversal is the bounded
 ``follow`` pipeline, ``src/core/FileStore.fs:166-220``); these extend the
 engine per the GraphX-for-analytics design (SURVEY.md §1.5): the vertex
 state is a DataFrame, each superstep is a join-aggregate against the edge
-table, and the driver loop carries the iteration. Every superstep result
-is eagerly localCheckpoint-ed — vertex state is O(|V|), small next to the
-edge table, and checkpointing stops the lazy plan from re-deriving every
-earlier superstep (see graph/traverse.py for the same pattern).
+table, and the driver loop carries the iteration. A superstep's result is
+cut (``cut_lineage``) only when it has two or more consumers, by
+``checkpoint.py``'s rule: an uncut frame that is read twice is re-derived
+by each reader, with every earlier superstep below it. State read once
+per superstep over a fixed, small number of supersteps (PageRank's ranks)
+stays one lazy plan.
+
+BFS, multi-source BFS, bounded Bellman-Ford, earliest arrival and
+min-label components are one vertex program, a per-key minimum relaxed
+from the nodes that improved last round; they share one loop,
+``_relax_min`` (Pregelix, VLDB 2014: a vertex program is one
+join-then-group-by dataflow plan).
 
 Scale: state and edges stay distributed; each superstep is one shuffle on
 the edge key, none over an edge relation persisted hash-partitioned on
 the join key (``checkpoint.py``; ``from_relational``'s FK edges are on
 ``dst``, the co-purchase relation on ``v``). No collect() of vertex
-state; the only driver-side values are scalar convergence counts.
+state; the only driver-side values are scalar convergence counts and
+emptiness probes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ekati_spark.checkpoint import cut_lineage
 
@@ -29,6 +40,81 @@ def _nodes(edges: DataFrame) -> DataFrame:
         .unionByName(edges.select(F.col("dst").alias("node_id")))
         .distinct()
     )
+
+
+def _relax_min(
+    edges: DataFrame,
+    start: DataFrame,
+    value: str,
+    step: Column,
+    keys: tuple[str, ...] = (),
+    cond: Column | None = None,
+    *,
+    max_rounds: int,
+) -> tuple[DataFrame, bool]:
+    """Label-correcting per-key minimum of ``value``, relaxed along
+    ``edges`` (``src``, ``dst``, ...) from ``start`` (``*keys, node_id,
+    value``).
+
+    Each round joins last round's improved rows (the frontier, alias
+    ``f``) to ``edges`` (alias ``e``) on ``f.node_id = e.src`` and
+    ``cond``, and takes ``min(step)`` per ``(*keys, e.dst)``. A row is
+    kept only where no earlier round holds a ``value <=`` it for its
+    ``(*keys, node_id)``: a left-anti join against the union of earlier
+    rounds. The kept rows are the next frontier, cut once per round: the
+    next join, every later anti join and the result read them. When
+    ``step`` never gets worse as ``f``'s value gets better, pruning to
+    the improved rows keeps the Bellman-Ford invariant: after k rounds
+    the minimum is the one over paths of at most k edges.
+
+    Stops when a round comes back empty or after ``max_rounds`` rounds.
+    Returns ``(per-key minimum over start and every round, converged)``;
+    ``converged`` says a round came back empty.
+    """
+    cols = [*keys, "node_id"]
+    frontier = start.select(*cols, value).transform(cut_lineage)
+    rounds, converged = [frontier], False
+    for _ in range(max_rounds):
+        on = F.col("f.node_id") == F.col("e.src")
+        relaxed = (
+            frontier.alias("f")
+            .join(edges.alias("e"), on if cond is None else on & cond)
+            .groupBy(
+                *(F.col(f"f.{k}").alias(f"_{k}") for k in keys),
+                F.col("e.dst").alias("_node_id"),
+            )
+            .agg(F.min(step).alias(f"_{value}"))
+        )
+        # Renamed there and back: the optimizer drops an alias that keeps
+        # a column's name, so a cut of ``f.seed AS seed`` would keep
+        # constraints on the frontier's ``f``-qualified column, and
+        # Spark 4.1.2's constraint inference over the union of rounds
+        # then fails (key not found). The anti join is a shuffled hash
+        # join: ``relaxed`` is already clustered on its keys, AQE turning
+        # a sort-merge plan into a broadcast after the shuffle costs one
+        # more job, and a merge join's two sorts cost more than the hash
+        # build (g14, g23 and a g34 BFS at sf0.01, local[4]: 15-25%
+        # slower as a merge join).
+        frontier = (
+            relaxed.join(
+                reduce(DataFrame.unionByName, rounds).hint("shuffle_hash"),
+                [F.col(f"_{c}") == F.col(c) for c in cols]
+                + [F.col(value) <= F.col(f"_{value}")],
+                "left_anti",
+            )
+            .select(*(F.col(f"_{c}").alias(c) for c in (*cols, value)))
+            .transform(cut_lineage)
+        )
+        if frontier.isEmpty():
+            converged = True
+            break
+        rounds.append(frontier)
+    best = (
+        reduce(DataFrame.unionByName, rounds)
+        .groupBy(*cols)
+        .agg(F.min(value).alias(value))
+    )
+    return best, converged
 
 
 def page_rank(
@@ -43,7 +129,8 @@ def page_rank(
 
     Returns ``(node_id, rank)``. One shuffle per superstep (groupBy dst);
     the contribution join reuses the checkpointed (edges ⋈ out-degree)
-    relation across supersteps.
+    relation across supersteps. ``ranks`` is read once per superstep,
+    so the supersteps are one lazy plan.
     """
     nodes = _nodes(edges).transform(cut_lineage)
     n = nodes.count()
@@ -73,14 +160,11 @@ def page_rank(
                     + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .transform(cut_lineage)
         )
     return ranks
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20, require_converged: bool = True
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Weakly connected components by iterative min-label propagation over
     the undirected edge set; converges in ≤ diameter supersteps (driver
     loop exits early when no label changes). Label = min node_id (string
@@ -92,20 +176,14 @@ def connected_components(
     propagation is for FK-shaped graphs whose diameter is bounded by the
     schema's join depth.
 
-    ``require_converged`` (default True) makes budget exhaustion LOUD: if
-    labels were still changing after ``max_iter`` supersteps the result
-    would be silently wrong on any graph whose diameter exceeds the
-    budget, so we raise instead of returning partial labels. Pass False
-    only when a bounded-propagation view is genuinely wanted.
-
-    Labels changing ON the final budgeted superstep is not yet proof of
-    non-convergence — a graph whose diameter exactly consumes the budget
-    reaches the fixpoint on that pass (confirmable only by one spare
-    no-change pass). So when the budget ends with changes, ONE extra
-    confirming superstep runs; we raise only if IT still changes labels
-    (it never advances the result: either it changes nothing, or we
-    raise). The bounded-propagation view (require_converged=False)
-    keeps exactly ``max_iter`` supersteps.
+    Budget exhaustion is LOUD: labels still changing after ``max_iter``
+    supersteps would be silently wrong on any graph whose diameter
+    exceeds the budget, so it raises instead of returning partial
+    labels. Labels changing ON the final budgeted superstep are not yet
+    proof of non-convergence — a graph whose diameter exactly consumes
+    the budget reaches the fixpoint on that pass — so one spare
+    superstep confirms it (``max_iter + 1`` rounds of ``_relax_min``),
+    and only a spare superstep that still changes labels raises.
     """
     und = (
         edges.select("src", "dst")
@@ -115,48 +193,19 @@ def connected_components(
         .distinct()
         .transform(cut_lineage)
     )
-    labels = _nodes(edges).withColumn("component", F.col("node_id"))
-    labels = labels.transform(cut_lineage)
-
-    def superstep(cur: DataFrame) -> tuple[DataFrame, int]:
-        neighbor_min = (
-            cur.join(und, cur.node_id == und.src)
-            .groupBy(F.col("dst").alias("node_id"))
-            .agg(F.min("component").alias("nbr_min"))
+    labels, converged = _relax_min(
+        und,
+        _nodes(edges).withColumn("component", F.col("node_id")),
+        "component",
+        F.col("f.component"),
+        max_rounds=max_iter + 1,
+    )
+    if not converged:
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} supersteps — graph diameter exceeds the "
+            "budget; raise max_iter or use connected_components_star"
         )
-        new_labels = (
-            cur.join(neighbor_min, "node_id", "left")
-            .select(
-                "node_id",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", "component")
-                ).alias("component"),
-            )
-            .transform(cut_lineage)
-        )
-        n_changed = (
-            new_labels.join(cur.withColumnRenamed("component", "old"), "node_id")
-            .filter(F.col("component") != F.col("old"))
-            .count()
-        )
-        return new_labels, n_changed
-
-    changed = 0
-    for _ in range(max_iter):
-        labels, changed = superstep(labels)
-        if changed == 0:
-            break
-    if changed != 0 and require_converged:
-        # changes on the final budgeted pass may BE the fixpoint pass:
-        # confirm with one spare superstep, raise only if it moves
-        _, changed = superstep(labels)
-        if changed != 0:
-            raise RuntimeError(
-                f"connected_components: {changed} labels still changing "
-                f"after max_iter={max_iter} supersteps — graph diameter "
-                "exceeds the budget; raise max_iter or use "
-                "connected_components_star"
-            )
     return labels
 
 
@@ -170,23 +219,10 @@ def shortest_hops(
     ``traverse.follow`` — min-hop per node is guaranteed because BFS
     visits in hop order.
     """
-    seeds = seeds.select("node_id").distinct().transform(cut_lineage)
-    out = seeds.withColumn("hops", F.lit(0))
-    visited = seeds
-    frontier = seeds
-    for hop in range(1, max_hops + 1):
-        frontier = (
-            frontier.join(edges, frontier.node_id == edges.src)
-            .select(F.col("dst").alias("node_id"))
-            .distinct()
-            .join(visited, "node_id", "left_anti")
-            .transform(cut_lineage)
-        )
-        if frontier.isEmpty():
-            break
-        out = out.unionByName(frontier.withColumn("hops", F.lit(hop)))
-        visited = visited.unionByName(frontier)
-    return out
+    start = seeds.select("node_id").distinct().withColumn("hops", F.lit(0))
+    return _relax_min(
+        edges, start, "hops", F.col("f.hops") + 1, max_rounds=max_hops
+    )[0]
 
 
 def multi_source_hops(
@@ -200,29 +236,21 @@ def multi_source_hops(
     table. This is the sampled-centrality shape (Eppstein-Wang): exact
     distances from a deterministic seed sample, aggregated downstream
     into closeness/harmonic estimates, instead of the all-pairs BFS
-    that cannot exist at 100 TB. Frontier/visited discipline matches
-    ``shortest_hops`` (per-seed visited set ⇒ hop order gives min-d)."""
-    s = (
+    that cannot exist at 100 TB. ``shortest_hops`` keyed on the seed
+    (per-seed visited set ⇒ hop order gives min-d)."""
+    start = (
         seeds.select(F.col("node_id").alias("seed"))
         .distinct()
-        .transform(cut_lineage)
+        .select("seed", F.col("seed").alias("node_id"), F.lit(0).alias("hops"))
     )
-    frontier = s.withColumn("node_id", F.col("seed"))
-    visited = frontier
-    out = frontier.withColumn("hops", F.lit(0))
-    for hop in range(1, max_hops + 1):
-        frontier = (
-            frontier.join(edges, frontier.node_id == edges.src)
-            .select("seed", F.col("dst").alias("node_id"))
-            .distinct()
-            .join(visited, ["seed", "node_id"], "left_anti")
-            .transform(cut_lineage)
-        )
-        if frontier.isEmpty():
-            break
-        out = out.unionByName(frontier.withColumn("hops", F.lit(hop)))
-        visited = visited.unionByName(frontier).transform(cut_lineage)
-    return out
+    return _relax_min(
+        edges,
+        start,
+        "hops",
+        F.col("f.hops") + 1,
+        keys=("seed",),
+        max_rounds=max_hops,
+    )[0]
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -385,7 +413,6 @@ def personalized_page_rank(
                     + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .transform(cut_lineage)
         )
     return ranks
 
@@ -481,50 +508,25 @@ def weighted_shortest_paths(
     minimum total edge cost over paths of at most ``max_hops`` edges
     from any seed (seeds at cost 0). ``edges`` is ``(src, dst, cost)``.
 
-    Frontier-pruned relaxation: each round propagates only nodes whose
-    distance improved last round (a node's unchanged distance was
-    already propagated the round after it last improved, so pruning
-    preserves the round-k invariant dist_k = min cost over <= k-edge
-    paths). Per-round state is O(|V|) and eagerly checkpointed, same
-    discipline as ``shortest_hops``; costs stay integral (long), so
-    min() is exact — no float path-sum ordering issues.
+    Frontier-pruned relaxation (``_relax_min``): each round propagates
+    only nodes whose distance improved last round (a node's unchanged
+    distance was already propagated the round after it last improved,
+    so pruning preserves the round-k invariant dist_k = min cost over
+    <= k-edge paths). Costs stay integral (long), so min() is exact —
+    no float path-sum ordering issues.
     """
-    dist = (
+    start = (
         seeds.select("node_id")
         .distinct()
         .withColumn("cost", F.lit(0).cast("long"))
-        .transform(cut_lineage)
     )
-    frontier = dist
-    for _ in range(max_hops):
-        f, e = frontier.alias("f"), edges.alias("e")
-        relaxed = (
-            f.join(e, F.col("f.node_id") == F.col("e.src"))
-            .select(
-                F.col("e.dst").alias("node_id"),
-                (F.col("f.cost") + F.col("e.cost")).alias("cost"),
-            )
-            .groupBy("node_id")
-            .agg(F.min("cost").alias("cost"))
-        )
-        improved = (
-            relaxed.join(
-                dist.withColumnRenamed("cost", "old"), "node_id", "left"
-            )
-            .filter(F.col("old").isNull() | (F.col("cost") < F.col("old")))
-            .select("node_id", "cost")
-            .transform(cut_lineage)
-        )
-        if improved.isEmpty():
-            break
-        dist = (
-            dist.unionByName(improved)
-            .groupBy("node_id")
-            .agg(F.min("cost").alias("cost"))
-            .transform(cut_lineage)
-        )
-        frontier = improved
-    return dist
+    return _relax_min(
+        edges,
+        start,
+        "cost",
+        F.col("f.cost") + F.col("e.cost"),
+        max_rounds=max_hops,
+    )[0]
 
 
 def earliest_arrival(
@@ -537,49 +539,34 @@ def earliest_arrival(
     reachability (g22) cannot express (u→v at t=5 then v→w at t=3 is
     NOT a path).
 
-    Label-correcting iteration: per round, expand the improved
-    frontier through time-valid edges, min-merge arrivals, keep only
-    nodes whose best arrival improved. Earliest-arrival dominance
+    Label-correcting iteration (``_relax_min``): per round, expand the
+    improved frontier through time-valid edges, min-merge arrivals, keep
+    only nodes whose best arrival improved. Earliest-arrival dominance
     (arriving earlier never removes options) makes per-node min a safe
     prune, so the fixpoint equals the min over the full closure —
     which is what the oracle computes. State is (node, best_t) —
-    O(|V|), distributed, checkpointed per round; rounds ≤ the longest
-    strictly-time-increasing chain, with ``max_rounds`` as a loud
-    backstop.
+    O(|V|), distributed; rounds ≤ the longest strictly-time-increasing
+    chain. ``max_rounds`` is a loud backstop: a chain of up to
+    ``max_rounds`` contacts converges (one spare round confirms it), a
+    longer one raises instead of returning partial arrivals.
 
     ``seeds``: ``(node_id, t0)`` rows (t0 = just before the horizon of
     interest). Returns ``(node_id, t)`` earliest arrivals incl. seeds.
     """
-    best = seeds.select(
-        "node_id", F.col("t0").alias("t")
-    ).transform(cut_lineage)
-    frontier = best
-    for _ in range(max_rounds):
-        nxt = (
-            frontier.alias("f")
-            .join(
-                edges.alias("e"),
-                (F.col("f.node_id") == F.col("e.src"))
-                & (F.col("e.t") > F.col("f.t")),
-            )
-            .groupBy(F.col("e.dst").alias("node_id"))
-            .agg(F.min("e.t").alias("t"))
+    best, converged = _relax_min(
+        edges,
+        seeds.select("node_id", F.col("t0").alias("t")),
+        "t",
+        F.col("e.t"),
+        cond=F.col("e.t") > F.col("f.t"),
+        max_rounds=max_rounds + 1,
+    )
+    if not converged:
+        raise RuntimeError(
+            f"earliest_arrival: arrivals still improving after "
+            f"max_rounds={max_rounds} rounds — a time-respecting chain is "
+            "longer than the budget; raise max_rounds"
         )
-        improved = (
-            nxt.join(best.withColumnRenamed("t", "bt"), "node_id", "left")
-            .filter(F.col("bt").isNull() | (F.col("t") < F.col("bt")))
-            .select("node_id", "t")
-            .transform(cut_lineage)
-        )
-        if improved.isEmpty():
-            break
-        best = (
-            best.unionByName(improved)
-            .groupBy("node_id")
-            .agg(F.min("t").alias("t"))
-            .transform(cut_lineage)
-        )
-        frontier = improved
     return best
 
 
@@ -600,7 +587,8 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 40) -> DataFrame:
     Σ deg² over the CURRENT set — shrinking every round); survivor
     state is the edge list, checkpointed per round; the driver sees
     only the per-round count. Rounds ≤ peel depth (single digits on
-    real graphs)."""
+    real graphs); a peel still removing edges after ``max_iter`` rounds
+    raises, since its edge set is a superset of the truss."""
     e = edges.select("u", "v").transform(cut_lineage)
     n = e.count()
     for _ in range(max_iter):
@@ -628,6 +616,10 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 40) -> DataFrame:
         if m == n:
             break
         e, n = kept, m
+    else:
+        raise RuntimeError(
+            f"k_truss did not converge within {max_iter} peeling rounds"
+        )
     return e
 
 

@@ -1866,8 +1866,9 @@ _G36_SUPPORT_SUB = """
     -- simultaneous peel to fixpoint, g20's pattern at EDGE granularity:
     -- each level re-emits the surviving edge set (edges with triangle
     -- support >= k-2 within the level); the EXISTS guard stops once no
-    -- edge fails. Valid when the truss is nonempty (holds here; the
-    -- empty-truss case is pinned by the known-graph pytest).
+    -- edge fails. A peel that removes every edge emits no level, so the
+    -- last level is the truss only if none of its edges fails (`last`);
+    -- otherwise the truss is empty (sf0.1: 334 edges, all peeled).
     truss(iter, u, v) AS (
       SELECT 0, u, v FROM e
       UNION ALL
@@ -1880,8 +1881,14 @@ _G36_SUPPORT_SUB = """
             SELECT 1 FROM ({_G36_SUPPORT_SUB}) z
             WHERE z.su = y.u AND z.sv = y.v))
     ),
-    last AS (
+    fin AS (
       SELECT u, v FROM truss WHERE iter = (SELECT max(iter) FROM truss)
+    ),
+    last AS (
+      SELECT u, v FROM fin WHERE NOT EXISTS (
+        SELECT 1 FROM fin y WHERE NOT EXISTS (
+          SELECT 1 FROM ({_G36_SUPPORT_SUB.replace("truss", "fin")}) z
+          WHERE z.su = y.u AND z.sv = y.v))
     ),
     und AS (SELECT u, v FROM last UNION ALL SELECT v, u FROM last)
     SELECT u AS cust, CAST(count(*) AS BIGINT) AS truss_degree

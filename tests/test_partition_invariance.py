@@ -53,6 +53,10 @@ CASES = [
     "g13_pagerank",
     # BFS traversal with visited-set dedup
     "g02_follow_two_hop",
+    # the min-relaxation kernel's min-merge: bounded Bellman-Ford and
+    # earliest arrival
+    "g23_cheapest_trade_route",
+    "g35_temporal_reachability",
     # the served DSL path (follow, filter, fields, latest-wins window)
     # over the FK graph store, its edges laid out on dst at the store's
     # first build and served at 3 and 17

@@ -152,14 +152,15 @@ def test_hits_fixed_point_matches_numpy_replay(spark, sf_dir):
 
 
 def test_multi_source_hops_matches_per_seed_bfs(spark):
-    """Per-seed distances from the combined frontier must equal running
-    shortest_hops seed-by-seed (the 1-seed reference semantics)."""
-    from ekati_spark.graph.algorithms import multi_source_hops, shortest_hops
+    """Per-seed distances from the combined frontier must equal a plain
+    Python BFS from each seed over the same edge list, cut at the same
+    hop bound."""
+    from collections import deque
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (2, 6), (6, 5), (7, 8)],
-        "src long, dst long",
-    )
+    from ekati_spark.graph.algorithms import multi_source_hops
+
+    pairs = [(1, 2), (2, 3), (3, 4), (4, 5), (2, 6), (6, 5), (7, 8)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
     und = edges.unionByName(
         edges.selectExpr("dst as src", "src as dst")
     ).localCheckpoint(eager=True)
@@ -168,14 +169,50 @@ def test_multi_source_hops_matches_per_seed_bfs(spark):
         (r.seed, r.node_id): r.hops
         for r in multi_source_hops(und, seeds, max_hops=4).collect()
     }
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
     want = {}
     for s in (1, 7):
-        one = spark.createDataFrame([(s,)], "node_id long")
-        for r in shortest_hops(und, one, max_hops=4).collect():
-            want[(s, r.node_id)] = r.hops
+        dist, todo = {s: 0}, deque([s])
+        while todo:
+            u = todo.popleft()
+            for v in adj.get(u, ()):
+                if v not in dist and dist[u] < 4:
+                    dist[v] = dist[u] + 1
+                    todo.append(v)
+        want.update({(s, v): d for v, d in dist.items()})
     assert got == want
     # seed 1 reaches 5 in 3 hops (1-2-6-5), seed 7 only reaches 8
     assert got[(1, 5)] == 3 and got[(7, 8)] == 1 and (7, 5) not in got
+
+
+def test_multi_source_hops_result_takes_a_filter(spark):
+    """g33's shape: seeds filtered out of the edge relation, and a
+    filter over the result. Each round's cut must carry constraints on
+    its own columns only; one that kept the frontier's ``f.seed`` failed
+    constraint inference over the union of rounds (key not found)."""
+    from ekati_spark.graph.algorithms import multi_source_hops
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (2, 6), (6, 5), (7, 8)],
+        "src long, dst long",
+    )
+    und = edges.unionByName(
+        edges.selectExpr("dst as src", "src as dst")
+    ).localCheckpoint(eager=True)
+    seeds = und.select(F.col("src").alias("node_id")).filter(
+        F.col("node_id").isin(1, 7)
+    )
+    hops = multi_source_hops(und, seeds, max_hops=4)
+    got = {
+        (r.seed, r.node_id): r.hops
+        for r in hops.filter(F.col("hops") > 0).collect()
+    }
+    assert got == {
+        (1, 2): 1, (1, 3): 2, (1, 6): 2, (1, 4): 3, (1, 5): 3, (7, 8): 1,
+    }
 
 
 def test_ngram_novelty_curve_tiny_corpus(spark):
@@ -213,6 +250,26 @@ def test_earliest_arrival_respects_time_ordering(spark):
     assert got == {1: -1, 2: 5, 4: 7, 6: 9}
 
 
+def test_earliest_arrival_budget_is_loud(spark):
+    """A strictly time-increasing chain of 5 contacts needs 5 rounds: a
+    budget of 5 converges to the full chain, a budget of 4 raises
+    instead of returning the first 4 arrivals."""
+    from ekati_spark.graph.algorithms import earliest_arrival
+
+    edges = spark.createDataFrame(
+        [(i, i + 1, 10 * (i + 1)) for i in range(5)],
+        "src long, dst long, t int",
+    )
+    seeds = spark.createDataFrame([(0, -1)], "node_id long, t0 int")
+    got = {
+        r.node_id: r.t
+        for r in earliest_arrival(edges, seeds, max_rounds=5).collect()
+    }
+    assert got == {0: -1, 1: 10, 2: 20, 3: 30, 4: 40, 5: 50}
+    with pytest.raises(RuntimeError, match="still improving"):
+        earliest_arrival(edges, seeds, max_rounds=4)
+
+
 # -- k-truss (g36 kernel) ---------------------------------------------------
 
 
@@ -230,6 +287,22 @@ def test_k_truss_known_graph_and_empty_case(spark):
 
     lone = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "u long, v long")
     assert k_truss(lone, k=4).count() == 0
+
+
+def test_k_truss_budget_is_loud(spark):
+    """A diamond (K4 minus one edge) beside a K4 needs two peel rounds
+    for a 4-truss: round one drops the diamond's four rim edges
+    (support 1), which leaves its middle edge with support 0 for round
+    two. One round must raise instead of returning that superset."""
+    from ekati_spark.graph.algorithms import k_truss
+
+    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    diamond = [(10, 11), (10, 12), (10, 13), (11, 12), (11, 13)]
+    e = spark.createDataFrame(k4 + diamond, "u long, v long")
+    got = sorted((r.u, r.v) for r in k_truss(e, k=4).collect())
+    assert got == sorted(k4)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        k_truss(e, k=4, max_iter=1)
 
 
 def test_apportionment_sums_exactly_to_budget(spark, sf_dir):
