@@ -36,6 +36,7 @@ import time
 import uuid
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 STAGE_SCHEMA = (
@@ -289,26 +290,48 @@ def _date_ms(opt) -> int:
     return int(opt.get().getTime()) if opt.isDefined() else 0
 
 
-def _job_stages(store, job_ids: list[int], seen: set) -> list[dict]:
-    """``STAGE_SCHEMA`` records of the stages these jobs ran. A stage a
-    job lists but did not run is left out: one it skipped, one an
-    earlier job ran (its shuffle output reused), one in ``seen``."""
-    out = []
+def _held(read, key):
+    """``read(key)`` from the status store, or None once the store has
+    evicted that job or stage: it keeps the last
+    ``spark.ui.retainedJobs``/``retainedStages`` only."""
+    try:
+        return read(key)
+    except Py4JJavaError as err:
+        name = err.java_exception.getClass().getName()
+        if name != "java.util.NoSuchElementException":
+            raise
+        return None
+
+
+def _job_stages(store, job_ids: list[int], seen: set) -> tuple[list, int]:
+    """``(records, evicted)``: the ``STAGE_SCHEMA`` records of the
+    stages these jobs ran, and how many the store had already evicted.
+    A stage a job lists but did not run is left out: one it skipped,
+    one an earlier job ran (its shuffle output reused), one in
+    ``seen``. An evicted job counts once (its stage list went with it),
+    an evicted stage once."""
+    out, evicted = [], 0
     for jid in job_ids:
-        job = store.job(jid)
+        job = _held(store.job, jid)
+        if job is None:
+            evicted += 1
+            continue
         submitted = _date_ms(job.submissionTime())
         it = job.stageIds().iterator()
         while it.hasNext():
             sid = it.next()
             if sid in seen:
                 continue
-            s = store.lastStageAttempt(sid)
+            s = _held(store.lastStageAttempt, sid)
+            if s is None:
+                evicted += 1
+                continue
             # a skipped stage has no submission time of its own
             if _date_ms(s.submissionTime()) < submitted:
                 continue
             seen.add(sid)
             out.append(dict(zip(_STAGE_COLS, _stage_row(s))))
-    return out
+    return out, evicted
 
 
 def _stage_totals(stages: list[dict]) -> dict:
@@ -349,7 +372,11 @@ def profile(spark: SparkSession, build, label: str) -> dict:
     - ``PLAN_OPS`` counts of the frame's physical plan (AQE's initial
       plan: deterministic, unlike its runtime re-plans);
     - ``top_stages``: the ``TOP_STAGES`` stages with the most executor
-      run time, each with its layer.
+      run time, each with its layer;
+    - ``evicted_stages``: jobs and stages the status store had already
+      evicted (it retains ``spark.ui.retainedStages``, 1000 by default);
+      their counters are missing, so a record with a non-zero count is
+      partial.
     """
     with _job_tag(spark) as build_tag:
         t0 = time.perf_counter()
@@ -362,9 +389,11 @@ def profile(spark: SparkSession, build, label: str) -> dict:
     store = spark.sparkContext._jsc.sc().statusStore()
     seen: set = set()
     ran = []
+    rec["evicted_stages"] = 0
     for layer, tag in (("build", build_tag), ("action", action_tag)):
         ids = _tagged_job_ids(spark, tag)
-        stages = _job_stages(store, ids, seen)
+        stages, evicted = _job_stages(store, ids, seen)
+        rec["evicted_stages"] += evicted
         rec[f"{layer}_jobs"] = len(ids)
         for k, v in _stage_totals(stages).items():
             rec[f"{layer}_{k}"] = v

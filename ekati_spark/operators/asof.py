@@ -1,4 +1,4 @@
-"""As-of (most-recent-at-or-before) and range joins.
+"""As-of (most-recent-at-or-before) joins.
 
 Spark has no native ASOF JOIN (DuckDB/Pandas do). Two strategies:
 
@@ -146,17 +146,3 @@ def asof_join_union(
         *[F.col(f"__asof_{c}").alias(c) for c in right_value_cols],
     )
     return out
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    on,
-    lower,
-    upper,
-    how: str = "inner",
-) -> DataFrame:
-    """Interval join: equi-key + time in [lower, upper). Declarative so
-    Catalyst can plan it; for large-large skewed cases pre-bucket the time
-    dimension and equi-join on (key, bucket)."""
-    return left.join(right, on & lower & upper, how)

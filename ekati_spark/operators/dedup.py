@@ -6,15 +6,12 @@ driver-side pair loops):
 - ``exact_dedup``            hash-groupBy on a normalized text digest
 - ``ngram_jaccard_pairs``    exact n-gram Jaccard via shingle inverted-
                              index self-join (explode+window shingles)
-- ``minhash_signatures`` / ``minhash_lsh_pairs``
-                             MinHash + banded LSH: candidate pairs meet in
+- ``minhash_lsh_pairs``      MinHash + banded LSH: candidate pairs meet in
                              band buckets (shuffle on band hash), then are
                              verified with exact Jaccard — the 100 TB path,
                              cost ∝ candidates, not ∝ n².
 - ``simhash64`` (Pandas UDF) 64-bit SimHash for hamming-distance dedup
-                             (measured fastest; benchmark in docstring);
-                             ``simhash64_frame`` is the bit-identical
-                             zero-Python JVM alternative
+                             (measured fastest; benchmark in docstring)
 - ``embedding_dup_pairs``    cosine near-duplicates: block-grid triangle
                              partitioning + one vectorized Arrow UDF per
                              cell (bit-identical to the SQL left-fold)
@@ -303,24 +300,6 @@ def _signatures_from_rows(sh_rows: DataFrame, num_hashes: int) -> DataFrame:
             F.array(*[f"m{j}" for j in range(num_hashes)]).alias("signature"),
             "sz",
         )
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-doc MinHash signature: ``(id, signature array<long> of length
-    ``num_hashes``, sz = distinct-shingle count)``.
-
-    Base shingle hash is ``pmod(xxhash64(shingle), 2^31-1)``; signature j
-    is the min of permutation j over the doc's shingle set.
-    """
-    return _signatures_from_rows(
-        shingle_hash_rows(docs, shingle_n, text_col, id_col), num_hashes
     )
 
 
@@ -745,8 +724,7 @@ def simhash64(texts: pd.Series) -> pd.Series:
     JVM-side variant pays more for the 1M-row explode + 65-buffer hash
     aggregate than this pays for Python. Both sides scale linearly in
     tokens and parallelize per-partition, so the local ranking holds on
-    a cluster; ``simhash64_frame`` below is the bit-identical zero-
-    Python alternative for clusters without Python workers.
+    a cluster.
 
     Bit convention: result bit j votes on bit j of the big-endian uint64
     read of md5(token)[:8]; ties (ones == zeros) vote 0."""
@@ -769,69 +747,12 @@ def simhash64(texts: pd.Series) -> pd.Series:
     return pd.Series(out.view(np.int64))
 
 
-def simhash64_frame(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash fully JVM-side: (id, sim) with zero Python —
-    bit-identical to ``simhash64`` (asserted in tests/test_dedup.py)
-    but measured 4x slower at sf0.1 (1.9 s vs 0.46 s; see simhash64's
-    docstring for the full benchmark matrix). Exists for deployments
-    that can't run Python workers; the default ``simhash_pairs`` path
-    is the UDF.
-
-    Shape: explode whitespace tokens → built-in ``md5`` (hex) → parse
-    the first 16 hex chars as two 32-bit halves (``conv`` caps at signed
-    long, so the uint64 arrives as hi/lo) → 64 plain bit-vote SUM
-    aggregates per doc (map-side partial, whole-stage codegen) → one
-    projection reassembling the signed-64 hash (bit 63's addend is the
-    sign wrap). Bit convention identical to ``simhash64``; token-less
-    docs simply vanish from the explode, matching the SQL oracle's
-    tokenizer (l04) which drops them implicitly.
-
-    Scale shape: one shuffle of 65 small longs per doc (partials
-    combine map-side); per-token work is all codegen'd JVM.
-    """
-    tok = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("t"),
-        )
-        .filter(F.col("t") != "")
-        .withColumn("h", F.md5("t"))
-        .select(
-            "id",
-            F.conv(F.substring("h", 1, 8), 16, 10).cast("long").alias("hi"),
-            F.conv(F.substring("h", 9, 8), 16, 10).cast("long").alias("lo"),
-        )
-    )
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for j in range(64):
-        half, off = ("hi", j - 32) if j >= 32 else ("lo", j)
-        aggs.append(
-            F.sum(
-                F.shiftrightunsigned(half, off).bitwiseAND(F.lit(1))
-            ).alias(f"b{j}")
-        )
-    g = tok.groupBy("id").agg(*aggs)
-    sim = F.lit(0).cast("long")
-    for j in range(64):
-        # votes_j = ones - zeros > 0  <=>  2*ones > n; bit 63's long
-        # literal is the sign bit (shiftleft wraps to MIN_LONG), giving
-        # exactly the signed view of the uint64 the reference UDF emits
-        sim = sim + F.when(
-            2 * F.col(f"b{j}") > F.col("n"),
-            F.shiftleft(F.lit(1).cast("long"), j),
-        ).otherwise(F.lit(0).cast("long"))
-    return g.select("id", sim.alias("sim"))
-
-
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
     prefix_bits: int = 16,
-    engine: str = "arrow",
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming distance ≤ ``max_hamming``.
 
@@ -839,12 +760,11 @@ def simhash_pairs(
     prefix) keeps the self-join off n²; a production variant would use 4
     rotated prefix tables for exact recall at distance ≤ 3.
 
-    ``engine="arrow"`` (default, measured fastest) hashes via the
-    ``simhash64`` UDF; ``engine="jvm"`` uses the zero-Python
-    ``simhash64_frame``. Either way token-less (whitespace-only, empty,
-    NULL) docs emit no pairs: the JVM path drops them inherently and
-    the arrow path pre-filters on the same any-whitespace tokenizer
-    (``\\s``-aware — plain trim() misses tab/newline-only docs).
+    Hashes via the ``simhash64`` UDF. Token-less (whitespace-only,
+    empty, NULL) docs emit no pairs: they are pre-filtered on the same
+    any-whitespace tokenizer (``\\s``-aware — plain trim() misses
+    tab/newline-only docs), as the SQL oracle's tokenizer (l04) drops
+    them.
     """
     # prefix_bits=0 disables blocking (all-pairs): the shift must be a
     # literal 0 block — shiftrightunsigned(sim, 64) is the IDENTITY (the
@@ -855,16 +775,12 @@ def simhash_pairs(
         if prefix_bits == 0
         else F.shiftrightunsigned("sim", 64 - prefix_bits)
     )
-    if engine == "jvm":
-        sh = simhash64_frame(docs, text_col, id_col)
-    else:
-        sh = docs.filter(
-            F.regexp_replace(F.col(text_col), r"\s+", "") != ""
-        ).select(
-            F.col(id_col).alias("id"),
-            simhash64(F.col(text_col)).alias("sim"),
-        )
-    sh = sh.withColumn("block", block)
+    sh = docs.filter(
+        F.regexp_replace(F.col(text_col), r"\s+", "") != ""
+    ).select(
+        F.col(id_col).alias("id"),
+        simhash64(F.col(text_col)).alias("sim"),
+    ).withColumn("block", block)
     a, b = sh.alias("a"), sh.alias("b")
     # long, matching SQL engines' BIGINT bit_count (audit_types parity)
     ham = F.bit_count(F.col("a.sim").bitwiseXOR(F.col("b.sim"))).cast("long")

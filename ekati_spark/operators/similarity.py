@@ -264,20 +264,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket id: bit j = sign(vec · plane_j)."""
-    bits = [
-        F.when(
-            dot(vec, F.array(*[F.lit(float(w)) for w in plane])) > 0, 1 << j
-        ).otherwise(0)
-        for j, plane in enumerate(planes)
-    ]
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out.cast("long")
-
-
 def _sign_lsh_bucket_udf(dim: int, n_planes: int, n_tables: int, seed: int):
     """Multi-table sign-LSH bucket assignment as ONE vectorized Arrow
     UDF returning ``array<long>`` (one bucket per table, table index in
@@ -305,53 +291,6 @@ def _sign_lsh_bucket_udf(dim: int, n_planes: int, n_tables: int, seed: int):
         return pd.Series(list(ids))
 
     return bucket_ids
-
-
-def lsh_candidate_pairs(
-    emb: DataFrame,
-    n_planes: int = 8,
-    n_tables: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-LSH SELF-candidate pairs: two vectors are a candidate pair
-    iff they share a bucket in any of ``n_tables`` hash tables. Returns
-    distinct ``(id_a, id_b, va, vb, na, nb)`` with ``id_a < id_b`` —
-    the sub-quadratic pair source every all-pairs scorer plugs into.
-
-    Scale shape: each vector emits ``n_tables`` (bucket, row) copies —
-    a projection, no shuffle — and the pair relation is an EQUI-join on
-    bucket, so only same-bucket rows ever meet (shuffle ∝ n·L, output ∝
-    Σ bucket²). The n² relation is never formed, and the candidate
-    relation stays NARROW — (id_a, id_b) only — through the bucket join
-    and the distinct; vectors join back by id afterwards (measured 3×:
-    carrying two 64-float payloads through the pair-dedup shuffle cost
-    72 s where the narrow form costs ~12 s at sf1). Recall follows the
-    standard amplifier 1-(1-p^b)^L; the op is DETERMINISTIC (seeded
-    planes, left-fold dots), so a SQL oracle replays the exact
-    candidate set — approximation is in the operator's definition, not
-    in its execution."""
-    cand, v = lsh_candidate_ids(
-        emb, n_planes, n_tables, seed, dim, id_col, vec_col
-    )
-    # vector fetch: two equi-joins on id — when the corpus fits an
-    # executor these plan as broadcast hash joins (zero extra shuffle);
-    # at 100 TB they are id-partitioned shuffle joins ∝ |pairs|
-    va = v.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("nv").alias("na"),
-    )
-    vb = v.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("nv").alias("nb"),
-    )
-    return cand.join(va, "id_a").join(vb, "id_b").select(
-        "id_a", "id_b", "va", "vb", "na", "nb"
-    )
 
 
 def _lsh_bucket_members(
@@ -404,12 +343,23 @@ def lsh_candidate_ids(
     vec_col: str = "embedding",
     bucket_cap: int | None = None,
 ):
-    """The NARROW candidate stage of ``lsh_candidate_pairs``: returns
+    """Sign-LSH SELF-candidate pairs: two vectors are a candidate pair
+    iff they share a bucket in any of ``n_tables`` hash tables. Returns
     ``(candidates, vectors)`` where candidates is distinct ``(id_a,
     id_b)`` with ``id_a < id_b`` — no vector payloads — and vectors is
     the filtered ``(id, v, nv)`` frame candidates were derived from.
     Scorers choose their own fetch strategy (per-pair join vs
     broadcast gather).
+
+    Scale shape: each vector emits ``n_tables`` (bucket, row) copies —
+    a projection, no shuffle — and the pair relation is an EQUI-join on
+    bucket, so only same-bucket rows ever meet (shuffle ∝ n·L, output ∝
+    Σ bucket²). The candidate relation stays NARROW through the bucket
+    join and the distinct (measured 3×: carrying two 64-float payloads
+    through the pair-dedup shuffle cost 72 s where the narrow form
+    costs ~12 s at sf1). Recall follows the standard amplifier
+    1-(1-p^b)^L; the op is DETERMINISTIC (seeded planes, left-fold
+    dots), so a SQL oracle replays the exact candidate set.
 
     ``bucket_cap`` (opt-in; default None = every member, the attested
     l07/l53 semantics) deterministically caps per-(table, bucket)
@@ -662,390 +612,6 @@ def ann_lsh_buckets(
     )
 
 
-def _nearest(A: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
-    # argmin_j ||a - c_j||²; the ||a||² term is constant per row, so
-    # -2aC^T + ||c||² suffices. First-min tie-break = lowest list_id.
-    d = -2.0 * (A @ C.T) + (C * C).sum(axis=1)
-    return np.argmin(d, axis=1)
-
-
-def _lloyd_step(c: DataFrame, cents: list[list[float]]) -> list[list[float]]:
-    """One Lloyd step as a single job: per-partition partial sums (count +
-    vector sum per list) via mapInPandas over column ``v`` — the
-    tree-aggregate shape; k×dim scalars reach the driver, never data.
-    (The crossJoin+min_by formulation put the distance expression above a
-    CartesianProduct, where it evaluates interpreted — no codegen.)"""
-    C = np.asarray(cents, dtype=np.float64)
-
-    def partials(batches):
-        cnt = np.zeros(len(C), dtype=np.int64)
-        sums = np.zeros_like(C)
-        seen = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            seen = True
-            A = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            lbl = _nearest(A, C)
-            np.add.at(cnt, lbl, 1)
-            np.add.at(sums, lbl, A)
-        if not seen:
-            return
-        yield pd.DataFrame(
-            {
-                "list_id": np.arange(len(C), dtype=np.int64),
-                "cnt": cnt,
-                "sums": list(sums),
-            }
-        )
-
-    rows = collect_bounded(
-        c.select("v").mapInPandas(
-            partials, "list_id long, cnt long, sums array<double>"
-        ),
-        1_048_576,  # <= n_lists x input partitions
-        "k-means partial sums",
-    )
-    cnt = np.zeros(len(C), dtype=np.int64)
-    sums = np.zeros_like(C)
-    for r in rows:
-        cnt[r.list_id] += r.cnt
-        sums[r.list_id] += np.asarray(r.sums)
-    return [
-        (sums[i] / cnt[i]).tolist() if cnt[i] else cents[i]
-        for i in range(len(C))
-    ]
-
-
-def _assign_lists(
-    c: DataFrame, cents: list[list[float]], out_schema: str
-) -> DataFrame:
-    """Tag every row with its nearest-centroid ``list_id`` (one
-    mapInPandas pass; centroids ride in the closure as a numpy matrix).
-    ``out_schema`` = the input columns (which must include ``v``) plus
-    ``list_id long``."""
-    C = np.asarray(cents, dtype=np.float64)
-    keep = [f.split()[0] for f in out_schema.split(",")]
-    keep = [k for k in keep if k != "list_id"]
-
-    def assign_map(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            out = pdf[keep].copy()
-            out["list_id"] = _nearest(A, C)
-            yield out
-
-    return c.mapInPandas(assign_map, out_schema)
-
-
-def _seed_centroids(
-    c: DataFrame, n_lists: int, seed: int, id_col: str
-) -> list[list[float]]:
-    """Deterministic k-means init: the n_lists corpus vectors with the
-    smallest seeded xxhash of their id — stable across partitionings."""
-    init = (
-        c.select(
-            "v",
-            F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)).alias("h"),
-        )
-        .orderBy("h")
-        .limit(n_lists)
-        .collect()
-    )
-    return [list(r.v) for r in init]
-
-
-def semantic_dedup(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    n_lists: int = 16,
-    kmeans_iters: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023, arXiv
-    2303.09540): k-means-cluster the embeddings, then inside each cluster
-    drop every vector that has a lower-id neighbor with cosine >=
-    ``threshold``. Returns ``(vec_id, list_id, kept)`` for every valid
-    input vector — the keep-list plus which cluster each doc landed in.
-
-    Scale shape: the pair comparison is confined to clusters (equi-join
-    on ``list_id``, hash-partitionable; cost ∝ Σ cluster², never corpus²)
-    — the SemDeDup trade: cross-cluster near-dups are missed by design.
-    The cosine is computed in a PROJECTION after the equi-join, not in
-    the join condition, so it stays in whole-stage codegen. Keep rule =
-    "no lower-id neighbor", a deterministic representative per near-dup
-    neighborhood (left_anti join, no driver loop).
-    """
-    dim = _infer_dim(emb, vec_col)
-    c = emb.filter(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
-    ).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        norm(vec_col, dim).alias("nv"),
-    )
-    cents = _seed_centroids(c, n_lists, seed, "id")
-    for _ in range(kmeans_iters):
-        cents = _lloyd_step(c, cents)
-    assigned = _assign_lists(
-        c, cents, "id long, v array<float>, nv double, list_id long"
-    ).transform(cut_lineage)  # consumed 3x (both join sides + output)
-
-    a = assigned.select(
-        "list_id",
-        F.col("id").alias("id_a"),
-        F.col("v").alias("v_a"),
-        F.col("nv").alias("nv_a"),
-    )
-    b = assigned.select(
-        "list_id",
-        F.col("id").alias("id_b"),
-        F.col("v").alias("v_b"),
-        F.col("nv").alias("nv_b"),
-    )
-    cos = F.try_divide(
-        dot("v_a", "v_b", dim), F.col("nv_a") * F.col("nv_b")
-    )
-    dropped = (
-        a.join(b, "list_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("id_b").alias("id"))
-        .distinct()
-    )
-    return assigned.join(dropped, "id", "left_anti").select(
-        F.col("id").alias(id_col),
-        "list_id",
-        F.lit(True).alias("kept"),
-    ).unionByName(
-        assigned.join(dropped, "id", "left_semi").select(
-            F.col("id").alias(id_col),
-            "list_id",
-            F.lit(False).alias("kept"),
-        )
-    )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    kmeans_iters: int = 3,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Approximate top-k via IVF (inverted-file) partitioning: Lloyd's
-    k-means (fixed iterations, deterministic seeded init) assigns every
-    corpus vector to its nearest centroid list; each query probes its
-    ``n_probe`` nearest lists and scores only those candidates.
-
-    Centroids live in the UDF closure as a numpy matrix; assignment and
-    each Lloyd step are ONE ``mapInPandas`` job emitting per-partition
-    partial sums (the tree-aggregate shape — k x dim scalars reach the
-    driver, never data). Two earlier formulations were measured and
-    rejected: unrolled argmin literal trees stall Catalyst analysis, and
-    crossJoin + ``min_by`` puts the distance expression above a
-    CartesianProduct, where it evaluates interpreted (no codegen). At
-    100 TB the corpus would be written list-partitioned so a probe is
-    partition pruning.
-
-    Recall < 1 by construction; tested against ``brute_force_topk``.
-    """
-    spark = corpus.sparkSession
-    dim = _infer_dim(corpus, vec_col)
-    # same guard as ann_lsh_buckets: NULL / off-dimension vectors would
-    # abort the unrolled ANSI element_at paths instead of scoring NULL
-    c = corpus.filter(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("v"),
-        norm(vec_col, dim).alias("nv"),
-    )
-    q = _norm_queries(queries, dim, query_id_col, query_vec_col)
-
-    # deterministic init drawn from the filtered side, so a NULL vector
-    # can't seed a centroid
-    centroids = _seed_centroids(c, n_lists, seed, "neighbor_id")
-    # a corpus smaller than n_lists yields fewer seed centroids
-    n_lists = len(centroids)
-    n_probe = min(n_probe, n_lists)
-
-    for _ in range(kmeans_iters):
-        centroids = _lloyd_step(c, centroids)
-
-    assigned = _assign_lists(
-        c, centroids, "neighbor_id long, v array<float>, nv double, list_id long"
-    )
-    qp = _probe_lists(q, centroids, n_probe, spark, dim)
-    return _score_probed(assigned, qp, dim, k)
-
-
-def _norm_queries(
-    queries: DataFrame, dim: int, query_id_col: str, query_vec_col: str
-) -> DataFrame:
-    return queries.filter(
-        F.col(query_vec_col).isNotNull()
-        & (F.size(F.col(query_vec_col)) == dim)
-    ).select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qv"),
-        norm(query_vec_col, dim).alias("nq"),
-    )
-
-
-def _sq_l2(a: Column, b: Column, dim: int) -> Column:
-    # unrolled codegen form; operands are materialized columns
-    # (post-join rows / broadcast centroids), never HOF expressions
-    return _fold_sum(
-        (_el(a, k) - _el(b, k)) * (_el(a, k) - _el(b, k))
-        for k in range(1, dim + 1)
-    )
-
-
-def _probe_lists(
-    q: DataFrame, centroids: list[list[float]], n_probe: int, spark, dim: int
-) -> DataFrame:
-    """query -> its n_probe nearest lists (crossJoin shape; queries are
-    few, centroids broadcast). Returns (query_id, qv, nq, list_id)."""
-    cents = F.broadcast(
-        spark.createDataFrame(
-            [(i, [float(x) for x in cent]) for i, cent in enumerate(centroids)],
-            "list_id int, cent array<double>",
-        )
-    )
-    wq = W.partitionBy("query_id").orderBy("d", "list_id")
-    return (
-        q.crossJoin(cents)
-        .withColumn("d", _sq_l2(F.col("qv"), F.col("cent"), dim))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "qv", "nq", "list_id")
-    )
-
-
-def _score_probed(assigned: DataFrame, qp: DataFrame, dim: int, k: int) -> DataFrame:
-    """Score each query against its probed lists' candidates; exact
-    cosine + deterministic top-k."""
-    cand = (
-        assigned.join(
-            F.broadcast(qp),
-            (assigned.list_id == qp.list_id)
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select("query_id", "qv", "nq", "neighbor_id", "v", "nv")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    cos = F.try_divide(
-        dot("qv", "v", dim), F.col("nq") * F.col("nv")
-    )
-    scored = cand.withColumn("cosine", F.round(cos, 6)).select(
-        "query_id", "neighbor_id", "cosine"
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_lists: int = 16,
-    kmeans_iters: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Persist an IVF index: fit centroids, assign every vector to its
-    list, and write the corpus LIST-PARTITIONED to ``path`` — the 100 TB
-    layout where a probe is parquet partition pruning, not a scan.
-
-    Layout: ``path/lists/list_id=N/*.parquet`` (neighbor_id, v, nv) and
-    ``path/centroids`` (list_id, cent). Build once, probe many — the
-    index-build cost (k-means + one full shuffle on list_id) amortizes
-    across every subsequent query batch. Returns the number of lists.
-    """
-    spark = corpus.sparkSession
-    dim = _infer_dim(corpus, vec_col)
-    c = corpus.filter(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("v"),
-        norm(vec_col, dim).alias("nv"),
-    )
-    centroids = _seed_centroids(c, n_lists, seed, "neighbor_id")
-    for _ in range(kmeans_iters):
-        centroids = _lloyd_step(c, centroids)
-    assigned = _assign_lists(
-        c, centroids, "neighbor_id long, v array<float>, nv double, list_id long"
-    )
-    assigned.write.partitionBy("list_id").mode("overwrite").parquet(
-        f"{path}/lists"
-    )
-    spark.createDataFrame(
-        [(i, [float(x) for x in cent]) for i, cent in enumerate(centroids)],
-        "list_id int, cent array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    return len(centroids)
-
-
-def ivf_topk_from_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Probe a persisted IVF index (``build_ivf_index``): load the
-    k-sized centroid table, pick each query's n_probe nearest lists, and
-    read ONLY those list partitions — the probed list ids become a
-    literal ``isin`` filter on the partition column, so the scan prunes
-    to |probed lists| / n_lists of the corpus (PartitionFilters, asserted
-    in tests). Scoring is identical to ``ivf_topk``."""
-    cent_rows = collect_bounded(
-        spark.read.parquet(f"{path}/centroids").orderBy("list_id"),
-        65_536,  # centroid table = n_lists rows
-        "IVF centroid table",
-    )
-    centroids = [list(r.cent) for r in cent_rows]
-    if not centroids:
-        # index built from an empty / all-invalid corpus: empty result
-        # with the contract schema, matching ivf_topk's behavior
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    dim = len(centroids[0])
-    q = _norm_queries(queries, dim, query_id_col, query_vec_col)
-    qp = _probe_lists(
-        q, centroids, min(n_probe, len(centroids)), spark, dim
-    ).transform(cut_lineage)  # consumed twice: probed-list collect + join
-    probed = [
-        r.list_id
-        for r in collect_bounded(
-            qp.select("list_id").distinct(), 65_536, "probed IVF lists"
-        )
-    ]
-    assigned = spark.read.parquet(f"{path}/lists").filter(
-        F.col("list_id").isin(probed)
-    )
-    return _score_probed(assigned, qp, dim, k)
-
-
 def bitext_margin_pairs(
     src: DataFrame,
     tgt: DataFrame,
@@ -1072,10 +638,9 @@ def bitext_margin_pairs(
     Scale shape: this is the exact all-pairs formulation — |S|·|T| dots
     with the smaller side broadcast, then two pair-sized window ranks
     (one shuffle each on src/tgt id). At 100 TB you don't run all-pairs:
-    restrict candidates to ANN buckets first (``ann_lsh_buckets`` /
-    ``ivf_topk`` — same margin formula over the candidate set), which
-    this function accepts transparently since the top-k windows only
-    ever see the supplied candidate pairs.
+    ``bitext_margin_ann`` restricts candidates to sign-LSH buckets first
+    and applies the same margin formula (``margin_from_scored_pairs``,
+    whose top-k windows only ever see the supplied candidate pairs).
     """
     s = src.select(
         F.col(id_col).alias("src_id"), _as_double(F.col(vec_col)).alias("sv")
@@ -1191,7 +756,7 @@ def bitext_margin_ann(
 
     s, t = side(src, "src_id", "s"), side(tgt, "tgt_id", "t")
     # narrow candidate relation: ids only through the bucket join and
-    # the distinct; vectors join back by id (the lsh_candidate_pairs
+    # the distinct; vectors join back by id (the lsh_candidate_ids
     # doctrine — payloads never ride the pair shuffle)
     sb = s.select(
         "src_id", F.explode(bucket_ids("sv")).alias("bucket")
@@ -1213,203 +778,6 @@ def bitext_margin_ann(
         .select("src_id", "tgt_id", "cosine")
     )
     return margin_from_scored_pairs(pairs, k, margin_threshold)
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m_sub: int = 4,
-    ksub: int = 16,
-    kmeans_iters: int = 3,
-    seed: int = 42,
-    rerank: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Product-quantization ANN (asymmetric distance computation): split
-    the vector into ``m_sub`` subspaces, train a ``ksub``-centroid
-    codebook per subspace (the same seeded Lloyd machinery as IVF, run
-    on subvector slices), encode every corpus vector as ``m_sub`` small
-    codes, and score queries against CODES ONLY — per query a
-    ``m_sub x ksub`` lookup table of exact subspace distances is built
-    driver-side (tiny) and broadcast, so the scan never touches raw
-    corpus vectors. This is the memory-bound regime's standard trick:
-    at 100 TB the encoded corpus is ~dim/(dsub/1 byte) smaller than the
-    raw vectors and the scan is table lookups, not FMAs.
-
-    Scale shape: codebook training = m_sub tree-aggregate jobs; encode
-    = one mapInPandas pass; ADC scan = one mapInPandas pass that keeps
-    a PARTITION-LOCAL top-k per query (numpy argpartition) so the final
-    exact window ranks |Q| x k x n_partitions rows, never |Q| x n.
-    Approx distances are pure functions of (code, LUT) — independent of
-    partitioning; ties break by neighbor_id. Recall < 1 by
-    construction; tested against ``brute_force_topk``.
-
-    ``rerank > 0`` adds the production second stage: keep the PQ
-    top-``rerank`` candidates per query, join their RAW vectors back
-    (an equi-join on id — the only time raw vectors are touched, on
-    |Q| x rerank rows, not the corpus), score exact cosine against the
-    broadcast query side, and return the exact top-k. Quantization
-    error then only costs recall at the candidate boundary, not
-    ranking accuracy (measured here: raw ADC ~0.2 recall@5 on the
-    synthetic near-random embeddings — PQ's worst case — vs ~0.8 with
-    rerank=100)."""
-    spark = corpus.sparkSession
-    dim = _infer_dim(corpus, vec_col)
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    dsub = dim // m_sub
-    raw = corpus.filter(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
-    ).select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v"))
-
-    def normalize(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            n = np.linalg.norm(A, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "v": list(A / n),
-                }
-            )
-
-    # PQ approximates L2; on UNIT vectors L2 ranking == cosine ranking
-    # (L2^2 = 2 - 2cos), matching the brute-force cosine baseline.
-    c = raw.mapInPandas(normalize, "neighbor_id long, v array<double>")
-
-    codebooks: list[np.ndarray] = []
-    for m in range(m_sub):
-        sub = c.select(
-            "neighbor_id", F.slice("v", m * dsub + 1, dsub).alias("v")
-        )
-        cents = _seed_centroids(sub, ksub, seed + m, "neighbor_id")
-        for _ in range(kmeans_iters):
-            cents = _lloyd_step(sub, cents)
-        codebooks.append(np.asarray(cents, dtype=np.float64))
-    # a corpus smaller than ksub seeds fewer centroids (same guard as IVF)
-    ksub = len(codebooks[0])
-
-    def encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            codes = np.stack(
-                [
-                    _nearest(A[:, m * dsub : (m + 1) * dsub], C)
-                    for m, C in enumerate(codebooks)
-                ],
-                axis=1,
-            )
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "code": list(codes.astype(np.int32)),
-                }
-            )
-
-    encoded = c.mapInPandas(encode, "neighbor_id long, code array<int>")
-
-    qrows = collect_bounded(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("qv"),
-        ),
-        100_000,  # the query side is small by contract (as in l06/l15)
-        "ANN query side",
-    )
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, approx_dist double, rank int"
-        )
-    qids = np.asarray([r.query_id for r in qrows])
-    Q = np.stack([np.asarray(r.qv, dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    Q = Q / qn
-    lut = np.zeros((len(qids), m_sub, ksub))
-    for m, C in enumerate(codebooks):
-        qs = Q[:, m * dsub : (m + 1) * dsub]
-        lut[:, m, :] = (
-            (qs * qs).sum(axis=1, keepdims=True)
-            - 2.0 * (qs @ C.T)
-            + (C * C).sum(axis=1)
-        )
-    bq = spark.sparkContext.broadcast((qids, lut))
-
-    keep_n = max(k, rerank)
-
-    def adc(batches):
-        qid, L = bq.value
-        best_d = [np.empty(0)] * len(qid)
-        best_n = [np.empty(0, dtype=np.int64)] * len(qid)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["code"].to_numpy())
-            nb = pdf["neighbor_id"].to_numpy()
-            d = np.zeros((len(qid), len(nb)))
-            for m in range(codes.shape[1]):
-                d += L[:, m, codes[:, m]]
-            for i in range(len(qid)):
-                cd = np.concatenate([best_d[i], d[i]])
-                cn = np.concatenate([best_n[i], nb])
-                if len(cd) > keep_n:
-                    part = np.argpartition(cd, keep_n - 1)[:keep_n]
-                    cd, cn = cd[part], cn[part]
-                best_d[i], best_n[i] = cd, cn
-        out_q, out_n, out_d = [], [], []
-        for i in range(len(qid)):
-            out_q.extend([qid[i]] * len(best_n[i]))
-            out_n.extend(best_n[i].tolist())
-            out_d.extend(best_d[i].tolist())
-        yield pd.DataFrame(
-            {"query_id": out_q, "neighbor_id": out_n, "approx_dist": out_d}
-        )
-
-    scored = encoded.mapInPandas(
-        adc, "query_id long, neighbor_id long, approx_dist double"
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id").asc()
-    )
-    ranked = scored.select("*", F.row_number().over(w).alias("rank"))
-    if not rerank:
-        return ranked.filter(F.col("rank") <= k)
-
-    cand = ranked.filter(F.col("rank") <= rerank).select(
-        "query_id", "neighbor_id"
-    )
-    qdf = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(F.col(query_vec_col)).alias("qv"),
-    )
-    joined = (
-        cand.join(raw, "neighbor_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            # names, not Columns: the unrolled fold parses as one SQL
-            # string (driver round-trip cost); per-element CAST AS
-            # DOUBLE inside the fold makes the _as_double wrap
-            # redundant on this side (identical IEEE widening).
-            cosine("v", "qv", dim).alias("cosine_sim"),
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return joined.select(
-        "*", F.row_number().over(w2).alias("rank")
-    ).filter(F.col("rank") <= k)
 
 
 def _trunc_div(s: int, n: int) -> int:
@@ -1435,18 +803,27 @@ def _quant_udf(scale: int):
     return quant
 
 
+def _cent_matrix(cents: dict):
+    """``(ids, C, cc)``: the sorted list ids, their int64 centroids as
+    a ``k × dim`` matrix and its squared row norms. An empty or
+    all-NULL corpus seeds no centroid: ``C`` is then ``0 × 0`` and
+    ``cc`` empty, so the distance arithmetic yields no rows instead of
+    failing on a 1-d array with no axis 1."""
+    ids = sorted(cents)
+    C = np.array([cents[i] for i in ids], dtype=np.int64).reshape(
+        len(ids), len(cents[ids[0]]) if ids else 0
+    )
+    return ids, C, (C * C).sum(axis=1)
+
+
 def _int_assign(frame: DataFrame, cents: dict) -> DataFrame:
     """Assign quantized vectors (``id, qv``) to their nearest centroid
     by exact int64 L2² (ties → smallest list_id, matching the oracle's
     ORDER BY tie-break). Centroids ride the UDF closure (k×dim ints)."""
-    import numpy as np
-
-    ids = sorted(cents)
-    C = np.array([cents[i] for i in ids], dtype=np.int64)
+    ids, C, cc = _cent_matrix(cents)
     schema = "id long, qv array<long>, list_id long"
 
     def op(batches):
-        cc = (C * C).sum(axis=1)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -1471,7 +848,6 @@ def _int_kmeans(
     vec_col: str,
     dim: int | None = None,
     prepared: DataFrame | None = None,
-    eager_final: bool = True,
 ):
     """Shared integer-deterministic k-means core (l15/l37 oracle path):
     quantize to the int64 grid, seed with the ``n_lists`` smallest ids,
@@ -1482,17 +858,15 @@ def _int_kmeans(
     ``prepared`` lets a caller hand in the quantized, lineage-cut
     ``(id, qv)`` frame it already materialized (the l108b self-probe
     counts it for ``auto_n_lists`` — one scan instead of two) and must
-    come with ``dim``. ``eager_final=False`` plans the final-assignment
-    lineage cut lazily — saving one driver-sequential job when every
-    consumer sits inside ONE downstream action. **Measured
-    scale-inversion (round 16, sf1)**: a lazy checkpoint's data only
-    becomes reusable after the materializing JOB completes, so
-    multiple consumer branches inside that one action each recompute
-    the assignment mapInPandas fused into their own map stages — the
-    self-probe's scorer stage went 505 s → 1483 s of task time at sf1
-    (3×, identical shuffle records) for the one job saved. The
-    self-probe therefore stays EAGER; lazy is only right when the cut
-    frame is cheap to recompute (l127b's query-term BM25 arm)."""
+    come with ``dim``.
+
+    The final-assignment cut is EAGER. A lazy cut saves one
+    driver-sequential job, but its data only becomes reusable after
+    the materializing JOB completes, so several consumer branches
+    inside one action each recompute the assignment mapInPandas fused
+    into their own map stages — measured at sf1, the self-probe's
+    scorer stage went 505 s → 1483 s of task time (3×, identical
+    shuffle records) for the one job saved."""
 
     if prepared is not None:
         if dim is None:
@@ -1514,8 +888,6 @@ def _int_kmeans(
         )
     seeds = c.orderBy("id").limit(n_lists).collect()
     cents = {i: list(r["qv"]) for i, r in enumerate(seeds)}
-
-    assign = _int_assign
 
     def update(assigned: DataFrame) -> dict:
         def sums(batches):
@@ -1553,10 +925,8 @@ def _int_kmeans(
         }
 
     for _ in range(kmeans_iters):
-        cents = update(assign(c, cents))
-    assigned = assign(c, cents).transform(
-        cut_lineage if eager_final else cut_lineage_lazy
-    )
+        cents = update(_int_assign(c, cents))
+    assigned = _int_assign(c, cents).transform(cut_lineage)
     return assigned, cents
 
 
@@ -1573,8 +943,10 @@ def ivf_topk_int(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """IVF approximate top-k with FULLY DETERMINISTIC INTEGER k-means —
-    the oracle-replayable twin of ``ivf_topk``: vectors quantize to
+    """IVF approximate top-k with FULLY DETERMINISTIC INTEGER k-means:
+    Lloyd's k-means assigns every corpus vector to its nearest centroid
+    list and each query scores only its ``n_probe`` nearest lists'
+    candidates. Oracle-replayable: vectors quantize to
     ``floor(x*scale + 0.5)`` int64 grid points (the one float→int op,
     IEEE-identical in any engine), seeds are the ``n_lists`` smallest
     ids' vectors, Lloyd updates are per-dimension integer sums with
@@ -1585,12 +957,15 @@ def ivf_topk_int(
     distance error on unit-range embeddings — irrelevant to ANN
     bucketing quality (recall asserted in tests/test_similarity.py).
 
-    Scale shape mirrors ``ivf_topk``: centroids live in UDF closures
-    (k×dim ints — the only driver state), assignment and partial sums
-    are single mapInPandas passes (int64 matmul per Arrow batch),
-    candidates meet probed lists in one equi-join, and the final
-    top-k is a per-query window. At 100 TB the assigned corpus is
-    written list-partitioned exactly like build_ivf_index."""
+    Scale shape: centroids live in UDF closures (k×dim ints — the only
+    driver state), assignment and partial sums are single mapInPandas
+    passes (int64 matmul per Arrow batch — unrolled argmin literal
+    trees stall Catalyst analysis, and crossJoin + ``min_by`` puts the
+    distance above a CartesianProduct, where it runs interpreted),
+    candidates meet probed lists in one equi-join, and the final top-k
+    is a per-query window. At 100 TB the assigned corpus is written
+    list-partitioned (``build_ivf_index_int``) so a probe is partition
+    pruning. An empty or all-NULL corpus returns no rows."""
     assigned, cents = _int_kmeans(
         corpus, n_lists, kmeans_iters, scale, id_col, vec_col
     )
@@ -1636,9 +1011,7 @@ def _int_probe_rows(
         100_000,  # query side is assumed dimension-sized (l06's contract)
         "ANN query side",
     )
-    ids = sorted(cents)
-    C = np.array([cents[i] for i in ids], dtype=np.int64)
-    cc = (C * C).sum(axis=1)
+    ids, C, cc = _cent_matrix(cents)
     probe_rows = []
     for r in q:
         Q = np.asarray(r["q_qv"], dtype=np.int64)
@@ -1909,12 +1282,9 @@ def ivf_self_topk_int(
     # (callers that filter/declare a fixed width hand it in), the
     # quantized frame is checkpointed ONCE and the auto_n_lists count
     # reads that materialization instead of re-scanning the corpus.
-    # The final-assign cut stays EAGER: a lazy cut saved one more job
-    # but recomputed the assignment per consumer branch inside the
-    # final action — 3× the scorer stage's CPU at sf1 (see
-    # _int_kmeans's eager_final note). Results are invariant: the
-    # count is over the identical filter (quantization is 1:1) and
-    # every collapsed job computed the same values.
+    # The final-assign cut stays EAGER (see _int_kmeans). Results are
+    # invariant: the count is over the identical filter (quantization
+    # is 1:1) and every collapsed job computed the same values.
     if dim is None:
         dim = _infer_dim(emb, vec_col)
     quant = _quant_udf(scale)
@@ -1929,11 +1299,9 @@ def ivf_self_topk_int(
         n_lists = auto_n_lists(c.count())
     assigned, cents = _int_kmeans(
         emb, n_lists, kmeans_iters, scale, id_col, vec_col,
-        dim=dim, prepared=c, eager_final=True,
+        dim=dim, prepared=c,
     )
-    ids = sorted(cents)
-    C = np.array([cents[i] for i in ids], dtype=np.int64)
-    cc = (C * C).sum(axis=1)
+    ids, C, cc = _cent_matrix(cents)
     idarr = np.array(ids, dtype=np.int64)
     npb = min(n_probe, len(ids))
 
@@ -2106,10 +1474,12 @@ def build_ivf_index_int(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> int:
-    """Persist the INTEGER-deterministic IVF index (the replayable twin
-    of ``build_ivf_index``): quantized vectors list-partitioned under
-    ``path/lists`` (probe = parquet partition pruning) and the frozen
-    int64 centroids under ``path/centroids``. Returns list count."""
+    """Persist the INTEGER-deterministic IVF index: quantized vectors
+    list-partitioned under ``path/lists`` (probe = parquet partition
+    pruning, not a scan) and the frozen int64 centroids under
+    ``path/centroids``. Build once, probe many — k-means and the one
+    shuffle on list_id amortize across every later query batch.
+    Returns list count."""
     spark = corpus.sparkSession
     assigned, cents = _int_kmeans(
         corpus, n_lists, kmeans_iters, scale, id_col, vec_col
@@ -2183,8 +1553,7 @@ def ivf_topk_int_from_index(
     """Probe a persisted integer IVF index (original build PLUS any
     appended batches): identical scoring to ``ivf_topk_int``; the scan
     reads only the probed list partitions (PartitionFilters via the
-    ``isin`` on the partition column, same contract as
-    ``ivf_topk_from_index``)."""
+    ``isin`` on the partition column)."""
     cents = _read_int_centroids(spark, path)
     if not cents:
         return spark.createDataFrame(
@@ -2193,7 +1562,7 @@ def ivf_topk_int_from_index(
     dim = len(next(iter(cents.values())))
     # bind probed lists driver-side so they become a literal isin on
     # the partition column — PartitionFilters prune every unprobed
-    # list directory at planning time (the float twin's contract)
+    # list directory at planning time
     probe_rows = _int_probe_rows(
         cents, queries, n_probe, scale, dim, query_id_col, query_vec_col
     )
@@ -2326,8 +1695,10 @@ def semantic_dedup_int(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023) with FULLY INTEGER semantics — the
-    oracle-replayable twin of ``semantic_dedup``: clusters come from
+    """SemDeDup-style semantic deduplication (Abbas et al. 2023, arXiv
+    2303.09540) with FULLY INTEGER semantics: k-means-cluster the
+    embeddings, then inside each cluster drop every vector that has a
+    lower-id neighbor at/above the cosine threshold. Clusters come from
     the shared integer k-means (`_int_kmeans`), and the within-cluster
     cosine test runs WITHOUT any float: on the quantized grid,
 
@@ -2337,12 +1708,14 @@ def semantic_dedup_int(
     the squared norms are exact int64 (≤ ~2e7 at scale 1024, so D·dot²
     ≤ ~1.4e17 stays in BIGINT), which makes keep/drop decisions — and
     therefore the whole keep-list — bit-identical in any engine.
-    Returns ``(vec_id, list_id, kept)`` like the float variant; keep
-    rule = "no lower-id neighbor at/above threshold".
+    Returns ``(vec_id, list_id, kept)`` for every valid input vector —
+    the keep-list plus which cluster each vector landed in; an empty or
+    all-NULL corpus returns no rows.
 
-    Scale shape: identical to semantic_dedup — pair work confined to
-    clusters (Σ cluster², never corpus²); the integer predicate runs
-    in one Arrow pass over the cluster equi-join."""
+    Scale shape: pair work confined to clusters (equi-join on
+    ``list_id``; Σ cluster², never corpus² — the SemDeDup trade:
+    cross-cluster near-dups are missed by design); the integer
+    predicate runs in one Arrow pass over the cluster equi-join."""
     import numpy as np
 
     num, den = threshold_sq
@@ -2399,16 +1772,18 @@ def pq_topk_int(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """Product quantization with FULLY INTEGER semantics — the
-    oracle-replayable twin of ``pq_topk``: vectors quantize to the
-    int64 grid, each subspace trains its own integer k-means (seeds =
-    the ``ksub`` smallest ids' subvectors, exact Lloyd sums,
-    trunc-toward-zero division), the ADC scan scores every corpus code
-    against per-query integer lookup tables, and the top-``rerank``
-    candidates re-rank by EXACT int64 L2² on the full quantized
-    vectors. No floats anywhere after quantization, so a SQL engine
-    replays codebook training, encoding, ADC scores, and final ranks
-    bit-for-bit (queries/llm.py::l54's generated oracle).
+    """Product-quantization ANN (asymmetric distance computation) with
+    FULLY INTEGER semantics: split the vector into ``m_sub``
+    subspaces, encode every corpus vector as ``m_sub`` codes, and scan
+    codes only. Vectors quantize to the int64 grid, each subspace
+    trains its own integer k-means (seeds = the ``ksub`` smallest ids'
+    subvectors, exact Lloyd sums, trunc-toward-zero division), the ADC
+    scan scores every corpus code against per-query integer lookup
+    tables, and the top-``rerank`` candidates re-rank by EXACT int64
+    L2² on the full quantized vectors. No floats anywhere after
+    quantization, so a SQL engine replays codebook training, encoding,
+    ADC scores, and final ranks bit-for-bit (queries/llm.py::l54's
+    generated oracle). An empty or all-NULL corpus returns no rows.
 
     Scale shape = production PQ: the codebook (m_sub × ksub × dim/m_sub
     ints) lives in UDF closures; encoding and ADC are single
@@ -2418,17 +1793,9 @@ def pq_topk_int(
     10-query × corpus score emission IS the PQ memory-bound scan."""
     import numpy as np
 
-    spark = corpus.sparkSession
     dim = _infer_dim(corpus, vec_col)
     dsub = dim // m_sub
-
-    @F.pandas_udf("array<long>")
-    def quant(vs: pd.Series) -> pd.Series:
-        return vs.map(
-            lambda v: np.floor(
-                np.asarray(v, dtype=np.float64) * scale + 0.5
-            ).astype(np.int64).tolist()
-        )
+    quant = _quant_udf(scale)
 
     c = (
         corpus.filter(

@@ -27,11 +27,6 @@ def tokens(text: Column, lowercase: bool = True) -> Column:
     return F.split(F.trim(t), " +")
 
 
-def word_tokens(text: Column) -> Column:
-    """BPE-ish regex tokenization: alphabetic runs (portable across engines)."""
-    return F.regexp_extract_all(F.lower(text), F.lit("[a-z]+"), 0)
-
-
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
@@ -88,21 +83,6 @@ def content_fingerprint(text: Column) -> Column:
     token reordering (a cheap SQL-portable cousin of winnowing)."""
     return F.md5(
         F.array_join(F.array_sort(F.array_distinct(tokens(text))), " ")
-    )
-
-
-def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Standard per-document stats block (used by the quality queries)."""
-    t = F.col(text_col)
-    return docs.select(
-        "doc_id",
-        token_count(t).alias("n_tokens"),
-        F.size(F.array_distinct(tokens(t))).alias("n_distinct_tokens"),
-        F.round(distinct_token_ratio(t), 6).alias("distinct_ratio"),
-        F.length(t).alias("n_chars_measured"),
-        quality_score(t).alias("quality"),
-        lang_id(t).alias("lang_pred"),
-        content_fingerprint(t).alias("fingerprint"),
     )
 
 

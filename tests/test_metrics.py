@@ -141,6 +141,7 @@ def test_profile_splits_build_jobs_from_action_shuffle(spark):
     assert rec["build_s"] > 0 and rec["action_s"] > 0
     assert rec["top_stages"]
     assert {s["layer"] for s in rec["top_stages"]} <= {"build", "action"}
+    assert rec["evicted_stages"] == 0
 
 
 def test_back_to_back_profiles_count_the_same_jobs(spark):
@@ -156,6 +157,37 @@ def test_back_to_back_profiles_count_the_same_jobs(spark):
     b = profile(spark, build, "b")
     keys = ("build_jobs", "action_jobs", "build_stages", "action_stages")
     assert [a[k] for k in keys] == [b[k] for k in keys]
+
+
+def test_job_stages_skip_and_count_what_the_store_evicted(spark):
+    """The status store keeps only the last ``spark.ui.retainedJobs``/
+    ``retainedStages``, so a long session can ask for a job or stage it
+    no longer holds: that one is skipped and counted, not raised."""
+    from ekati_spark.metrics import _job_stages, _job_tag, _tagged_job_ids
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+    with _job_tag(spark) as tag:
+        spark.range(0, 1_000).groupBy(
+            (F.col("id") % 5).alias("k")
+        ).count().collect()
+    ids = _tagged_job_ids(spark, tag)
+    held, evicted = _job_stages(store, ids, set())
+    assert held and evicted == 0
+
+    class StagesEvicted:
+        def job(self, jid):
+            return store.job(jid)
+
+        def lastStageAttempt(self, sid):
+            return store.lastStageAttempt(-1)  # the store's own miss
+
+    class JobsEvicted:
+        def job(self, jid):
+            return store.job(-1)
+
+    stages, evicted = _job_stages(StagesEvicted(), ids, set())
+    assert stages == [] and evicted >= len(held)
+    assert _job_stages(JobsEvicted(), ids, set()) == ([], len(ids))
 
 
 def test_plan_ops_counts_no_exchange_of_a_cached_build(spark):

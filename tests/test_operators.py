@@ -938,7 +938,7 @@ def test_similarity_query_side_bound_enforced(spark):
     a query side past 100k rows must abort instead of collecting."""
     import pytest as _pytest
 
-    from ekati_spark.operators.similarity import pq_topk
+    from ekati_spark.operators.similarity import pq_topk_int
 
     corpus = spark.createDataFrame(
         [(i, [float(i), 0.0]) for i in range(8)],
@@ -948,7 +948,7 @@ def test_similarity_query_side_bound_enforced(spark):
         "id AS query_id", "array(CAST(id AS float), 1.0F) AS query_vec"
     )
     with _pytest.raises(ValueError, match="query side"):
-        pq_topk(corpus, big_queries, k=2, m_sub=2, ksub=4).count()
+        pq_topk_int(corpus, big_queries, k=2, m_sub=2, ksub=4).count()
 
 
 def test_round12_plan_contracts(spark, sf_dir):
