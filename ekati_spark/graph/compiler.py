@@ -32,7 +32,14 @@ the props, as it does on a bucketed layout from sf0.001 to sf0.1, so its
 latest-wins window over ``(node_id, remote, key)`` runs with no Exchange
 either: a served one_hop, two_hop or follow-filter-fields plans none. A
 skip/take window sorts globally and shuffles once. After a put the edges
-are a union with no layout and each hop shuffles again.
+are a union with no layout and each hop shuffles again. An exact-id
+read over a bucketed layout reads the seeds' buckets in one partition
+(``_seed_props``), which the latest-wins window, its dedup, the ``-h``
+sort and a skip/take window over exact seeds all take as it is: a
+served point get is one Spark job of one task, and exact seeds with
+``filter`` or ``skip``/``take`` steps shuffle none of the props. In
+memory, and after a put (which drops the layout), the window
+hash-shuffles the pruned rows once.
 
 Determinism: the reference's stream order is storage order; skip/limit
 here use the canonical node_id ordering (SURVEY §5d).
@@ -190,14 +197,28 @@ class QueryEngine:
         bucketed layout each seed's bucket literal is bound driver-side,
         so planning prunes every other partition directory
         (PartitionFilters) — the reference's one-partition index probe,
-        FileStore.fs:281-298. In memory: all props."""
+        FileStore.fs:281-298 — and the pruned scan is read in ONE
+        partition. That partition satisfies the clustering of the
+        latest-wins window and its dedup and the ordering of the ``-h``
+        sort, so none of them plans an Exchange and a served get is one
+        Spark job of one task, as the reference merges a node's
+        fragments in the one partition its id hashes to
+        (NodeAttrIndex.cs:96-105). The trade-off: that task reads every
+        bucket the seeds touch, serially. Buckets are written sorted on
+        ``node_id`` (``storage.write_bucketed_props``), so the pushed
+        ``node_id IN`` skips the row groups that hold no seed and the
+        task reads about one row group per seed; its output goes whole
+        to the driver anyway. In memory (or after a put, which drops
+        ``bucket_info``): all props, planned as before."""
         if self.graph.bucket_info is None:
             return self.graph.props
         from ekati_spark.graph.storage import bucket_of
 
         layout, n = self.graph.bucket_info
         bks = sorted({bucket_of(s.iri, n) for s in seeds})
-        return layout.filter(F.col("bucket").isin(bks)).drop("bucket")
+        return (
+            layout.filter(F.col("bucket").isin(bks)).drop("bucket").coalesce(1)
+        )
 
     @staticmethod
     def _seed_pred(seeds) -> F.Column:

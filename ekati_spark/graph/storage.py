@@ -9,7 +9,11 @@ Hive-style partitioned parquet layout keyed by a deterministic bucket
 of ``node_id``: a `get "<id>"` then carries two predicates —
 ``bucket = B(id)`` (a PARTITION filter: non-matching directories are
 pruned at planning time, their files never opened) and
-``node_id = id`` (pushed into the parquet row-group scan).
+``node_id = id`` (pushed into the parquet row-group scan). Each
+bucket's rows are written sorted on ``node_id``, so a row group covers
+a narrow id range and the pushed filter skips every row group whose
+``[min, max]`` misses the seeds: a get reads about one row group per
+seed, however large its bucket.
 
 Bucket function: the first 8 hex digits of md5(node_id) mod
 ``n_buckets`` — the repo-wide md5-prefix determinism doctrine, and
@@ -54,15 +58,23 @@ def bucket_of(node_id: str, n_buckets: int) -> int:
 def write_bucketed_props(
     props: DataFrame, path: str, n_buckets: int = 64
 ) -> None:
-    """Materialize ``props`` Hive-partitioned by the node_id bucket.
+    """Materialize ``props`` Hive-partitioned by the node_id bucket,
+    each bucket's rows sorted on ``node_id``.
 
     One shuffle (repartition on the bucket column) so each partition
     directory is written by the tasks that own it — without it every
     task appends a file into every directory (n_tasks × n_buckets
-    small files, the classic partitionBy mistake)."""
+    small files, the classic partitionBy mistake). The sort key leads
+    with ``bucket``: the partitioned writer needs its input ordered on
+    the partition column, and a task sorted on ``node_id`` alone (two
+    buckets can share a task) gets the writer's own sort on ``bucket``,
+    which drops the ``node_id`` order. Sorted files give each row group
+    a narrow ``[min, max]`` node_id range, so a pushed ``node_id IN``
+    skips the row groups that hold no seed."""
     (
         props.withColumn("bucket", bucket_expr(F.col("node_id"), n_buckets))
         .repartition(n_buckets, "bucket")
+        .sortWithinPartitions("bucket", "node_id")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)

@@ -1522,6 +1522,12 @@ def append_ivf_index_int(
     says the frozen centroids stopped describing the data."""
     spark = new_vectors.sparkSession
     cents = _read_int_centroids(spark, path)
+    if not cents:
+        raise ValueError(
+            f"IVF index at {path} has no centroids (built over an empty "
+            "corpus): rebuild it with build_ivf_index_int over a "
+            "non-empty corpus before appending"
+        )
     dim = len(next(iter(cents.values())))
     quant = _quant_udf(scale)
     fresh = new_vectors.filter(
@@ -1640,7 +1646,10 @@ def ivf_index_drift_int(spark, path: str) -> DataFrame:
     probe, no rebuild."""
     import numpy as np
 
+    schema = "list_id long, n_members long, drift_sq long"
     cents = _read_int_centroids(spark, path)
+    if not cents:  # built over an empty corpus: no lists to measure
+        return spark.createDataFrame([], schema)
     dim = len(next(iter(cents.values())))
     members = spark.read.parquet(f"{path}/lists")
 
@@ -1681,9 +1690,7 @@ def ivf_index_drift_int(spark, path: str) -> DataFrame:
         mean = [_trunc_div(si, n) for si in s]
         drift = sum((a - b) ** 2 for a, b in zip(mean, cent))
         rows.append((lid, n, int(drift)))
-    return spark.createDataFrame(
-        rows, "list_id long, n_members long, drift_sq long"
-    )
+    return spark.createDataFrame(rows, schema)
 
 
 def semantic_dedup_int(

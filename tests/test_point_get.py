@@ -5,12 +5,14 @@ seeds stream only the seeds that exist, each once, and build with no
 Spark job either. A run of skip/take steps is one ordered window over
 the distinct stream. All of it holds in memory and on a bucketed
 layout. Over the FK graph's persisted edges, laid out on ``dst``, a
-served traversal runs no shuffle."""
+served traversal runs no shuffle. On a bucketed layout an exact-id read
+is one task: a served get is one Spark job, and the exact-seed filter
+and skip/take shapes shuffle none of the props."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ekati_spark.graph.compiler import QueryEngine
 from ekati_spark.graph.model import PropertyGraph
@@ -81,6 +83,38 @@ def test_step_free_get_matches_general_path(spark, graphs, kind, job_ids):
     assert [(r.node_id, r.i64) for r in latest] == [("n7", 700)]
 
 
+def _exchanges(df: DataFrame) -> list[str]:
+    """The shuffle Exchanges of ``df``'s final executed plan."""
+    tree = final_tree(df._jdf.queryExecution().executedPlan().toString())
+    return [n for _, n in tree if n.startswith("Exchange ")]
+
+
+def test_bucketed_get_is_one_job(spark, graphs, job_ids):
+    """On a bucketed layout the server's fetch of every step-free get,
+    `-h` and `fields` included, is one Spark job whose final plan has no
+    shuffle Exchange: the seeds' buckets are read in one partition, which
+    the latest-wins window, its dedup and the `-h` sort all accept."""
+    engine = QueryEngine(spark, graph=graphs["bucketed"])
+    for q in _QUERIES:
+        fetch = engine.execute(q).limit(1000)
+        _, jobs = job_ids(fetch.collect)
+        assert len(jobs) == 1, (q, jobs)
+        assert _exchanges(fetch) == [], q
+
+
+def test_get_after_put_on_bucketed_graph(spark, graphs):
+    """A put on a bucketed graph drops its layout (the new rows live
+    only in memory): a newer version of an existing key wins the next
+    get, and `get -h` returns both versions."""
+    engine = QueryEngine(spark, graph=graphs["bucketed"])
+    engine.execute('put "n42" {"size": 4200}')
+    assert engine.graph.bucket_info is None
+    got = engine.execute('get "n42"').collect()
+    assert [(r.key, r.i64) for r in got] == [("size", 4200)]
+    hist = engine.execute('get -h "n42"').collect()
+    assert sorted(r.i64 for r in hist) == [42, 4200]
+
+
 _N7_FAR = [("n7", "far", "name", 3), ("n7", "far", "size", 3)]
 # query -> its (node_id, remote, key, ts) rows
 _TRAVERSALS = {
@@ -113,8 +147,13 @@ def test_exact_seed_traversals(spark, graphs, kind):
     remote-qualified seeds return fixed rows."""
     engine = QueryEngine(spark, graph=graphs[kind])
     for q, want in _TRAVERSALS.items():
-        got = [(r.node_id, r.remote, r.key, r.ts) for r in engine.execute(q).collect()]
+        df = engine.execute(q)
+        got = [(r.node_id, r.remote, r.key, r.ts) for r in df.collect()]
         assert sorted(got) == sorted(want), q
+        if kind == "bucketed" and "follow" not in q:
+            # exact-seed filter and skip/take: stream and props stay in
+            # the seeds' buckets, read in one partition, so no shuffle
+            assert _exchanges(df) == [], q
 
 
 # latest (node_id, remote, key, ts) rows of single nodes
@@ -263,5 +302,4 @@ def test_fk_serve_runs_no_shuffle(spark, sf_dir, tmp_path, job_ids):
         assert rows and sorted(rows) == sorted(unlaid.execute(q).collect()), name
     one_hop = engine.execute(_FK_SHAPES["one_hop"][0])
     one_hop.collect()
-    tree = final_tree(one_hop._jdf.queryExecution().executedPlan().toString())
-    assert not [n for _, n in tree if n.startswith("Exchange ")], tree
+    assert _exchanges(one_hop) == []

@@ -495,6 +495,33 @@ def test_ivf_int_index_drift_telemetry(spark, tmp_path):
     assert after[target] > before[target]
 
 
+def test_ivf_int_index_over_empty_corpus(spark, tmp_path):
+    """An index built over an empty corpus has no centroids: an append
+    raises a ValueError naming the index and the rebuild, and drift
+    telemetry is empty without reading the lists."""
+    import shutil
+
+    from ekati_spark.operators.similarity import (
+        append_ivf_index_int,
+        build_ivf_index_int,
+        ivf_index_drift_int,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    idx = str(tmp_path / "empty_ivf")
+    assert build_ivf_index_int(spark.createDataFrame([], schema), idx) == 0
+    fresh = spark.createDataFrame([(1, [0.5, 0.25])], schema)
+    with pytest.raises(ValueError, match="rebuild") as err:
+        append_ivf_index_int(fresh, idx)
+    assert idx in str(err.value)
+    shutil.rmtree(f"{idx}/lists", ignore_errors=True)  # must not be read
+    drift = ivf_index_drift_int(spark, idx)
+    assert drift.schema.simpleString() == (
+        "struct<list_id:bigint,n_members:bigint,drift_sq:bigint>"
+    )
+    assert drift.collect() == []
+
+
 def test_ivf_int_compaction_preserves_probe_results(spark, tmp_path):
     """After several appends, compaction must cut the per-list file
     count and leave probe results bit-identical."""

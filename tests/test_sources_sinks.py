@@ -439,7 +439,7 @@ def test_bucketed_props_point_lookup_prunes_partitions(spark, tmp_path):
 def test_query_engine_point_lookup_on_bucketed_graph(spark, tmp_path, job_ids):
     """End-to-end DSL point lookup on a bucketed on-disk graph:
     `get "<id>"` through QueryEngine builds with no Spark job, collects
-    with at most 2, plans a bucket PartitionFilter (no full scan) and a
+    with one, plans a bucket PartitionFilter (no full scan) and a
     pushed node_id filter with no lineage-cut checkpoint scan, and
     returns the node's attributes."""
     from ekati_spark.graph.compiler import QueryEngine
@@ -461,7 +461,7 @@ def test_query_engine_point_lookup_on_bucketed_graph(spark, tmp_path, job_ids):
     out, build_jobs = job_ids(lambda: engine.execute('get "n42"'))
     assert build_jobs == []
     got, action_jobs = job_ids(out.collect)
-    assert len(action_jobs) <= 2, action_jobs
+    assert len(action_jobs) == 1, action_jobs
     assert {r.node_id for r in got} == {"n42"}
 
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -470,6 +470,52 @@ def test_query_engine_point_lookup_on_bucketed_graph(spark, tmp_path, job_ids):
     pushed = plan[plan.find("PushedFilters"):][:300]
     assert "In(node_id" in pushed or "EqualTo(node_id" in pushed, pushed
     assert "ExistingRDD" not in plan, plan
+
+
+def test_bucketed_props_are_sorted_on_node_id(spark, tmp_path):
+    """Each bucket file of a props layout holds its rows in node_id
+    order, so with several row groups per file the groups cover
+    ascending, disjoint node_id ranges (what lets a pushed `node_id IN`
+    skip the groups that hold no seed). The ids reach the write in a
+    shuffled order."""
+    import glob
+    import os
+    import random
+
+    import pyarrow.parquet as pq
+
+    from ekati_spark.graph.storage import write_bucketed_props
+    from ekati_spark.schemas import PROPS_SCHEMA, prop_row
+
+    ids = [f"n{i:05d}" for i in range(4000)]
+    random.Random(7).shuffle(ids)
+    props = spark.createDataFrame(
+        [prop_row(i, "size", 1, ts=1) for i in ids], PROPS_SCHEMA
+    )
+    path = str(tmp_path / "sorted_props")
+    spark.conf.set("parquet.block.size", "4096")  # many small row groups
+    try:
+        write_bucketed_props(props, path, n_buckets=8)
+    finally:
+        spark.conf.unset("parquet.block.size")
+    files = glob.glob(f"{path}/bucket=*/*.parquet")
+    assert len({os.path.dirname(f) for f in files}) == 8
+    n_groups = 0
+    for f in files:
+        pf = pq.ParquetFile(f)
+        col = pf.read(columns=["node_id"]).column("node_id").to_pylist()
+        assert col == sorted(col), f
+        col_idx = pf.schema_arrow.get_field_index("node_id")
+        ranges = [
+            (st.min, st.max)
+            for st in (
+                pf.metadata.row_group(g).column(col_idx).statistics
+                for g in range(pf.metadata.num_row_groups)
+            )
+        ]
+        assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), f
+        n_groups += len(ranges)
+    assert n_groups > 2 * len(files), n_groups  # several groups a file
 
 
 def test_bucketed_follow_matches_flat_and_prunes(spark, sf_dir, job_ids):
