@@ -26,20 +26,22 @@ hop cuts its inner frontiers).
 Shuffles: over the FK graph's persisted edges, hash-partitioned on
 ``dst`` (``PropertyGraph.from_relational``), a follow step's output
 arrives clustered on ``node_id`` (``graph/traverse.py``), and so does a
-filter's semi-join of it against a broadcast node set. The
-materialization's inner join keeps that clustering when it broadcasts
-the props, as it does on a bucketed layout from sf0.001 to sf0.1, so its
-latest-wins window over ``(node_id, remote, key)`` runs with no Exchange
-either: a served one_hop, two_hop or follow-filter-fields plans none. A
-skip/take window sorts globally and shuffles once. After a put the edges
-are a union with no layout and each hop shuffles again. An exact-id
-read over a bucketed layout reads the seeds' buckets in one partition
-(``_seed_props``), which the latest-wins window, its dedup, the ``-h``
-sort and a skip/take window over exact seeds all take as it is: a
-served point get is one Spark job of one task, and exact seeds with
-``filter`` or ``skip``/``take`` steps shuffle none of the props. In
-memory, and after a put (which drops the layout), the window
-hash-shuffles the pruned rows once.
+filter's semi-join of it against a broadcast node set. Exact seeds on a
+bucketed layout materialize in one partition: an exact-id read reads
+the seeds' buckets in one partition (``_seed_props``), an expanding
+step's result joins the whole layout read in one partition, and the
+distinct stream is coalesced to that partition for a shuffled hash join
+(``_materialize``). The latest-wins window, its dedup, the ``-h`` sort,
+the ``fields`` filters and a skip/take window all take that partition
+as it is, so a served point get is one Spark job of one task, a served
+one_hop, two_hop, follow-filter-fields or follow-skip-limit plans no
+Exchange and broadcasts none of the props, and exact seeds with
+``filter`` or ``skip``/``take`` steps shuffle none of the props.
+Wildcard seeds keep the parallel plan, whose inner join keeps the
+stream's clustering when the props are broadcast. After a put the
+layout is gone and the edges are a union with no layout: each hop
+shuffles again, and, as in memory, the window hash-shuffles the pruned
+rows once.
 
 Determinism: the reference's stream order is storage order; skip/limit
 here use the canonical node_id ordering (SURVEY §5d).
@@ -181,7 +183,8 @@ class QueryEngine:
         # When the result set provably stays inside the seed set (exact
         # iris, no expanding step), the attribute fetch reads only the
         # seeds' bucket partitions. Expanding steps (follow/transform)
-        # fall back to the full props view.
+        # fall back to the full props view (read in one partition from
+        # exact seeds on a bucketed layout, _materialize).
         expanding = any(
             isinstance(s, (ir.FollowStep, ir.TransformStep)) for s in q.steps
         )
@@ -190,7 +193,10 @@ class QueryEngine:
             if exact and not expanding
             else self.graph.props
         )
-        return self._materialize(props, stream, fields_steps, q.history)
+        one_task = exact and self.graph.bucket_info is not None
+        return self._materialize(
+            props, stream, fields_steps, q.history, one_task
+        )
 
     def _seed_props(self, seeds) -> DataFrame:
         """The props rows that can hold the exact-id ``seeds``. On a
@@ -386,11 +392,29 @@ class QueryEngine:
         raise ValueError(f"bad cludepart {part!r}")
 
     def _materialize(
-        self, props: DataFrame, nodes, fields_steps, history: bool
+        self, props: DataFrame, nodes, fields_steps, history: bool,
+        one_task: bool = False,
     ) -> DataFrame:
         """Attribute rows of the result nodes among ``props``. ``nodes``
         is a node stream (DataFrame of node_id, remote) or, for a
-        step-free get, a row predicate on ``props``."""
+        step-free get, a row predicate on ``props``.
+
+        ``one_task`` (exact seeds on a bucketed layout) reads ``props``
+        and the distinct stream in one partition and joins them there:
+        with both join inputs in one partition a shuffled hash join needs
+        no Exchange, and neither do the latest-wins window, its dedup,
+        the ``-h`` sort or the ``fields`` filters, so a served traversal
+        materializes in one task, as the reference merges each reached
+        node's fragments where the node is stored
+        (NodeAttrIndex.cs:96-105), and the layout is never broadcast.
+        The hint is needed: by size alone the planner broadcasts the
+        layout. The trade-off: that task scans the whole layout serially
+        (a broadcast reads the same rows, then builds its hash table on
+        the driver), and ``coalesce(1)`` has no shuffle below it, so the
+        stream's own stage, the edge scan included, runs in that task
+        too. Pruning the layout to the reached nodes' buckets needs a
+        runtime filter. Wildcard seeds keep the parallel plan: they
+        would push the whole graph through the one task."""
         # Prune BEFORE the latest-wins window: the dedup partitions by
         # (node_id, key), so pruning to the result nodes first commutes
         # with it — and the window then runs over only the result nodes'
@@ -408,7 +432,11 @@ class QueryEngine:
             # sf0.1, 4 cores: 2.3 -> 3.3 s). Catalyst removes the
             # distinct this needs when the stream is already distinct
             # (after a follow or a skip/take window).
-            props = props.join(nodes.distinct(), ["node_id", "remote"])
+            nodes = nodes.distinct()
+            if one_task:
+                props = props.coalesce(1)
+                nodes = nodes.coalesce(1).hint("shuffle_hash")
+            props = props.join(nodes, ["node_id", "remote"])
         else:
             props = props.filter(nodes)
         pruned = PropertyGraph(props)

@@ -7,9 +7,14 @@ the distinct stream. All of it holds in memory and on a bucketed
 layout. Over the FK graph's persisted edges, laid out on ``dst``, a
 served traversal runs no shuffle. On a bucketed layout an exact-id read
 is one task: a served get is one Spark job, and the exact-seed filter
-and skip/take shapes shuffle none of the props."""
+and skip/take shapes shuffle none of the props. A traversal from exact
+seeds joins its result nodes to the layout in one partition and
+broadcasts none of the props; wildcard seeds and a traversal after a put
+keep the parallel plan."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import DataFrame, functions as F
@@ -83,10 +88,14 @@ def test_step_free_get_matches_general_path(spark, graphs, kind, job_ids):
     assert [(r.node_id, r.i64) for r in latest] == [("n7", 700)]
 
 
+def _tree(df: DataFrame) -> list[tuple[int, str]]:
+    """(depth, node) per node of ``df``'s final executed plan."""
+    return final_tree(df._jdf.queryExecution().executedPlan().toString())
+
+
 def _exchanges(df: DataFrame) -> list[str]:
     """The shuffle Exchanges of ``df``'s final executed plan."""
-    tree = final_tree(df._jdf.queryExecution().executedPlan().toString())
-    return [n for _, n in tree if n.startswith("Exchange ")]
+    return [n for _, n in _tree(df) if n.startswith("Exchange ")]
 
 
 def test_bucketed_get_is_one_job(spark, graphs, job_ids):
@@ -177,14 +186,20 @@ _WINDOWS = {
 
 
 @pytest.mark.parametrize("kind", ["memory", "bucketed"])
-def test_skip_take_windows(spark, graphs, kind):
+def test_skip_take_windows(spark, graphs, kind, job_ids):
     """Runs of skip/take steps count each node once, in (remote,
-    node_id) order, whatever the order and repeats of the seeds."""
+    node_id) order, whatever the order and repeats of the seeds. On a
+    bucketed layout stream and props are read in one partition, so the
+    server's fetch of a window is one job (none for a window Catalyst
+    folds to an empty relation, `take 2 |> skip 3`)."""
     engine = QueryEngine(spark, graph=graphs[kind])
     for steps, want in _WINDOWS.items():
         q = f"{_WINDOW_SEEDS} |> {steps}"
-        got = [(r.node_id, r.remote, r.key, r.ts) for r in engine.execute(q).collect()]
+        rows, jobs = job_ids(engine.execute(q).limit(1000).collect)
+        got = [(r.node_id, r.remote, r.key, r.ts) for r in rows]
         assert sorted(got) == sorted(want), q
+        if kind == "bucketed":
+            assert len(jobs) == (1 if want else 0), (q, jobs)
 
 
 _STREAM_CASES = {
@@ -266,21 +281,55 @@ def test_traversal_shapes_run_as_one_action(spark, graphs, job_ids):
     assert fused_jobs <= take_jobs, (fused_jobs, take_jobs)
 
 
-# served shapes over the FK graph -> their job bound for a server fetch
+# served shapes over the FK graph -> their jobs per server fetch
+# (customer:3 has orders with status F at sf0.001)
 _FK_SHAPES = {
-    "one_hop": ('get "customer:1" |> follow "placed" 1', 3),
+    "one_hop": ('get "customer:3" |> follow "placed" 1', 2),
     "two_hop": (
-        'get "customer:1" |> follow "in_nation" 1 |> follow "in_region" 1', 5
+        'get "customer:3" |> follow "in_nation" 1 |> follow "in_region" 1', 4
+    ),
+    "follow_filter_fields": (
+        'get "customer:3" |> follow "placed" 1'
+        ' |> filter "orderstatus" == "F" |> fields "totalprice":*', 3
+    ),
+    "follow_skip_limit": (
+        'get "customer:3" |> follow "placed" 1 |> skip 1 |> take 2', 2
     ),
 }
 
 
+def _scan_columns(node: str) -> set[str]:
+    """The columns a ``FileScan`` plan node reads."""
+    cols = re.match(r"FileScan \w+ \[([^\]]*)\]", node).group(1)
+    return {c.split("#")[0] for c in cols.split(",")}
+
+
+def _broadcast_props_scans(df: DataFrame) -> list[str]:
+    """The FileScans of the props rows (every props column read) under a
+    ``BroadcastExchange`` of ``df``'s final executed plan. A seed stream
+    or a filter's node set reads a few columns; only the materialization
+    reads them all."""
+    tree = _tree(df)
+    props_cols = set(PROPS_SCHEMA.fieldNames())
+    out = []
+    for i, (depth, node) in enumerate(tree):
+        if not node.startswith("BroadcastExchange"):
+            continue
+        for d, n in tree[i + 1:]:
+            if d <= depth:
+                break
+            if n.startswith("FileScan") and props_cols <= _scan_columns(n):
+                out.append(n)
+    return out
+
+
 def test_fk_serve_runs_no_shuffle(spark, sf_dir, tmp_path, job_ids):
     """The registry's FK edges are persisted hash-partitioned on `dst`,
-    so a served traversal over them (props on a bucketed layout) plans
-    no shuffle Exchange, and the server's bounded fetch of one_hop fires
-    at most 3 jobs (two_hop 5), with the rows of the same graph whose
-    edges carry no layout (as after a put)."""
+    and exact seeds join the reached nodes to a bucketed props layout in
+    one partition, so the server's bounded fetch of each served
+    traversal fires a fixed number of jobs, plans no shuffle Exchange
+    and broadcasts none of the props, with the rows of the same graph
+    whose props and edges carry no layout (as after a put)."""
     from ekati_spark.queries.graph import _graph
 
     fk = _graph(spark, sf_dir)
@@ -296,10 +345,28 @@ def test_fk_serve_runs_no_shuffle(spark, sf_dir, tmp_path, job_ids):
     unlaid = QueryEngine(
         spark, graph=PropertyGraph(fk.props, fk.edges.repartition(3))
     )
-    for name, (q, max_jobs) in _FK_SHAPES.items():
-        rows, jobs = job_ids(engine.execute(q).limit(1000).collect)
-        assert 0 < len(jobs) <= max_jobs, (name, jobs)
+    for name, (q, n_jobs) in _FK_SHAPES.items():
+        fetch = engine.execute(q).limit(1000)
+        rows, jobs = job_ids(fetch.collect)
+        assert len(jobs) == n_jobs, (name, jobs)
+        assert _exchanges(fetch) == [], name
+        assert _broadcast_props_scans(fetch) == [], name
         assert rows and sorted(rows) == sorted(unlaid.execute(q).collect()), name
-    one_hop = engine.execute(_FK_SHAPES["one_hop"][0])
-    one_hop.collect()
-    assert _exchanges(one_hop) == []
+
+
+def test_excluded_traversals_keep_the_parallel_plan(spark, graphs):
+    """Wildcard seeds, and any traversal after a put (which drops the
+    layout), do not read the props in one partition: a `get *` would
+    push the whole graph through one task."""
+    engine = QueryEngine(spark, graph=graphs["bucketed"])
+    # hop 0 emits every node; only n7 has a name on the local remote
+    wild = engine.execute('get * |> follow "knows" 0..1 |> fields "name":*')
+    got = [(r.node_id, r.remote, r.key, r.ts) for r in wild.collect()]
+    assert got == [("n7", "", "name", 2)]
+    assert not any(n.startswith("Coalesce") for _, n in _tree(wild))
+    engine.execute('put "n6" {"size": 60}')
+    assert engine.graph.bucket_info is None
+    hop = engine.execute('get "n5" |> follow "knows" 1')
+    got = [(r.node_id, r.i64) for r in hop.collect() if r.key == "size"]
+    assert sorted(got) == [("n6", 60), ("n9", 9)]
+    assert not any(n.startswith("Coalesce") for _, n in _tree(hop))

@@ -9,8 +9,10 @@ attribute-fragments/second — directly comparable to BASELINE.md's
 ``FileStore.AddFragmentsMeter``).
 
 Everything is deterministic (hash-derived values, no RNG) and stays in
-whole-stage codegen; the write is the engine's real ingest path (the
-same append-only long-format props table every query reads).
+whole-stage codegen. The timed write is the served graph's layout
+write, ``graph/storage.py::write_bucketed_props`` (64 buckets): one
+shuffle on the node_id bucket, a per-bucket sort on ``node_id`` and a
+Hive-partitioned parquet write of the long-format props rows.
 
 Usage: python tools/ingest_bench.py [n_nodes] [out_dir]
 """
@@ -81,9 +83,11 @@ def generate_props(spark, n_nodes: int):
 
 
 def run(spark, n_nodes: int, out_dir: str) -> dict:
+    from ekati_spark.graph.storage import write_bucketed_props
+
     df = generate_props(spark, n_nodes)
     t0 = time.perf_counter()
-    df.write.mode("overwrite").parquet(out_dir)
+    write_bucketed_props(df, out_dir)
     wall = time.perf_counter() - t0
     frags = n_nodes * FRAGMENTS_PER_NODE
     return {
