@@ -1,17 +1,16 @@
 """As-of (most-recent-at-or-before) joins.
 
-Spark has no native ASOF JOIN (DuckDB/Pandas do). Two strategies:
+Spark has no native ASOF JOIN (DuckDB/pandas do). ``asof_join`` is one
+union+window pass: both sides are tagged and unioned under one hash
+Exchange on the key, each key's rows are sorted on time, and every left
+row takes a running max (backward) or min (forward) of the right rows
+sorted before it. No pair of rows is ever built and no join is planned;
+one shuffle and one sort per call, whatever the match density.
 
-- ``asof_join``: conditional equi-join on the key + time inequality, then
-  argmax-by-time per left row. One shuffle per side on the join key; the
-  argmax is a partial (map-side) aggregate, so at 100 TB this behaves like
-  any keyed join+agg — AQE handles skewed keys. Exact, no driver state.
-- ``asof_join_union``: the union+window strategy (tag both sides, sort by
-  (key, time) within partitions, ``last(right, ignorenulls)`` over the
-  preceding frame). Single shuffle total; preferable when the right side
-  is large relative to left and match density is high.
-
-Both return one row per left row (left-outer as-of semantics).
+Trade-off: a key's whole history, left and right rows, is sorted and
+scanned in one task. A join can have a skewed key split across tasks by
+AQE; this pass cannot, so one hot key sets the slowest task's time
+(measured in SCALE.md).
 """
 
 from __future__ import annotations
@@ -37,112 +36,58 @@ def asof_join(
     bounding the match window — a backward match must also satisfy
     ``right_time >= left_time - tolerance`` (mirrored for forward).
     Left rows with no in-window match keep NULL right columns (the
-    pandas ``merge_asof(tolerance=...)`` contract). The bound also
-    matters at 100 TB: it lets a range-partitioned deployment co-locate
-    only tolerance-width time slices instead of whole key histories.
+    pandas ``merge_asof(tolerance=...)`` contract).
 
-    Ties on right_time collapse via max over remaining right columns
-    (deterministic; document for callers needing a specific tiebreak).
+    Output: the left columns, then every right column but ``right_on``;
+    one row per left row, duplicates included. NULL keys and NULL times
+    on either side match nothing. Ties on right_time collapse via max
+    (backward) or min (forward) over the remaining right columns.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction}")
+    backward = direction == "backward"
 
     lcols = left.columns
-    rcols = [c for c in right.columns if c not in (right_on,)]
-    # a synthetic row id keeps DUPLICATE left rows distinct through the
-    # argmax groupBy (grouping by the visible columns alone would merge
-    # them, losing cardinality). The id value never reaches the output,
-    # so its nondeterminism across retries is harmless.
-    left = left.withColumn("__lrow", F.monotonically_increasing_id())
-    l = left.alias("l")
-    r = right.alias("r")
-    time_cond = (
-        F.col(f"r.{right_time}") <= F.col(f"l.{left_time}")
-        if direction == "backward"
-        else F.col(f"r.{right_time}") >= F.col(f"l.{left_time}")
+    rcols = [c for c in right.columns if c != right_on]
+    # time leads the struct, so its max (min) is the latest (earliest)
+    # right row; the remaining columns break ties on time
+    match = F.struct(F.col(right_time).alias("__t"), *rcols)
+    lrows = left.select(
+        F.col(left_on).alias("__k"),
+        F.col(left_time).alias("__t"),
+        F.lit(1).alias("__side"),
+        F.struct(*lcols).alias("__l"),
     )
-    if tolerance is not None:
-        bound = (
-            F.col(f"r.{right_time}")
-            >= F.expr(f"l.{left_time} - INTERVAL {tolerance}")
-            if direction == "backward"
-            else F.col(f"r.{right_time}")
-            <= F.expr(f"l.{left_time} + INTERVAL {tolerance}")
-        )
-        time_cond = time_cond & bound
-    joined = l.join(
-        r, (F.col(f"l.{left_on}") == F.col(f"r.{right_on}")) & time_cond, "left"
+    rrows = right.filter(
+        F.col(right_on).isNotNull() & F.col(right_time).isNotNull()
+    ).select(
+        F.col(right_on).alias("__k"),
+        F.col(right_time).alias("__t"),
+        F.lit(0).alias("__side"),
+        match.alias("__r"),
     )
-    # argmax/argmin by right_time per left row: max(struct(time, cols)).
-    order_key = F.col(f"r.{right_time}")
-    if direction == "forward":
-        # min == max of negated ordering; use a struct sort on the raw time
-        # with min aggregation instead.
-        best = F.min(F.struct(order_key.alias("__t"), *[F.col(f"r.{c}").alias(c) for c in rcols]))
-    else:
-        best = F.max(F.struct(order_key.alias("__t"), *[F.col(f"r.{c}").alias(c) for c in rcols]))
-    out = joined.groupBy(
-        F.col("l.__lrow").alias("__lrow"),
-        *[F.col(f"l.{c}").alias(c) for c in lcols],
-    ).agg(best.alias("__best"))
-    return out.select(*lcols, *[F.col(f"__best.{c}").alias(c) for c in rcols])
-
-
-def asof_join_union(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    right_value_cols: list[str] | None = None,
-) -> DataFrame:
-    """Union+window as-of join (backward only): one shuffle on ``on``.
-
-    Tags rows, sorts by (key, time, is_left) and carries the last seen
-    right values forward with ``last(..., ignorenulls=True)``.
-    """
-    right_value_cols = right_value_cols or [
-        c for c in right.columns if c not in (on, right_time)
-    ]
-    lt = left.withColumn("__is_left", F.lit(1)).withColumn(
-        "__t", F.col(left_time)
-    )
-    rt = (
-        # null-time right rows would sort FIRST in the window order and be
-        # carried into every left row; the join strategy's time condition
-        # is null-rejecting, so drop them here to keep the two equivalent
-        right.filter(F.col(right_time).isNotNull())
-        .select(
-            F.col(on),
-            F.col(right_time).alias("__t"),
-            *[F.col(c) for c in right_value_cols],
-        )
-        .withColumn("__is_left", F.lit(0))
-    )
-    for c in left.columns:
-        if c not in rt.columns:
-            rt = rt.withColumn(c, F.lit(None))
-    for c in right_value_cols:
-        if c not in lt.columns:
-            lt = lt.withColumn(c, F.lit(None))
-    u = lt.select(rt.columns).unionByName(rt.select(rt.columns))
-    # right rows sort before left rows at equal time => "at or before".
+    # right rows sort before left rows at equal time, so equal times
+    # match in both directions. Forward runs on descending time with the
+    # same growing frame: Spark recomputes a frame that ends at
+    # unboundedFollowing once per row.
     w = (
-        W.partitionBy(on)
-        .orderBy("__t", "__is_left")
+        W.partitionBy("__k")
+        .orderBy(F.col("__t").asc() if backward else F.col("__t").desc(), "__side")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    carried = u.select(
-        "*",
-        *[
-            F.last(F.when(F.col("__is_left") == 0, F.col(c)), ignorenulls=True)
-            .over(w)
-            .alias(f"__asof_{c}")
-            for c in right_value_cols
-        ],
+    best = (F.max if backward else F.min)("__r").over(w)
+    # the window is computed before the filter, so it sees the right rows
+    rows = (
+        lrows.unionByName(rrows, allowMissingColumns=True)
+        .select("__side", "__l", best.alias("__b"))
+        .filter(F.col("__side") == 1)
     )
-    out = carried.filter(F.col("__is_left") == 1).select(
-        *[c for c in left.columns],
-        *[F.col(f"__asof_{c}").alias(c) for c in right_value_cols],
+    lt = F.col("__l")[left_time]
+    ok = lt.isNotNull()
+    if tolerance is not None:
+        gap, bt = F.expr(f"INTERVAL {tolerance}"), F.col("__b")["__t"]
+        ok = ok & (bt >= lt - gap if backward else bt <= lt + gap)
+    return rows.select(
+        *[F.col("__l")[c].alias(c) for c in lcols],
+        *[F.when(ok, F.col("__b")[c]).alias(c) for c in rcols],
     )
-    return out

@@ -992,9 +992,10 @@ def r36_unpivot(spark, sf_dir):
 def r37_asof_join(spark, sf_dir):
     """As-of join: latest order at-or-before each event, per user.
 
-    Spark lacks a native as-of join; implemented as conditional join +
-    max-aggregation (exact argmax-by-time). At scale the same plan
-    shuffles both sides once on the key; skew is handled by AQE.
+    Spark lacks a native as-of join; ``operators.asof.asof_join`` is one
+    union+window pass: events and orders share one shuffle on the key,
+    and each event takes the running max of the orders sorted before
+    it. A hot user's whole history is sorted in one task.
     """
     ev, ords = _t(spark, sf_dir, "events", "orders")
     from ekati_spark.operators.asof import asof_join
@@ -2653,12 +2654,10 @@ def r68_asof_forward_tolerance(spark, sf_dir):
     """FORWARD as-of join with a tolerance bound — r37's mirror and the
     other half of the pandas merge_asof surface: for each event, the
     EARLIEST order at-or-after it, but only within 30 days (beyond the
-    window → NULL, the merge_asof(tolerance=...) contract). The
-    tolerance is not just semantics: at 100 TB it bounds the join's
-    time extent so a range-partitioned layout co-locates
-    tolerance-width slices instead of whole per-key histories. Same
-    argmin-by-time aggregation shape as r37 (conditional join + min
-    struct), one shuffle per side on the key."""
+    window → NULL, the merge_asof(tolerance=...) contract). Same
+    union+window pass as r37 on descending time (a running min struct),
+    one shuffle for both sides on the key; the tolerance nulls out a
+    match past the bound and does not shrink the sorted history."""
     ev, ords = _t(spark, sf_dir, "events", "orders")
     from ekati_spark.operators.asof import asof_join
 

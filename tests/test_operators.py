@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ekati_spark.catalog import load_table
-from ekati_spark.operators.asof import asof_join, asof_join_union
+from ekati_spark.metrics import final_tree
+from ekati_spark.operators.asof import asof_join
 from ekati_spark.operators import text as X
 from ekati_spark.operators.multimodal import (
     content_stats,
@@ -58,15 +59,94 @@ def test_asof_forward(spark, asof_fixture):
     assert got == {1: "b", 2: "c", 3: "d"}
 
 
+def _asof_reference(left, right, direction, tolerance):
+    """Brute-force as-of join over Python rows ``(event_id, key, t)`` and
+    ``(key, t, val)``: for each left row, scan every right row."""
+    out = []
+    for eid, key, t in left:
+        hits = [
+            (rt, rv) for rk, rt, rv in right
+            if None not in (key, t, rk, rt) and rk == key
+            and (rt <= t if direction == "backward" else rt >= t)
+            and (tolerance is None or abs(rt - t) <= tolerance)
+        ]
+        # Spark orders a NULL struct field before every value
+        pick = max if direction == "backward" else min
+        best = pick(hits, key=lambda h: (h[0], h[1] is not None, h[1] or ""),
+                    default=(None, None))
+        out.append((eid, key, t, *best))
+    return sorted(out, key=repr)
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@pytest.mark.parametrize("tolerance", [None, 10])
+def test_asof_matches_brute_force(spark, direction, tolerance):
+    import datetime as dt
+
+    def day(n):
+        return None if n is None else dt.datetime(2024, 1, 1) + dt.timedelta(days=n)
+
+    left = [
+        (1, 10, 100), (2, 10, 250), (3, 20, 50), (4, 10, 200),
+        (5, 10, 210), (5, 10, 210),  # duplicate left rows
+        (6, None, 100), (7, 10, None),  # NULL key, NULL time
+        (8, 30, 100), (9, 30, 110), (10, 40, 100), (11, 10, 290),
+    ]
+    right = [
+        (10, 90, "a"), (10, 200, "b"), (10, 300, "c"), (20, 60, "d"),
+        (None, 90, "nullkey"), (None, 110, "nullkey2"), (10, None, "nulltime"),
+        # ties on time with different values, one of them NULL
+        (30, 90, "x"), (30, 90, "y"), (30, 110, "p"), (30, 110, "q"), (30, 110, None),
+    ]
+    left = [(e, k, day(t)) for e, k, t in left]
+    right = [(k, day(t), v) for k, t, v in right]
+    gap = None if tolerance is None else dt.timedelta(days=tolerance)
+    out = asof_join(
+        spark.createDataFrame(left, "event_id long, key long, t timestamp"),
+        spark.createDataFrame(right, "key long, t timestamp, val string"),
+        "key", "key", "t", "t", direction=direction,
+        tolerance=None if tolerance is None else f"{tolerance} days",
+    )
+    assert out.columns == ["event_id", "key", "t", "t", "val"]
+    got = sorted((tuple(r) for r in out.collect()), key=repr)
+    assert got == _asof_reference(left, right, direction, gap)
+
+
 def test_asof_union_strategy_matches_join_strategy(spark, asof_fixture):
+    """The union+window kernel agrees with the conditional-join
+    formulation of the as-of join: an equi-join on the key with
+    ``right.t <= left.t``, then the latest right row per left row."""
     left, right = asof_fixture
     a = asof_join(
         left, right, left_on="key", right_on="key", left_time="t", right_time="t"
     )
-    b = asof_join_union(left, right, on="key", left_time="t", right_time="t")
+    l, r = left.alias("l"), right.alias("r")
+    hits = (
+        l.join(r, (F.col("l.key") == F.col("r.key")) & (F.col("r.t") <= F.col("l.t")))
+        .groupBy(F.col("l.event_id").alias("event_id"))
+        .agg(F.max_by(F.col("r.val"), F.col("r.t")).alias("val"))
+    )
+    b = left.join(hits, "event_id", "left")
     ga = {(r.event_id, r.val) for r in a.select("event_id", "val").collect()}
     gb = {(r.event_id, r.val) for r in b.select("event_id", "val").collect()}
-    assert ga == gb
+    assert ga == gb == {(1, "a"), (2, "b"), (3, None)}
+
+
+@pytest.mark.parametrize("name", ["r37_asof_join", "r68_asof_forward_tolerance"])
+def test_asof_queries_plan_one_shuffle(spark, sf_dir, job_ids, name):
+    """The as-of pass unions both sides under one hash Exchange on the
+    key and plans no join; its write is one shuffle-map job and one
+    result job."""
+    import ekati_spark.queries as Q
+
+    df = Q.REGISTRY[name].fn(spark, sf_dir)
+    nodes = [n for _, n in final_tree(_plan(df))]
+    exchanges = [n for n in nodes if n.startswith("Exchange ")]
+    assert len(exchanges) == 1, nodes
+    assert exchanges[0].startswith("Exchange hashpartitioning("), nodes
+    assert not any("Join" in n for n in nodes), nodes
+    _, jobs = job_ids(lambda: df.write.format("noop").mode("overwrite").save())
+    assert len(jobs) == 2, jobs
 
 
 # -- text -------------------------------------------------------------------
@@ -278,6 +358,16 @@ def test_salted_join_rejects_right_full(spark):
             salted_join(big, small, "k", how=how)
 
 
+def test_asof_union_ignores_null_right_times(spark):
+    left = spark.createDataFrame([(10, 100)], "key long, t long")
+    right = spark.createDataFrame(
+        [(10, None, "nulltime"), (10, 90, "a")], "key long, t long, val string"
+    )
+    for direction, want in [("backward", {(10, "a")}), ("forward", {(10, None)})]:
+        out = asof_join(left, right, "key", "key", "t", "t", direction=direction)
+        assert {(r.key, r.val) for r in out.collect()} == want
+
+
 def test_asof_preserves_duplicate_left_rows(spark):
     left = spark.createDataFrame(
         [(10, 100), (10, 100), (20, 50)], "key long, t long"
@@ -285,16 +375,6 @@ def test_asof_preserves_duplicate_left_rows(spark):
     right = spark.createDataFrame([(10, 90, "a")], "key long, t long, val string")
     out = asof_join(left, right, "key", "key", "t", "t")
     assert out.count() == 3
-
-
-def test_asof_union_ignores_null_right_times(spark):
-    left = spark.createDataFrame([(10, 100)], "key long, t long")
-    right = spark.createDataFrame(
-        [(10, None, "nulltime"), (10, 90, "a")], "key long, t long, val string"
-    )
-    a = {(r.key, r.val) for r in asof_join(left, right, "key", "key", "t", "t").collect()}
-    b = {(r.key, r.val) for r in asof_join_union(left, right, "key", "t", "t").collect()}
-    assert a == b == {(10, "a")}
 
 
 def test_salted_join_single_column_big_side(spark):

@@ -73,6 +73,10 @@ CASES = [
     "l45b_bitext_margin_ann",
     # sessionization windows over event time
     "st03_session_window",
+    # the as-of union+window pass: rows of one key in shuffle order
+    # under a running max (backward) and min (forward, with tolerance)
+    "r37_asof_join",
+    "r68_asof_forward_tolerance",
 ]
 
 
